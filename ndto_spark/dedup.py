@@ -23,6 +23,8 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import spill
+
 # universal-hash modulus: the first prime ABOVE 2^32 (the base-hash range).
 # The modulus must be comparable to the input range: with a huge modulus
 # (e.g. Mersenne-61) and a*x+b < modulus, h(x) is MONOTONE in x and every
@@ -298,17 +300,7 @@ def _minhash_base_sigs(
         # candidate materialization) would otherwise tokenize+shingle the
         # corpus a second time — cross-job exchange reuse does not exist.
         # Compact (doc, 32-bit hash array) rows only; text never spills.
-        import atexit
-        import os
-        import shutil
-        import tempfile
-
-        spark = df.sparkSession
-        run_dir = tempfile.mkdtemp(prefix="ndto_mhbase_")
-        atexit.register(shutil.rmtree, run_dir, ignore_errors=True)
-        p = os.path.join(run_dir, "base")
-        proj.write.parquet(p)
-        proj = spark.read.parquet(p)
+        proj = spill.materialize(proj, "mhbase")
     base = proj.repartition(F.col("doc"))
     exh = base.select("doc", F.explode_outer("hv").alias("x"))
     params = _hash_params(num_hashes, seed)
@@ -398,19 +390,9 @@ def minhash_lsh_pairs(
     # signature+banding+distinct pipeline — runtime exchange reuse does
     # not bridge these consumers reliably (measured: the full verify ran
     # the candidate pipeline ~3x, 11.2 s vs 7 s with the spill at sf1.0).
-    # Run-dir lifetime follows near_dup_groups: reclaimed at interpreter
-    # exit, callers needing the pairs past process exit write their own.
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    spark = df.sparkSession
-    run_dir = tempfile.mkdtemp(prefix="ndto_mhcands_")
-    atexit.register(shutil.rmtree, run_dir, ignore_errors=True)
-    cand_path = os.path.join(run_dir, "cands")
-    cands.write.parquet(cand_path)
-    cands = spark.read.parquet(cand_path)
+    # Reclaimed at interpreter exit (spill.materialize); callers needing
+    # the pairs past process exit write their own.
+    cands = spill.materialize(cands, "mhcands")
     # verify ONLY the candidate pairs (not the full all-pairs join): restrict
     # the shingle inverted index to candidate docs via a semi-join, compute
     # intersections, and keep candidate pairs above the exact threshold.

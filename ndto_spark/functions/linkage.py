@@ -15,6 +15,8 @@ from typing import Callable, Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import spill
+
 
 def prefix_block(length: int) -> Callable[[Column], Column]:
     def key(col: Column) -> Column:
@@ -89,14 +91,9 @@ def sorted_neighborhood_pairs(
     (range partition → per-partition counts → window + literal offsets —
     no single-task sort); candidates come from ONE equi-join on
     rank+offset after a window-sized explode (fan-out = ``window``, the
-    LSH-band shape). The pair table is spilled to parquet (the repo's
-    lineage-spill idiom) so the rank's persisted parent releases
-    immediately.
+    LSH-band shape). The pair table is spilled (spill.materialize) so the
+    rank's persisted parent releases immediately.
     """
-    import atexit
-    import shutil
-    import tempfile
-
     from .sharding import sequential_positions, unpersist_positions
 
     if window < 1:
@@ -129,13 +126,7 @@ def sorted_neighborhood_pairs(
         "id_a", "key_a", "id_b", "key_b",
         F.levenshtein(F.col("key_a"), F.col("key_b")).cast("int").alias("dist"),
     )
-    run_dir = tempfile.mkdtemp(prefix="ndto_snm_")
     try:
-        out.write.mode("overwrite").parquet(run_dir)
-    except Exception:
-        shutil.rmtree(run_dir, ignore_errors=True)
+        return spill.materialize(out, "snm")
+    finally:
         unpersist_positions(pos)
-        raise
-    unpersist_positions(pos)
-    atexit.register(shutil.rmtree, run_dir, ignore_errors=True)
-    return df.sparkSession.read.parquet(run_dir)

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import spill
+
 
 def sequential_positions(
     df: DataFrame, key_col: str, n_partitions: int = 32, order_cols=None
@@ -35,7 +37,7 @@ def sequential_positions(
     recomputation through a re-sampled exchange could disagree. Consumers
     must materialize (or spill) their result and then
     ``unpersist_positions(pos_df)`` — shard_manifest below does exactly
-    that with the repo's parquet lineage-spill idiom.
+    that with spill.materialize.
     """
     order_cols = [key_col] if order_cols is None else list(order_cols)
     part = (
@@ -96,15 +98,10 @@ def shard_manifest(
 
     100 TB shape: range-partitioned parallel sort + per-partition window +
     one partial-agg groupBy on shard_id (≈ rows/shard_size groups). The
-    small manifest is spilled to /tmp parquet (the repo's lineage-spill
-    idiom) so the persisted rank parent can be released immediately — the
-    returned frame holds no cache and no live dependence on the sampled
-    partitioning.
+    small manifest is spilled (spill.materialize) so the persisted rank
+    parent can be released immediately — the returned frame holds no
+    cache and no live dependence on the sampled partitioning.
     """
-    import atexit
-    import shutil
-    import tempfile
-
     if shard_size <= 0:
         raise ValueError(f"shard_size must be positive, got {shard_size}")
     pos = sequential_positions(df, key_col, n_partitions=n_partitions)
@@ -120,16 +117,10 @@ def shard_manifest(
             F.max(key_col).alias("last_key"),
         )
     )
-    run_dir = tempfile.mkdtemp(prefix="ndto_shards_")
     try:
-        out.write.mode("overwrite").parquet(run_dir)
-    except Exception:
-        shutil.rmtree(run_dir, ignore_errors=True)
+        return spill.materialize(out, "shards")
+    finally:
         unpersist_positions(pos)
-        raise
-    unpersist_positions(pos)
-    atexit.register(shutil.rmtree, run_dir, ignore_errors=True)
-    return df.sparkSession.read.parquet(run_dir)
 
 
 def grouped_shard_manifest(
@@ -150,10 +141,6 @@ def grouped_shard_manifest(
     Output: (group..., shard_id, n_rows, first_key, last_key); shard_id
     restarts at 0 within every group.
     """
-    import atexit
-    import shutil
-    import tempfile
-
     if shard_size <= 0:
         raise ValueError(f"shard_size must be positive, got {shard_size}")
     gc = [group_cols] if isinstance(group_cols, str) else list(group_cols)
@@ -222,16 +209,10 @@ def grouped_shard_manifest(
             F.max(key_col).alias("last_key"),
         )
     )
-    run_dir = tempfile.mkdtemp(prefix="ndto_shards_")
     try:
-        out.write.mode("overwrite").parquet(run_dir)
-    except Exception:
-        shutil.rmtree(run_dir, ignore_errors=True)
+        return spill.materialize(out, "shards")
+    finally:
         part.unpersist()
-        raise
-    part.unpersist()
-    atexit.register(shutil.rmtree, run_dir, ignore_errors=True)
-    return df.sparkSession.read.parquet(run_dir)
 
 
 def epoch_shuffle(

@@ -14,6 +14,7 @@ import pandas as pd  # module-global: pandas_udf type-hint resolution needs it
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import spill
 from ..dedup import md5_low32, tokens, word_shingles
 
 # tiny per-language stopword marker sets for the n-gram/stopword heuristic
@@ -448,17 +449,7 @@ def dsir_weights(
     # the scoring job re-reads it — without the spill each job would
     # re-tokenize and re-hash the full corpus (model + score = two full
     # text passes; now one). Text itself never spills.
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    spark = df.sparkSession
-    run_dir = tempfile.mkdtemp(prefix="ndto_dsir_")
-    atexit.register(shutil.rmtree, run_dir, ignore_errors=True)
-    p = os.path.join(run_dir, "pdb")
-    pdb.write.parquet(p)
-    pdb = spark.read.parquet(p)
+    pdb = spill.materialize(pdb, "dsir")
     stats = (
         pdb.groupBy("bucket")
         .agg(

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import spill
 from .compiler import CompileOptions, Compiler
 from .runner import PARTITION_COL, VIOLATIONS_COL, ValidationResult, _result_from_annotated
 from .spec import Schema, SpecError, normalize
@@ -230,17 +231,7 @@ def infer_json_schema(
     # rows). The parsed frame spills to a run-scoped temp parquet
     # (variant round-trips losslessly through the parquet variant type);
     # all three consumers read the flat scan.
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    spark = df.sparkSession
-    run_dir = tempfile.mkdtemp(prefix="ndto_inferjson_")
-    atexit.register(shutil.rmtree, run_dir, ignore_errors=True)
-    p = os.path.join(run_dir, "parsed")
-    parsed.write.parquet(p)
-    parsed = spark.read.parquet(p)
+    parsed = spill.materialize(parsed, "inferjson")
     total = parsed.agg(F.count(F.lit(1)).alias("__n_rows"))
 
     root = parsed.agg(

@@ -751,36 +751,6 @@ def q_violation_summary_documents(spark: SparkSession, sf_dir: str) -> DataFrame
     return violation_summary(res.violations, "doc_id", max_examples=3)
 
 
-import contextlib
-
-
-@contextlib.contextmanager
-def _conf(spark: SparkSession, settings: dict):
-    """Temporarily override session confs (gate harnesses only — the
-    streaming replay queries run sequentially, never concurrently)."""
-    old = {k: spark.conf.get(k, None) for k in settings}
-    for k, v in settings.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
-# The number of state-store partitions is pinned by
-# spark.sql.shuffle.partitions when a streaming checkpoint is created; each
-# micro-batch then commits one state/delta file per partition. The gate
-# replays are tiny (one to three micro-batches over one table), so 32
-# partitions are pure per-batch commit overhead — 4 keeps the same
-# semantics at a fraction of the state I/O. Production streams keep the
-# session default (this override is scoped to the harness .start()).
-_GATE_STREAM_SHUFFLE = {"spark.sql.shuffle.partitions": "4"}
-
-
 def _staged_source(tag: str, sf_dir: str, build) -> str:
     """Build a staged streaming-source dir ONCE per /tmp lifetime.
 
@@ -816,15 +786,118 @@ def _staged_source(tag: str, sf_dir: str, build) -> str:
     return path
 
 
-def _read_stream_sink(spark: SparkSession, out_dir: str, schema) -> DataFrame:
-    """Read a finished parquet streaming sink; an EMPTY stream writes no
-    part files, so fall back to an explicit-schema empty frame instead of
-    letting schema inference throw."""
+def _events_source(sf_dir: str) -> str:
+    """The events table as a streaming source. FileStreamSource requires a
+    DIRECTORY source and the testdata table is a single parquet file, so
+    the staged dir holds one symlink to it."""
     import os
 
-    if any(f.endswith(".parquet") for f in os.listdir(out_dir)):
-        return spark.read.parquet(out_dir)
-    return spark.createDataFrame([], schema)
+    path = os.path.abspath(f"{sf_dir}/events.parquet")
+
+    def build(tmp: str) -> None:
+        os.symlink(path, os.path.join(tmp, "events.parquet"))
+
+    return _staged_source("verdicts", sf_dir, build)
+
+
+def _stage_file(df: DataFrame, dst: str, mtime: int) -> None:
+    """Write ``df`` as the single parquet file ``dst`` with modification
+    time ``mtime``. FileStreamSource takes the oldest mtime first, so the
+    mtimes pin the micro-batch order of a multi-file staged source."""
+    import os
+    import shutil
+
+    out = os.path.join(os.path.dirname(dst), "_build")
+    df.coalesce(1).write.mode("overwrite").parquet(out)
+    part = next(
+        f for f in os.listdir(out)
+        if f.startswith("part-") and f.endswith(".parquet")
+    )
+    shutil.move(os.path.join(out, part), dst)
+    shutil.rmtree(out, ignore_errors=True)
+    os.utime(dst, (mtime, mtime))
+
+
+def _run_stream(out: DataFrame, mode: str, tag: str, sink_schema) -> DataFrame:
+    """Drive a gate replay of the streaming frame ``out`` to completion
+    (availableNow, at most 300 s) and return what its sink holds.
+
+    The output mode picks the sink:
+    - append: parquet file sink — an executor-side write, no driver
+      round-trip;
+    - complete: foreachBatch overwrite of a parquet dir — complete mode
+      re-emits the WHOLE aggregate per batch and the file sink takes
+      append only, so the dir holds the latest full state;
+    - update: memory sink, collected back through the driver.
+    An empty stream writes no files, so ``sink_schema`` types the empty
+    result. The per-run checkpoint is removed before returning; a parquet
+    sink dir backs the returned frame and is removed at interpreter exit
+    (at once when the run fails).
+
+    The number of state-store partitions is pinned by
+    spark.sql.shuffle.partitions when a streaming checkpoint is created;
+    each micro-batch then commits one state/delta file per partition. The
+    gate replays are tiny (one to three micro-batches over one table), so
+    32 partitions are pure per-batch commit overhead — 4 keeps the same
+    semantics at a fraction of the state I/O. The override is scoped to
+    ``.start()`` (the gate replays run sequentially, never concurrently);
+    production streams keep the session default.
+    """
+    import atexit
+    import os
+    import shutil
+    import tempfile
+    import uuid
+
+    spark = out.sparkSession
+    ck_dir = tempfile.mkdtemp(prefix=f"ndto_{tag}_ck_")
+    w = (
+        out.writeStream.outputMode(mode)
+        .option("checkpointLocation", ck_dir)
+        .trigger(availableNow=True)
+    )
+    if mode == "update":
+        sink = f"ndto_gate_{tag}_{uuid.uuid4().hex[:8]}"
+        w = w.format("memory").queryName(sink)
+    else:
+        sink = tempfile.mkdtemp(prefix=f"ndto_{tag}_out_")
+        if mode == "append":
+            w = w.format("parquet").option("path", sink)
+        else:
+            w = w.foreachBatch(
+                lambda batch, _id: batch.coalesce(1)
+                .write.mode("overwrite")
+                .parquet(sink)
+            )
+    shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    q = None
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "4")
+        try:
+            q = w.start()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", shuffle)
+        if not q.awaitTermination(300):
+            raise TimeoutError(
+                f"{tag} stream did not finish within 300s — refusing to "
+                "read a partially-filled sink"
+            )
+        if mode == "update":
+            return spark.createDataFrame(spark.table(sink).collect(), sink_schema)
+    except BaseException:
+        if mode != "update":
+            shutil.rmtree(sink, ignore_errors=True)
+        raise
+    finally:
+        if q is not None:
+            q.stop()
+        shutil.rmtree(ck_dir, ignore_errors=True)
+        if mode == "update":
+            spark.catalog.dropTempView(sink)
+    atexit.register(shutil.rmtree, sink, ignore_errors=True)
+    if any(f.endswith(".parquet") for f in os.listdir(sink)):
+        return spark.read.parquet(sink)
+    return spark.createDataFrame([], sink_schema)
 
 
 def q_dedup_stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -834,66 +907,29 @@ def q_dedup_stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_id must come out exactly once. Timestamps are rendered with
     date_format so both engines compare wall-clock strings."""
     import os
-    import shutil
-    import tempfile
 
     from .streaming import dedup_stream
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
 
     def build(tmp: str) -> None:
-        out = os.path.join(tmp, "_build")
-        ev.union(ev).coalesce(1).write.parquet(out)
-        part = next(
-            f for f in os.listdir(out)
-            if f.startswith("part-") and f.endswith(".parquet")
+        _stage_file(
+            ev.union(ev), os.path.join(tmp, "events_x2.parquet"), 1_600_000_000
         )
-        shutil.move(os.path.join(out, part), os.path.join(tmp, "events_x2.parquet"))
-        shutil.rmtree(out, ignore_errors=True)
-
-    import atexit
 
     src_dir = _staged_source("dedup", sf_dir, build)
-    ck_dir = tempfile.mkdtemp(prefix="ndto_dedup_ck_")
-    # parquet sink (append mode supports it), NOT the memory sink: the
-    # deduped table is 100k rows at sf0.1 and a memory sink would round-trip
-    # it through the driver twice (sink collect + createDataFrame). The
-    # returned DataFrame lazily reads the sink dir, so it is reclaimed at
-    # interpreter exit, not here (near_dup_groups' lifetime contract).
-    out_dir = tempfile.mkdtemp(prefix="ndto_dedup_out_")
-    q = None
-    try:
-        stream = spark.readStream.schema(ev.schema).parquet(src_dir)
-        out = dedup_stream(stream, "event_id", "ts", watermark="1 hour")
-        with _conf(spark, _GATE_STREAM_SHUFFLE):
-            q = (
-                out.writeStream.format("parquet")
-                .option("path", out_dir)
-                .outputMode("append")
-                .option("checkpointLocation", ck_dir)
-                .trigger(availableNow=True)
-                .start()
-            )
-        if not q.awaitTermination(300):
-            raise TimeoutError(
-                "dedup_stream_events did not finish within 300s — refusing "
-                "to read a partially-filled sink"
-            )
-        sink = _read_stream_sink(spark, out_dir, ev.schema)
-        return sink.select(
-            "event_id",
-            F.date_format(F.col("ts"), "yyyy-MM-dd HH:mm:ss").alias("ts_str"),
-            "user_id",
-            "event_type",
-            F.floor(F.col("value") * 1e4).cast("bigint").alias("value_e4"),
-        )
-    finally:
-        if q is not None:
-            q.stop()
-        # src_dir is the shared staged cache — only the per-run checkpoint
-        # is reclaimed eagerly; the sink dir backs the returned DataFrame
-        shutil.rmtree(ck_dir, ignore_errors=True)
-        atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
+    stream = spark.readStream.schema(ev.schema).parquet(src_dir)
+    out = dedup_stream(stream, "event_id", "ts", watermark="1 hour")
+    # parquet sink, NOT the memory sink: the deduped table is 100k rows at
+    # sf0.1 and a memory sink would round-trip it through the driver twice
+    sink = _run_stream(out, "append", "dedup", ev.schema)
+    return sink.select(
+        "event_id",
+        F.date_format(F.col("ts"), "yyyy-MM-dd HH:mm:ss").alias("ts_str"),
+        "user_id",
+        "event_type",
+        F.floor(F.col("value") * 1e4).cast("bigint").alias("value_e4"),
+    )
 
 
 def q_sample_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -950,75 +986,29 @@ def q_streaming_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncation for any whole-hour session timezone — the DuckDB oracle
     recomputes the same windowed counters from the batch table.
 
-    Sink shape (the dedup_stream treatment): staged /tmp-cached source dir
-    + a parquet sink written by foreachBatch. Complete-mode aggregates
-    can't use the parquet sink directly, so foreachBatch overwrites the
-    sink dir with each (single, availableNow) batch's full aggregate —
-    an executor-side distributed write; the round-4 memory-sink harness
-    round-tripped the verdicts through a driver collect +
-    createDataFrame."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
+    Complete-mode aggregates can't use the parquet sink directly, so
+    _run_stream overwrites a parquet dir with each (single, availableNow)
+    batch's full aggregate — an executor-side distributed write; the
+    round-4 memory-sink harness round-tripped the verdicts through a
+    driver collect + createDataFrame."""
     from .streaming import windowed_verdicts
 
-    path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
-
-    # FileStreamSource requires a DIRECTORY source; the testdata table is a
-    # single parquet file → a cached dir holding one symlink
-    def build(tmp: str) -> None:
-        os.symlink(os.path.abspath(path), os.path.join(tmp, "events.parquet"))
-
-    src_dir = _staged_source("verdicts", sf_dir, build)
-    ck_dir = tempfile.mkdtemp(prefix="ndto_stream_ck_")
-    out_dir = tempfile.mkdtemp(prefix="ndto_stream_out_")
-    sink_schema = (
-        "win_start string, n_rows bigint, n_violations bigint, pass boolean"
+    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    stream = spark.readStream.schema(schema).parquet(_events_source(sf_dir))
+    out = windowed_verdicts(
+        stream, EVENT_RULES, ts_col="ts", window_duration="1 hour"
+    ).select(
+        F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias(
+            "win_start"
+        ),
+        F.col("n_rows").cast("bigint").alias("n_rows"),
+        F.col("n_violations").cast("bigint").alias("n_violations"),
+        F.col("pass").alias("pass"),
     )
-    q = None
-    try:
-        stream = spark.readStream.schema(schema).parquet(src_dir)
-        out = windowed_verdicts(
-            stream, EVENT_RULES, ts_col="ts", window_duration="1 hour"
-        ).select(
-            F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias(
-                "win_start"
-            ),
-            F.col("n_rows").cast("bigint").alias("n_rows"),
-            F.col("n_violations").cast("bigint").alias("n_violations"),
-            F.col("pass").alias("pass"),
-        )
-
-        def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-            # complete mode re-emits the WHOLE aggregate per batch, so
-            # overwrite keeps the sink = the latest full state; the verdict
-            # table is hundreds of rows → one file reads back cheapest
-            batch_df.coalesce(1).write.mode("overwrite").parquet(out_dir)
-
-        with _conf(spark, _GATE_STREAM_SHUFFLE):
-            q = (
-                out.writeStream.foreachBatch(write_batch)
-                .outputMode("complete")
-                .option("checkpointLocation", ck_dir)
-                .trigger(availableNow=True)
-                .start()
-            )
-        if not q.awaitTermination(300):
-            raise TimeoutError(
-                "streaming_verdicts did not finish within 300s — refusing to "
-                "read a partially-filled sink"
-            )
-        return _read_stream_sink(spark, out_dir, sink_schema)
-    finally:
-        if q is not None:
-            q.stop()
-        # src_dir is the shared staged cache — only the per-run checkpoint
-        # is reclaimed eagerly; the sink dir backs the returned DataFrame
-        shutil.rmtree(ck_dir, ignore_errors=True)
-        atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
+    return _run_stream(
+        out, "complete", "stream",
+        "win_start string, n_rows bigint, n_violations bigint, pass boolean",
+    )
 
 
 def q_validate_stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1027,58 +1017,23 @@ def q_validate_stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     violation rows in append mode — zero state, zero shuffle, so its
     oracle is exactly the batch validate_events oracle (identical rules,
     identical rows). Parquet sink: no driver round-trip."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
     from .streaming import validate_stream
 
-    path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
-    src_dir = tempfile.mkdtemp(prefix="ndto_vstream_src_")
-    ck_dir = tempfile.mkdtemp(prefix="ndto_vstream_ck_")
-    out_dir = tempfile.mkdtemp(prefix="ndto_vstream_out_")
-    q = None
-    try:
-        os.symlink(
-            os.path.abspath(path), os.path.join(src_dir, "events.parquet")
-        )
-        stream = spark.readStream.schema(schema).parquet(src_dir)
-        out = validate_stream(stream, EVENT_RULES, key="event_id")
-        with _conf(spark, _GATE_STREAM_SHUFFLE):
-            q = (
-                out.writeStream.format("parquet")
-                .option("path", out_dir)
-                .outputMode("append")
-                .option("checkpointLocation", ck_dir)
-                .trigger(availableNow=True)
-                .start()
-            )
-        if not q.awaitTermination(300):
-            raise TimeoutError(
-                "validate_stream_events did not finish within 300s — "
-                "refusing to read a partially-filled sink"
-            )
-        sink = _read_stream_sink(
-            spark,
-            out_dir,
-            "event_id bigint, column string, schema_path string, "
-            "keyword string, description string",
-        )
-        return sink.select(
-            "event_id",
-            F.col("column").alias("column_name"),
-            "schema_path",
-            "keyword",
-            "description",
-        )
-    finally:
-        if q is not None:
-            q.stop()
-        shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(ck_dir, ignore_errors=True)
-        atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
+    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    stream = spark.readStream.schema(schema).parquet(_events_source(sf_dir))
+    out = validate_stream(stream, EVENT_RULES, key="event_id")
+    sink = _run_stream(
+        out, "append", "vstream",
+        "event_id bigint, column string, schema_path string, "
+        "keyword string, description string",
+    )
+    return sink.select(
+        "event_id",
+        F.col("column").alias("column_name"),
+        "schema_path",
+        "keyword",
+        "description",
+    )
 
 
 def q_validate_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1362,78 +1317,33 @@ def q_stateful_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle that recomputes the same per-batch cumulative state with window
     functions over the batch table."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from .streaming import stateful_verdicts
 
-    path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
 
     def build(tmp: str) -> None:
-        ev = spark.read.parquet(path)
-        # stage one file per micro-batch; FileStreamSource takes oldest
-        # mtime first, so explicit utimes pin the batch order 0, 1, 2
         for b in range(3):
-            out_dir = os.path.join(tmp, f"b{b}")
-            (
-                ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == b)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(out_dir)
+            _stage_file(
+                ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == b),
+                os.path.join(tmp, f"batch_{b}.parquet"),
+                1_600_000_000 + b * 3600,
             )
-            part = next(
-                f
-                for f in os.listdir(out_dir)
-                if f.startswith("part-") and f.endswith(".parquet")
-            )
-            dst = os.path.join(tmp, f"batch_{b}.parquet")
-            shutil.move(os.path.join(out_dir, part), dst)
-            shutil.rmtree(out_dir, ignore_errors=True)
-            t = 1_600_000_000 + b * 3600
-            os.utime(dst, (t, t))
 
     src_dir = _staged_source("stateful", sf_dir, build)
-    ck_dir = tempfile.mkdtemp(prefix="ndto_stateful_ck_")
-    qname = f"ndto_gate_stateful_{uuid.uuid4().hex[:8]}"
-    q = None
-    try:
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        out = stateful_verdicts(
-            stream, EVENT_RULES, key_col="event_type", timeout_ms=None
-        )
-        with _conf(spark, _GATE_STREAM_SHUFFLE):
-            q = (
-                out.writeStream.format("memory")
-                .queryName(qname)
-                .outputMode("update")
-                .option("checkpointLocation", ck_dir)
-                .trigger(availableNow=True)
-                .start()
-            )
-        if not q.awaitTermination(300):
-            raise TimeoutError(
-                "stateful_verdicts did not finish within 300s — refusing to "
-                "read a partially-filled memory sink"
-            )
-        rows = spark.table(qname).collect()
-        return spark.createDataFrame(
-            rows,
-            "k string, n_rows bigint, n_violations bigint, "
-            "failing_batches bigint, failing_streak bigint",
-        )
-    finally:
-        if q is not None:
-            q.stop()
-        spark.catalog.dropTempView(qname)
-        # src_dir is the shared staged cache — only the per-run checkpoint
-        # is reclaimed
-        shutil.rmtree(ck_dir, ignore_errors=True)
+    stream = (
+        spark.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src_dir)
+    )
+    out = stateful_verdicts(
+        stream, EVENT_RULES, key_col="event_type", timeout_ms=None
+    )
+    return _run_stream(
+        out, "update", "stateful",
+        "k string, n_rows bigint, n_violations bigint, "
+        "failing_batches bigint, failing_streak bigint",
+    )
 
 
 _IMAGES_META_N = 5000  # fixed size: the oracle SQL is static, so the gate
@@ -2686,49 +2596,20 @@ def q_stream_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     append parquet sink, driven to completion with availableNow. The
     oracle is byte-identical to the batch image_features_clips oracle:
     a stateless streaming operator must emit exactly the batch rows."""
-    import atexit
-    import shutil
-    import tempfile
-
     from . import fixtures
     from .multimodal import decode_image_features
 
     # materialize the cache, then stream FROM the cache dir itself
     fixtures.synth_feature_images_cached(spark, _FEAT_IMG_N)
-    src_dir = fixtures.featimg_cache_path(_FEAT_IMG_N)
-    ck_dir = tempfile.mkdtemp(prefix="ndto_imgstream_ck_")
-    out_dir = tempfile.mkdtemp(prefix="ndto_imgstream_out_")
-    q = None
-    try:
-        stream = spark.readStream.schema(
-            "image_id string, bytes binary"
-        ).parquet(src_dir)
-        out = _quantized_image_features(decode_image_features(stream))
-        with _conf(spark, _GATE_STREAM_SHUFFLE):
-            q = (
-                out.writeStream.format("parquet")
-                .option("path", out_dir)
-                .outputMode("append")
-                .option("checkpointLocation", ck_dir)
-                .trigger(availableNow=True)
-                .start()
-            )
-        if not q.awaitTermination(300):
-            raise TimeoutError(
-                "stream_image_features did not finish within 300s — "
-                "refusing to read a partially-filled sink"
-            )
-        return _read_stream_sink(
-            spark,
-            out_dir,
-            "image_id string, ok boolean, w bigint, h bigint, "
-            "mean_e4 bigint, phash bigint",
-        )
-    finally:
-        if q is not None:
-            q.stop()
-        shutil.rmtree(ck_dir, ignore_errors=True)
-        atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
+    stream = spark.readStream.schema("image_id string, bytes binary").parquet(
+        fixtures.featimg_cache_path(_FEAT_IMG_N)
+    )
+    out = _quantized_image_features(decode_image_features(stream))
+    return _run_stream(
+        out, "append", "imgstream",
+        "image_id string, ok boolean, w bigint, h bigint, "
+        "mean_e4 bigint, phash bigint",
+    )
 
 
 _LINE_CHUNK = 3  # tokens per derived "line" (see q_line_dedup_documents)
@@ -3056,97 +2937,55 @@ def q_session_stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     as wall-clock strings (tz-proof round trip, the streaming_verdicts
     treatment); the oracle recomputes the sessions from the batch table.
     """
-    import atexit
+    import datetime
     import os
-    import shutil
-    import tempfile
 
     from .streaming import session_stream
 
-    path = f"{sf_dir}/events.parquet"
-    ev = spark.read.parquet(path).filter(
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet").filter(
         F.col("ts").isNotNull() & F.col("user_id").isNotNull()
     )
     schema = ev.schema
 
     def build(tmp: str) -> None:
-        def put(df: DataFrame, name: str, tsec: int) -> None:
-            out = os.path.join(tmp, "_build")
-            df.coalesce(1).write.mode("overwrite").parquet(out)
-            part = next(
-                f
-                for f in os.listdir(out)
-                if f.startswith("part-") and f.endswith(".parquet")
-            )
-            dst = os.path.join(tmp, name)
-            shutil.move(os.path.join(out, part), dst)
-            shutil.rmtree(out, ignore_errors=True)
-            os.utime(dst, (tsec, tsec))
-
-        put(ev, "batch_0.parquet", 1_600_000_000)
+        _stage_file(ev, os.path.join(tmp, "batch_0.parquet"), 1_600_000_000)
         # sentinel: fixed far-future ts > any testdata ts + gap; filtered
         # from the output (user_id -1), exists only to advance the watermark
         sentinel = spark.createDataFrame(
-            [(-1, __import__("datetime").datetime(2100, 1, 1), -1,
-              "sentinel", 0.0, "{}")],
+            [(-1, datetime.datetime(2100, 1, 1), -1, "sentinel", 0.0, "{}")],
             schema,
         )
-        put(sentinel, "batch_1.parquet", 1_600_003_600)
+        _stage_file(
+            sentinel, os.path.join(tmp, "batch_1.parquet"), 1_600_003_600
+        )
 
     src_dir = _staged_source("session", sf_dir, build)
-    ck_dir = tempfile.mkdtemp(prefix="ndto_session_ck_")
-    out_dir = tempfile.mkdtemp(prefix="ndto_session_out_")
-    sink_schema = (
-        "user_id bigint, start_str string, end_str string, "
-        "n_events bigint, sum_cents bigint"
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src_dir)
     )
-    q = None
-    try:
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        out = session_stream(
-            stream,
-            "user_id",
-            "ts",
-            "24 hours",
-            sum_cols={"sum_cents": F.floor(F.col("value") * 100).cast("long")},
-        ).select(
-            "user_id",
-            F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias(
-                "start_str"
-            ),
-            F.date_format("session_end", "yyyy-MM-dd HH:mm:ss").alias(
-                "end_str"
-            ),
-            F.col("n_events").cast("bigint").alias("n_events"),
-            F.col("sum_cents").cast("bigint").alias("sum_cents"),
-        )
-        with _conf(spark, _GATE_STREAM_SHUFFLE):
-            q = (
-                out.writeStream.format("parquet")
-                .option("path", out_dir)
-                .outputMode("append")
-                .option("checkpointLocation", ck_dir)
-                .trigger(availableNow=True)
-                .start()
-            )
-        if not q.awaitTermination(300):
-            raise TimeoutError(
-                "session_stream_events did not finish within 300s — "
-                "refusing to read a partially-filled sink"
-            )
-        sink = _read_stream_sink(spark, out_dir, sink_schema)
-        return sink.filter(F.col("user_id") >= 0)
-    finally:
-        if q is not None:
-            q.stop()
-        # src_dir is the shared staged cache — only the per-run checkpoint
-        # is reclaimed eagerly; the sink dir backs the returned DataFrame
-        shutil.rmtree(ck_dir, ignore_errors=True)
-        atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
+    out = session_stream(
+        stream,
+        "user_id",
+        "ts",
+        "24 hours",
+        sum_cols={"sum_cents": F.floor(F.col("value") * 100).cast("long")},
+    ).select(
+        "user_id",
+        F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias(
+            "start_str"
+        ),
+        F.date_format("session_end", "yyyy-MM-dd HH:mm:ss").alias("end_str"),
+        F.col("n_events").cast("bigint").alias("n_events"),
+        F.col("sum_cents").cast("bigint").alias("sum_cents"),
+    )
+    sink = _run_stream(
+        out, "append", "session",
+        "user_id bigint, start_str string, end_str string, "
+        "n_events bigint, sum_cents bigint",
+    )
+    return sink.filter(F.col("user_id") >= 0)
 
 
 def q_pii_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3837,93 +3676,70 @@ def q_dhash_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     return image_dhash(df, grid=4)
 
 
+def _view_click_join(
+    spark: SparkSession, sf_dir: str, src_dir: str, how: str, tag: str
+) -> DataFrame:
+    """Replay views ⋈ clicks per user, view_ts <= click_ts <= view_ts + 4
+    hours (both bounds inclusive), from the staged events source
+    ``src_dir`` through stream_interval_join, one staged file per
+    micro-batch. Watermarks (needed for the
+    state-cleanup contract at scale) are far wider than the data span, so
+    eviction can't race the replay. delay_us is an epoch-micros
+    DIFFERENCE and the bounds compare as differences too, so the output
+    is invariant to any constant timezone shift in the parquet read
+    path."""
+    from .streaming import stream_interval_join
+
+    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+
+    def side(event_type: str, id_alias: str, ts_alias: str) -> DataFrame:
+        s = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src_dir)
+        )
+        if dict(s.dtypes).get("ts") == "timestamp_ntz":
+            s = s.withColumn("ts", F.col("ts").cast("timestamp"))
+        return s.filter(
+            (F.col("event_type") == event_type)
+            & F.col("ts").isNotNull()
+            & F.col("user_id").isNotNull()
+        ).select(
+            F.col("event_id").alias(id_alias),
+            "user_id",
+            F.col("ts").alias(ts_alias),
+        )
+
+    views = side("view", "view_id", "v_ts")
+    clicks = side("click", "click_id", "c_ts")
+    joined = stream_interval_join(
+        views, clicks, "user_id", "v_ts", "c_ts", "4 hours",
+        left_watermark="3650 days", right_watermark="3650 days", how=how,
+    )
+    out = joined.select(
+        views["user_id"].alias("user_id"),
+        "view_id",
+        "click_id",
+        (F.unix_micros("c_ts") - F.unix_micros("v_ts")).alias("delay_us"),
+    )
+    return _run_stream(
+        out, "append", tag,
+        "user_id bigint, view_id bigint, click_id bigint, delay_us bigint",
+    )
+
+
 def q_stream_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked STREAM-STREAM interval join in the gate — the
     attribution shape: views ⋈ clicks per user where
     view_ts <= click_ts <= view_ts + 4 hours (both bounds inclusive).
     Both sides read the SAME symlinked single-file source, replayed
     availableNow — one micro-batch, so every pair co-resides in join
-    state and the output is the complete interval join; watermarks
-    (needed for the state-cleanup contract at scale) are far wider than
-    the data span, so eviction can't race the replay. The oracle is
+    state and the output is the complete interval join. The oracle is
     DuckDB's OWN inequality join — an independent second implementation
-    of the semantics, not a replay. delay_us is an epoch-micros
-    DIFFERENCE and the bounds compare as differences too, so the whole
-    query is invariant to any constant timezone shift in the parquet
-    read path."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    from .streaming import stream_interval_join
-
-    path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
-    src_dir = tempfile.mkdtemp(prefix="ndto_ivjoin_src_")
-    ck_dir = tempfile.mkdtemp(prefix="ndto_ivjoin_ck_")
-    out_dir = tempfile.mkdtemp(prefix="ndto_ivjoin_out_")
-    sink_schema = (
-        "user_id bigint, view_id bigint, click_id bigint, delay_us bigint"
+    of the semantics, not a replay."""
+    return _view_click_join(
+        spark, sf_dir, _events_source(sf_dir), "inner", "ivjoin"
     )
-    q = None
-    try:
-        os.symlink(
-            os.path.abspath(path), os.path.join(src_dir, "events.parquet")
-        )
-
-        def side(event_type: str, id_alias: str, ts_alias: str) -> DataFrame:
-            s = spark.readStream.schema(schema).parquet(src_dir)
-            if dict(s.dtypes).get("ts") == "timestamp_ntz":
-                s = s.withColumn("ts", F.col("ts").cast("timestamp"))
-            return (
-                s.filter(
-                    (F.col("event_type") == event_type)
-                    & F.col("ts").isNotNull()
-                    & F.col("user_id").isNotNull()
-                )
-                .select(
-                    F.col("event_id").alias(id_alias),
-                    "user_id",
-                    F.col("ts").alias(ts_alias),
-                )
-            )
-
-        views = side("view", "view_id", "v_ts")
-        clicks = side("click", "click_id", "c_ts").withColumnRenamed(
-            "user_id", "c_user"
-        ).withColumnRenamed("c_user", "user_id")
-        joined = stream_interval_join(
-            views, clicks, "user_id", "v_ts", "c_ts", "4 hours",
-            left_watermark="3650 days", right_watermark="3650 days",
-        )
-        out = joined.select(
-            views["user_id"].alias("user_id"),
-            "view_id",
-            "click_id",
-            (F.unix_micros("c_ts") - F.unix_micros("v_ts")).alias("delay_us"),
-        )
-        with _conf(spark, _GATE_STREAM_SHUFFLE):
-            q = (
-                out.writeStream.format("parquet")
-                .option("path", out_dir)
-                .outputMode("append")
-                .option("checkpointLocation", ck_dir)
-                .trigger(availableNow=True)
-                .start()
-            )
-        if not q.awaitTermination(300):
-            raise TimeoutError(
-                "stream_join_events did not finish within 300s — refusing "
-                "to read a partially-filled sink"
-            )
-        return _read_stream_sink(spark, out_dir, sink_schema)
-    finally:
-        if q is not None:
-            q.stop()
-        shutil.rmtree(ck_dir, ignore_errors=True)
-        shutil.rmtree(src_dir, ignore_errors=True)
-        atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
 
 
 def q_stream_left_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3937,104 +3753,30 @@ def q_stream_left_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch flushes all unmatched state (session_stream's sentinel
     contract). Oracle = DuckDB's OWN LEFT JOIN with the same interval
     condition — independent semantics."""
-    import atexit
     import datetime
     import os
-    import shutil
-    import tempfile
 
-    from .streaming import stream_interval_join
-
-    path = f"{sf_dir}/events.parquet"
-    ev_schema = spark.read.parquet(path).schema
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
 
     def build(tmp: str) -> None:
-        def put(df: DataFrame, name: str, tsec: int) -> None:
-            out = os.path.join(tmp, "_build")
-            df.coalesce(1).write.mode("overwrite").parquet(out)
-            part = next(
-                f
-                for f in os.listdir(out)
-                if f.startswith("part-") and f.endswith(".parquet")
-            )
-            shutil.move(os.path.join(out, part), os.path.join(tmp, name))
-            shutil.rmtree(out, ignore_errors=True)
-            t = 1_600_000_000 + tsec
-            os.utime(os.path.join(tmp, name), (t, t))
-
-        put(spark.read.parquet(path), "batch_0.parquet", 0)
+        _stage_file(ev, os.path.join(tmp, "batch_0.parquet"), 1_600_000_000)
         far = datetime.datetime(2100, 1, 1)
         sentinel = spark.createDataFrame(
             [
                 (-1, far, -1, "view", 0.0, "{}"),
                 (-2, far, -1, "click", 0.0, "{}"),
             ],
-            ev_schema,
+            ev.schema,
         )
-        put(sentinel, "batch_1.parquet", 3600)
+        _stage_file(
+            sentinel, os.path.join(tmp, "batch_1.parquet"), 1_600_003_600
+        )
 
     src_dir = _staged_source("ivjleft", sf_dir, build)
-    ck_dir = tempfile.mkdtemp(prefix="ndto_ivjleft_ck_")
-    out_dir = tempfile.mkdtemp(prefix="ndto_ivjleft_out_")
-    sink_schema = (
-        "user_id bigint, view_id bigint, click_id bigint, delay_us bigint"
+    sink = _view_click_join(
+        spark, sf_dir, src_dir, "left_outer", "ivjleft"
     )
-    q = None
-    try:
-        def side(event_type: str, id_alias: str, ts_alias: str) -> DataFrame:
-            s = (
-                spark.readStream.schema(ev_schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src_dir)
-            )
-            if dict(s.dtypes).get("ts") == "timestamp_ntz":
-                s = s.withColumn("ts", F.col("ts").cast("timestamp"))
-            return s.filter(
-                (F.col("event_type") == event_type)
-                & F.col("ts").isNotNull()
-                & F.col("user_id").isNotNull()
-            ).select(
-                F.col("event_id").alias(id_alias),
-                "user_id",
-                F.col("ts").alias(ts_alias),
-            )
-
-        views = side("view", "view_id", "v_ts")
-        clicks = side("click", "click_id", "c_ts").withColumnRenamed(
-            "user_id", "c_user"
-        ).withColumnRenamed("c_user", "user_id")
-        joined = stream_interval_join(
-            views, clicks, "user_id", "v_ts", "c_ts", "4 hours",
-            left_watermark="3650 days", right_watermark="3650 days",
-            how="left_outer",
-        )
-        out = joined.select(
-            views["user_id"].alias("user_id"),
-            "view_id",
-            "click_id",
-            (F.unix_micros("c_ts") - F.unix_micros("v_ts")).alias("delay_us"),
-        )
-        with _conf(spark, _GATE_STREAM_SHUFFLE):
-            q = (
-                out.writeStream.format("parquet")
-                .option("path", out_dir)
-                .outputMode("append")
-                .option("checkpointLocation", ck_dir)
-                .trigger(availableNow=True)
-                .start()
-            )
-        if not q.awaitTermination(300):
-            raise TimeoutError(
-                "stream_left_join_events did not finish within 300s — "
-                "refusing to read a partially-filled sink"
-            )
-        sink = _read_stream_sink(spark, out_dir, sink_schema)
-        return sink.filter(F.col("user_id") >= 0)
-    finally:
-        if q is not None:
-            q.stop()
-        shutil.rmtree(ck_dir, ignore_errors=True)
-        atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
+    return sink.filter(F.col("user_id") >= 0)
 
 
 def q_dhash_near_dup_images(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4218,24 +3960,18 @@ def q_epoch_shuffle_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's OWN row_number over the same salted bucket — independently
     proving the range-partition + offset-map rank equals a true global
     sort's."""
+    from . import spill
     from .functions.sharding import epoch_shuffle, unpersist_positions
-
-    import atexit
-    import shutil
-    import tempfile
 
     out = epoch_shuffle(
         _read(spark, sf_dir, "documents"), "doc_id", epoch=3, n_partitions=8
     )
-    # spill to parquet so the rank's persisted parent can be released
-    # before the gate's collect (the repo's lineage-spill idiom)
-    run_dir = tempfile.mkdtemp(prefix="ndto_epoch_")
+    # spill so the rank's persisted parent can be released before the
+    # gate's collect
     try:
-        out.write.mode("overwrite").parquet(run_dir)
+        return spill.materialize(out, "epoch")
     finally:
         unpersist_positions(out)
-    atexit.register(shutil.rmtree, run_dir, ignore_errors=True)
-    return spark.read.parquet(run_dir)
 
 
 def q_knn_graph_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:

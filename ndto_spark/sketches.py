@@ -34,6 +34,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import spill
+
 # same rationale as ann.MAX_CODEBOOK_LITERALS: the counter table is
 # embedded as a literal map in the filter expression; beyond this the
 # Catalyst tree itself becomes the bottleneck.
@@ -187,11 +189,6 @@ def heavy_hitters(
     # aggregates counters from it, the filter job re-reads it with the
     # positions precomputed. _spread first — both passes otherwise ride
     # the scan's file-layout-bound task count.
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
     from .dedup import _spread
 
     pos_cols = [
@@ -200,13 +197,9 @@ def heavy_hitters(
         )
         for j in range(depth)
     ]
-    hashed = _spread(rows.select(col)).select(F.col(col), *pos_cols)
-    spark = df.sparkSession
-    run_dir = tempfile.mkdtemp(prefix="ndto_cmspos_")
-    atexit.register(shutil.rmtree, run_dir, ignore_errors=True)
-    p = os.path.join(run_dir, "pos")
-    hashed.write.parquet(p)
-    hashed = spark.read.parquet(p)
+    hashed = spill.materialize(
+        _spread(rows.select(col)).select(F.col(col), *pos_cols), "cmspos"
+    )
     # counter table from the precomputed positions — identical (j, pos)
     # stream to cms_table's explode-then-hash
     cms = (

@@ -12,11 +12,9 @@ import os
 
 import pytest
 
-# synthesize-their-own-input queries (images fixtures) and streaming
-# replays (stage their own files) have no empty-table variant to read
+# synthesize-their-own-input queries (images fixtures) have no
+# empty-table variant to read
 _SKIP = {
-    "streaming_verdicts",
-    "stateful_verdicts_events",
     "validate_images",
     "validate_images_meta",
     # fixed-size synthetic fixtures — these ignore sf_dir entirely, so an

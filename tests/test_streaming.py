@@ -368,3 +368,44 @@ def test_stream_interval_join_left_outer_flushes_unmatched(spark, tmp_path):
         stream_interval_join(
             views, clicks, "user_id", "ts", "c_ts", "1 hour", how="full"
         )
+
+
+def test_run_stream_timeout_stops_query_and_cleans_up(
+    spark, events_stream, tmp_path, monkeypatch
+):
+    """A gate replay that does not finish in time raises TimeoutError and
+    leaves no running query, no checkpoint or sink dir and no changed
+    shuffle-partitions conf behind."""
+    import tempfile
+
+    from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+    from ndto_spark.queries import _run_stream
+
+    stream, _ = events_stream
+    work = tmp_path / "tmp"
+    work.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(work))
+    monkeypatch.setattr(
+        StreamingQuery, "awaitTermination", lambda self, timeout=None: False
+    )
+    started = []
+    real_start = DataStreamWriter.start
+
+    def start(self, *args, **kwargs):
+        started.append(real_start(self, *args, **kwargs))
+        return started[-1]
+
+    monkeypatch.setattr(DataStreamWriter, "start", start)
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        with pytest.raises(TimeoutError):
+            _run_stream(stream, "append", "slow", stream.schema)
+        assert spark.conf.get(key) == "7"
+    finally:
+        spark.conf.set(key, before)
+    assert len(started) == 1 and not started[0].isActive
+    assert not list(work.glob("ndto_slow_ck_*"))
+    assert not list(work.glob("ndto_slow_out_*"))
