@@ -24,6 +24,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from . import codecs, fixtures
+from .compiler import cached
 
 IMAGE_CHECK_TYPE = T.StructType(
     [
@@ -40,7 +41,7 @@ IMAGE_CHECK_TYPE = T.StructType(
 _ID_RE = re.compile(r"^img_[0-9a-f]{16}$")
 
 
-def image_check_udf(seed: int, min_psnr: float = 40.0):
+def image_check_udf(seed: int):
     """pandas UDF: (image_id, bytes, caption) → check struct.
 
     PSNR is computed against pixels regenerated from the row id embedded in
@@ -124,7 +125,39 @@ def image_batch_violations(
     violations (they are independent physical checks, unlike the reference's
     single-value short-circuit — documented extension).
     """
-    chk = image_check_udf(seed, min_psnr)(
+    # seed picks the references the UDF regenerates; min_psnr is folded
+    # into the entries as a literal
+    chk, violations = cached(
+        ("image_batch_violations", seed, key, min_psnr),
+        lambda: _check_columns(seed, key, min_psnr),
+    )
+    annotated = df.select(
+        F.col(key), F.col("w"), F.col("h"), F.col("fmt"), chk,
+        F.spark_partition_id().alias("partition_id"),
+    ).select(
+        F.col(key), violations.alias("violations"), "partition_id"
+    )
+    # explode_outer + post-filter (cf. runner._result_from_annotated): keeps
+    # the optimizer from expanding the violations alias into an inferred
+    # pre-Generate filter and re-evaluating the entry expressions per row
+    return annotated.select(
+        F.col(key), F.explode_outer("violations").alias("v"), "partition_id"
+    ).filter(F.col("v").isNotNull()).select(
+        key,
+        F.col("v.column").alias("column"),
+        F.col("v.schema_path").alias("schema_path"),
+        F.col("v.keyword").alias("keyword"),
+        F.col("v.description").alias("description"),
+        "partition_id",
+    )
+
+
+def _check_columns(
+    seed: int, key: str, min_psnr: float
+) -> tuple[Column, Column]:
+    """The check UDF call (aliased ``chk``) and the violations array built
+    from its fields and the declared (w, h, fmt) columns."""
+    chk = image_check_udf(seed)(
         F.col(key), F.col("bytes"), F.col("caption")
     ).alias("chk")
     c = F.col("chk")
@@ -179,27 +212,7 @@ def image_batch_violations(
             _v("caption", "$.caption_equality", "caption_equality", F.lit("Caption does not match the reference caption")),
         ),
     ]
-    annotated = df.select(
-        F.col(key), F.col("w"), F.col("h"), F.col("fmt"), chk,
-        F.spark_partition_id().alias("partition_id"),
-    ).select(
-        F.col(key),
-        F.array_compact(F.array(*entries)).alias("violations"),
-        "partition_id",
-    )
-    # explode_outer + post-filter (cf. runner._result_from_annotated): keeps
-    # the optimizer from expanding the violations alias into an inferred
-    # pre-Generate filter and re-evaluating the entry expressions per row
-    return annotated.select(
-        F.col(key), F.explode_outer("violations").alias("v"), "partition_id"
-    ).filter(F.col("v").isNotNull()).select(
-        key,
-        F.col("v.column").alias("column"),
-        F.col("v.schema_path").alias("schema_path"),
-        F.col("v.keyword").alias("keyword"),
-        F.col("v.description").alias("description"),
-        "partition_id",
-    )
+    return chk, F.array_compact(F.array(*entries))
 
 
 def _v(column: str, path: str, keyword: str, description: Column) -> Column:

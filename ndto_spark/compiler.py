@@ -29,13 +29,17 @@ batch-vectorized (see CompileOptions).
 
 from __future__ import annotations
 
+import dataclasses
 import re as _re
+import threading
+from collections import OrderedDict
 from dataclasses import dataclass
 from functools import reduce
 from typing import Any, Callable, Optional
 
 import pandas as pd  # noqa: F401 — resolves pandas_udf string type hints
 
+from pyspark import SparkContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -1090,3 +1094,70 @@ def _py_regex_udf(pattern: str) -> Callable[[Column], Column]:
 
         _UDF_CACHE[key] = py_regex
     return _UDF_CACHE[key]
+
+
+# ---------------------------------------------------------------------------
+# compile-once memo
+#
+# Building a rule Column costs thousands of Py4J round trips, while the
+# Column itself is an unresolved expression tree (F.col names, literals,
+# UDF calls) that binds to any DataFrame at analysis time. So every entry
+# point that builds one goes through ``cached``, keyed on everything the
+# tree depends on. Stored values must stay DataFrame-independent: F.col,
+# never df[...], and never a DataFrame or a result.
+
+_MEMO_SIZE = 256
+_memo: OrderedDict[Any, Any] = OrderedDict()
+_memo_sc: Optional[SparkContext] = None
+_memo_lock = threading.Lock()
+
+
+def _freeze(x: Any) -> Any:
+    """Hashable, ORDER-PRESERVING form of a key part (dict and list order
+    decide violation priority and order). Every node is tagged with its
+    exact type, so 1 / 1.0 / True and list / tuple stay distinct. Raises
+    TypeError for anything else."""
+    t = type(x)
+    if t is dict:
+        return t, tuple((_freeze(k), _freeze(v)) for k, v in x.items())
+    if t is list or t is tuple:
+        return t, tuple(_freeze(v) for v in x)
+    if x is None or t in (str, int, float, bool):
+        return t, x
+    if isinstance(x, T.DataType):
+        return T.DataType, x.json()  # nested types, nullability included
+    if t is CompileOptions:
+        return t, _freeze(dataclasses.astuple(x))
+    raise TypeError(f"uncacheable key part {t.__name__}")
+
+
+def cached(key: tuple, build: Callable[[], Any]) -> Any:
+    """``build()``, memoized on ``key`` for the active SparkContext.
+
+    ``key`` must cover every input the built value depends on: specs,
+    registry, CompileOptions, bound Spark types, column names and any
+    literal folded into the tree. A key part ``_freeze`` cannot represent
+    bypasses the memo (built every call). Errors are not cached. The memo
+    is an LRU of fixed size, emptied whenever the active SparkContext
+    changes, so a restarted session never sees a stale UDF or Column.
+    """
+    global _memo_sc
+    try:
+        key = _freeze(key)
+    except TypeError:
+        return build()
+    sc = SparkContext._active_spark_context
+    with _memo_lock:
+        if sc is not _memo_sc:
+            _memo.clear()
+            _memo_sc = sc
+        if key in _memo:
+            _memo.move_to_end(key)
+            return _memo[key]
+    value = build()
+    with _memo_lock:
+        if sc is _memo_sc:
+            _memo[key] = value
+            if len(_memo) > _MEMO_SIZE:
+                _memo.popitem(last=False)
+    return value

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from . import table_rules
 from .batch import image_batch_violations
-from .runner import RuleSet, validate
+from .runner import validate
 
 IMAGE_METADATA_RULES = {
     "image_id": {"type": "string", "pattern": "^img_[0-9a-f]{16}$"},
@@ -49,18 +49,23 @@ def validate_images_metadata(
         key, "column", "schema_path", "keyword", "description"
     )
     if check_uniqueness:
-        dups = table_rules.uniqueness(df.filter(F.col(key).isNotNull()), key)
-        dup_v = dups.select(
-            F.col(key),
-            F.lit(key).alias("column"),
-            F.lit("$.unique").alias("schema_path"),
-            F.lit("unique").alias("keyword"),
-            F.format_string("Key appears %d times", F.col("n_dups")).alias(
-                "description"
-            ),
-        )
-        violations = violations.unionByName(dup_v)
+        violations = violations.unionByName(_uniqueness_violations(df, key))
     return violations
+
+
+def _uniqueness_violations(df: DataFrame, key: str) -> DataFrame:
+    """One violation row per duplicated non-null key: (key, column,
+    schema_path, keyword, description)."""
+    dups = table_rules.uniqueness(df.filter(F.col(key).isNotNull()), key)
+    return dups.select(
+        F.col(key),
+        F.lit(key).alias("column"),
+        F.lit("$.unique").alias("schema_path"),
+        F.lit("unique").alias("keyword"),
+        F.format_string("Key appears %d times", F.col("n_dups")).alias(
+            "description"
+        ),
+    )
 
 
 @dataclass
@@ -96,17 +101,8 @@ def validate_images(
     batch_v = image_batch_violations(df, seed, key=key, min_psnr=min_psnr)
     violations = meta.violations.unionByName(batch_v)
     if check_uniqueness:
-        dups = table_rules.uniqueness(df.filter(F.col(key).isNotNull()), key)
-        dup_v = dups.select(
-            F.col(key),
-            F.lit(key).alias("column"),
-            F.lit("$.unique").alias("schema_path"),
-            F.lit("unique").alias("keyword"),
-            F.format_string("Key appears %d times", F.col("n_dups")).alias(
-                "description"
-            ),
-            F.lit(-1).alias("partition_id"),  # table-level: no single partition
-        )
+        # table-level: no single partition
+        dup_v = _uniqueness_violations(df, key).withColumn("partition_id", F.lit(-1))
         violations = violations.unionByName(dup_v)
     rows_per_part = df.groupBy(
         F.spark_partition_id().alias("partition_id")

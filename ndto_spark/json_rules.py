@@ -23,8 +23,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import spill
-from .compiler import CompileOptions, Compiler
-from .runner import PARTITION_COL, VIOLATIONS_COL, ValidationResult, _result_from_annotated
+from .compiler import CompileOptions, Compiler, cached
+from .runner import (
+    PARTITION_COL,
+    VIOLATIONS_COL,
+    ValidationResult,
+    _entry,
+    _result_from_annotated,
+)
 from .spec import Schema, SpecError, normalize
 
 
@@ -126,7 +132,33 @@ def validate_json_column(
     registry: Optional[dict[str, Schema]] = None,
     options: Optional[CompileOptions] = None,
 ) -> ValidationResult:
-    dtype = spec_to_spark_type(schema)
+    def build() -> tuple[dict[str, Column], Column]:
+        dtype = spec_to_spark_type(schema)
+        parsed = {
+            _PARSED_COL: F.from_json(F.col(col), dtype),
+            # PERMISSIVE from_json yields an all-null STRUCT (not NULL) on
+            # malformed input, so probe with try_parse_json (VARIANT, NULL
+            # on bad JSON) — also materialized once here.
+            _BAD_JSON_COL: F.col(col).isNotNull()
+            & F.try_parse_json(F.col(col)).isNull(),
+        }
+        comp = Compiler(registry=registry, options=options)
+        compiled = comp.compile(schema, F.col(_PARSED_COL), dtype, "$")
+        bad_json = F.col(_BAD_JSON_COL)
+        entry = F.when(
+            bad_json,
+            F.struct(
+                F.lit(col).alias("column"),
+                F.lit("$.json").alias("schema_path"),
+                F.lit("json").alias("keyword"),
+                F.lit("Value is not parseable JSON").alias("description"),
+            ),
+        ).otherwise(_entry(F.lit(col), compiled))
+        return parsed, F.array_compact(F.array(entry))
+
+    parsed, arr = cached(
+        ("validate_json_column", col, schema, registry, options), build
+    )
     # round-robin ahead of the parse + rule projection (dedup._spread
     # rationale): one compact parquet file is ONE scan task, and the
     # from_json + compiled-rule work would ride it single-core; the
@@ -134,7 +166,6 @@ def validate_json_column(
     # is assigned ABOVE the exchange, as before.
     from .dedup import _spread
 
-    df = _spread(df)
     # PLAN NOTE: parse ONCE. Compiling the rule tree directly against the
     # from_json(...) expression duplicates the parse into every reference
     # (one per keyword check — measured 48 from_json nodes / ~30x slowdown
@@ -143,45 +174,9 @@ def validate_json_column(
     # CollapseProject refuses to inline a non-cheap producer expression
     # that is consumed more than once, so the plan carries exactly one
     # from_json (asserted by tests/test_json_rules.py::test_single_parse).
-    parsed_df = df.withColumns(
-        {
-            _PARSED_COL: F.from_json(F.col(col), dtype),
-            # PERMISSIVE from_json yields an all-null STRUCT (not NULL) on
-            # malformed input, so probe with try_parse_json (VARIANT, NULL
-            # on bad JSON) — also materialized once here.
-            _BAD_JSON_COL: F.col(col).isNotNull()
-            & F.try_parse_json(F.col(col)).isNull(),
-        }
-    )
-    comp = Compiler(registry=registry, options=options)
-    compiled = comp.compile(schema, F.col(_PARSED_COL), dtype, "$")
-    bad_json = F.col(_BAD_JSON_COL)
-    entry = (
-        F.when(
-            bad_json,
-            F.struct(
-                F.lit(col).alias("column"),
-                F.lit("$.json").alias("schema_path"),
-                F.lit("json").alias("keyword"),
-                F.lit("Value is not parseable JSON").alias("description"),
-            ),
-        )
-        .when(
-            ~bad_json & ~compiled.pred,
-            F.struct(
-                F.lit(col).alias("column"),
-                F.coalesce(compiled.viol["schema_path"], F.lit("$")).alias(
-                    "schema_path"
-                ),
-                F.coalesce(compiled.viol["keyword"], F.lit("unknown")).alias(
-                    "keyword"
-                ),
-                compiled.viol["description"].alias("description"),
-            ),
-        )
-    )
+    parsed_df = _spread(df).withColumns(parsed)
     annotated = (
-        parsed_df.withColumn(VIOLATIONS_COL, F.array_compact(F.array(entry)))
+        parsed_df.withColumn(VIOLATIONS_COL, arr)
         .withColumn(PARTITION_COL, F.spark_partition_id())
         .drop(_PARSED_COL, _BAD_JSON_COL)
     )

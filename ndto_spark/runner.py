@@ -24,7 +24,7 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .compiler import Compiled, CompileOptions, Compiler, VIOLATION_TYPE
+from .compiler import Compiled, CompileOptions, Compiler, cached
 from .spec import Schema
 
 VIOLATIONS_COL = "violations"
@@ -48,33 +48,53 @@ class RuleSet:
         options: Optional[CompileOptions] = None,
     ) -> None:
         self.rules = rules
-        self.compiler = Compiler(registry=registry, options=options)
+        self.registry = registry
+        self.options = options
+
+    def _key(self, df: DataFrame) -> tuple:
+        """Memo key: the rules in order, registry, options and the bound
+        type of each rule column."""
+        dtypes = [df.schema[col].dataType for col in self.rules]
+        return self.rules, self.registry, self.options, dtypes
 
     def compile(self, df: DataFrame) -> dict[str, Compiled]:
-        out = {}
-        for col, schema in self.rules.items():
-            dtype = df.schema[col].dataType
-            out[col] = self.compiler.compile(schema, F.col(col), dtype, "$")
-        return out
+        key = rules, registry, options, dtypes = self._key(df)
+
+        def build() -> dict[str, Compiled]:
+            comp = Compiler(registry=registry, options=options)
+            return {
+                col: comp.compile(schema, F.col(col), dtype, "$")
+                for (col, schema), dtype in zip(rules.items(), dtypes)
+            }
+
+        # a copy: the caller owns the dict, the memo keeps its own
+        return dict(cached(("RuleSet.compile", *key), build))
 
     def violations_array(self, df: DataFrame) -> Column:
         """array<struct<column,schema_path,keyword,description>> of failures."""
-        compiled = self.compile(df)
-        entries = [
-            F.when(
-                ~c.pred,
-                F.struct(
-                    F.lit(col).alias("column"),
-                    # pred=False ⇒ viol non-null by construction; the coalesce
-                    # is a safety net that keeps the row reportable regardless
-                    F.coalesce(c.viol["schema_path"], F.lit("$")).alias("schema_path"),
-                    F.coalesce(c.viol["keyword"], F.lit("unknown")).alias("keyword"),
-                    c.viol["description"].alias("description"),
-                ),
-            )
-            for col, c in compiled.items()
-        ]
-        return F.array_compact(F.array(*entries))
+
+        def build() -> Column:
+            entries = [
+                _entry(F.lit(col), c) for col, c in self.compile(df).items()
+            ]
+            return F.array_compact(F.array(*entries))
+
+        return cached(("RuleSet.violations_array", *self._key(df)), build)
+
+
+def _entry(column: Column, c: Compiled) -> Column:
+    """The violation struct of one failed rule, NULL when it passed."""
+    return F.when(
+        ~c.pred,
+        F.struct(
+            column.alias("column"),
+            # pred=False ⇒ viol non-null by construction; the coalesce is a
+            # safety net that keeps the row reportable regardless
+            F.coalesce(c.viol["schema_path"], F.lit("$")).alias("schema_path"),
+            F.coalesce(c.viol["keyword"], F.lit("unknown")).alias("keyword"),
+            c.viol["description"].alias("description"),
+        ),
+    )
 
 
 def validate_row_object(
@@ -91,23 +111,19 @@ def validate_row_object(
     additional_properties) apply to the row exactly as the reference applies
     them to a map value; paths come out as '$.properties.<col>...'.
     """
-    from .compiler import Compiler
 
-    cols = [c for c in df.columns]
-    row = F.struct(*[F.col(c).alias(c) for c in cols])
-    dtype = df.select(row.alias("_row")).schema["_row"].dataType
-    comp = Compiler(registry=registry, options=options)
-    compiled = comp.compile(schema, row, dtype, "$")
-    entry = F.when(
-        ~compiled.pred,
-        F.struct(
-            F.lit("$row").alias("column"),
-            F.coalesce(compiled.viol["schema_path"], F.lit("$")).alias("schema_path"),
-            F.coalesce(compiled.viol["keyword"], F.lit("unknown")).alias("keyword"),
-            compiled.viol["description"].alias("description"),
-        ),
+    def build() -> Column:
+        row = F.struct(*[F.col(c).alias(c) for c in df.columns])
+        dtype = df.select(row.alias("_row")).schema["_row"].dataType
+        comp = Compiler(registry=registry, options=options)
+        compiled = comp.compile(schema, row, dtype, "$")
+        return F.array_compact(F.array(_entry(F.lit("$row"), compiled)))
+
+    # the input schema fixes the row struct's type (names, order, nesting)
+    arr = cached(
+        ("validate_row_object", schema, registry, options, df.schema), build
     )
-    annotated = df.withColumn(VIOLATIONS_COL, F.array_compact(F.array(entry))).withColumn(
+    annotated = df.withColumn(VIOLATIONS_COL, arr).withColumn(
         PARTITION_COL, F.spark_partition_id()
     )
     return _result_from_annotated(annotated, key)
