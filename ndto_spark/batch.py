@@ -5,10 +5,14 @@ check decoded dimensions/format against the declared columns, and compare
 decoded pixels against the deterministic per-row reference at PSNR ≥ 40 dB
 (input_hint per-row invariant), plus exact caption equality. All run as
 pandas UDFs over Arrow batches — zero per-row Python crossings, one
-JVM→Python round trip per ~10k-row batch.
+JVM→Python round trip per Arrow batch (2048 rows in the bench sessions:
+``spark.sql.execution.arrow.maxRecordsPerBatch``, see CLAUDE.md).
 
-Design rule (SURVEY.md §4): image rules live in their OWN projection so the
-metadata-only rules never force the parquet scan to read ``bytes``.
+The check columns come as one cached (chk, violations) pair
+(``_check_columns``). ``images.validate_images`` puts them in the same
+projection as the metadata rules, so its one annotated scan reads ``bytes``
+once; ``images.validate_images_metadata`` leaves them out and its scan
+never reads ``bytes``.
 """
 
 from __future__ import annotations
@@ -25,6 +29,7 @@ from pyspark.sql.functions import pandas_udf
 
 from . import codecs, fixtures
 from .compiler import cached
+from .runner import PARTITION_COL, VIOLATIONS_COL, _result_from_annotated
 
 IMAGE_CHECK_TYPE = T.StructType(
     [
@@ -91,7 +96,7 @@ def image_check_udf(seed: int):
             image_id.fillna("").str.match(_ID_RE.pattern)
         ).to_numpy(dtype=bool, copy=False)
         for i in np.flatnonzero(valid):
-            rid = int(image_id.iat[i][4:], 16)
+            rid = fixtures.row_id_of(image_id.iat[i])
             pix = pixels_list[i]
             if pix is not None:
                 p = codecs.psnr(fixtures.image_pixels(seed, rid), pix)
@@ -125,31 +130,33 @@ def image_batch_violations(
     violations (they are independent physical checks, unlike the reference's
     single-value short-circuit — documented extension).
     """
+    annotated = _annotate(df, seed, key, min_psnr)
+    return _result_from_annotated(annotated, key).violations
+
+
+def _annotate(
+    df: DataFrame,
+    seed: int,
+    key: str,
+    min_psnr: float,
+    first: Optional[Column] = None,
+) -> DataFrame:
+    """(key, violations, partition_id): the batch checks' violations array,
+    after the ``first`` violations array when one is given. Both arrays and
+    the check UDF call sit in one projection, so ``bytes`` is read once."""
     # seed picks the references the UDF regenerates; min_psnr is folded
     # into the entries as a literal
     chk, violations = cached(
         ("image_batch_violations", seed, key, min_psnr),
         lambda: _check_columns(seed, key, min_psnr),
     )
-    annotated = df.select(
-        F.col(key), F.col("w"), F.col("h"), F.col("fmt"), chk,
-        F.spark_partition_id().alias("partition_id"),
-    ).select(
-        F.col(key), violations.alias("violations"), "partition_id"
-    )
-    # explode_outer + post-filter (cf. runner._result_from_annotated): keeps
-    # the optimizer from expanding the violations alias into an inferred
-    # pre-Generate filter and re-evaluating the entry expressions per row
-    return annotated.select(
-        F.col(key), F.explode_outer("violations").alias("v"), "partition_id"
-    ).filter(F.col("v").isNotNull()).select(
-        key,
-        F.col("v.column").alias("column"),
-        F.col("v.schema_path").alias("schema_path"),
-        F.col("v.keyword").alias("keyword"),
-        F.col("v.description").alias("description"),
-        "partition_id",
-    )
+    cols = [F.col(key), F.col("w"), F.col("h"), F.col("fmt"), chk]
+    if first is not None:
+        cols.append(first.alias("_first"))
+        violations = F.concat(F.col("_first"), violations)
+    return df.select(
+        *cols, F.spark_partition_id().alias(PARTITION_COL)
+    ).select(F.col(key), violations.alias(VIOLATIONS_COL), PARTITION_COL)
 
 
 def _check_columns(

@@ -182,9 +182,10 @@ def run_resumable(
         # - row count + every per-column metric fold into ONE single-row
         #   aggregate over the persisted subset (the old column_stats call
         #   was a third action).
-        # The persist stays because validate_fn fans the subset into
-        # several branches (metadata / batch / per-partition counts) —
-        # without it each branch re-reads the bucket from the source.
+        # The persist stays because validate_fn fans the subset into two
+        # branches (validate_images: the annotated scan and the uniqueness
+        # count) — without it each branch re-reads the bucket from the
+        # source.
         # MEMORY_AND_DISK so oversized buckets spill instead of OOMing;
         # released before the next bucket starts. An input-side Observation
         # cannot replace the aggregate: the observed node would sit in

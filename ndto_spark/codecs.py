@@ -65,23 +65,27 @@ def png_decode(data: bytes) -> np.ndarray:
     """Decode an 8-bit RGB PNG (filters 0-4) to an (h, w, 3) uint8 array.
 
     Raises ValueError on malformed input (the 'bytes that do not decode'
-    violation class).
+    violation class), a payload cut at any point included.
     """
     if data[:8] != PNG_MAGIC:
         raise ValueError("not a PNG: bad magic")
     pos = 8
     w = h = None
     idat = b""
-    while pos + 8 <= len(data):
+    while True:
+        if pos + 12 > len(data):
+            raise ValueError("truncated PNG: no IEND chunk")
         (length,) = struct.unpack(">I", data[pos : pos + 4])
+        if pos + 12 + length > len(data):
+            raise ValueError("truncated chunk")
         tag = data[pos + 4 : pos + 8]
         payload = data[pos + 8 : pos + 8 + length]
-        if len(payload) != length:
-            raise ValueError("truncated chunk")
-        crc = struct.unpack(">I", data[pos + 8 + length : pos + 12 + length])[0]
+        (crc,) = struct.unpack(">I", data[pos + 8 + length : pos + 12 + length])
         if zlib.crc32(tag + payload) & 0xFFFFFFFF != crc:
             raise ValueError("chunk CRC mismatch")
         if tag == b"IHDR":
+            if length != 13:
+                raise ValueError("bad IHDR length")
             w, h, depth, ctype, _, _, interlace = struct.unpack(">IIBBBBB", payload)
             if depth != 8 or ctype != 2 or interlace != 0:
                 raise ValueError("unsupported PNG variant (need RGB8, no interlace)")
@@ -92,20 +96,20 @@ def png_decode(data: bytes) -> np.ndarray:
         pos += 12 + length
     if w is None or not idat:
         raise ValueError("missing IHDR/IDAT")
-    raw = zlib.decompress(idat)
+    raw = _inflate(idat)
     stride = w * 3
     if len(raw) != h * (stride + 1):
         raise ValueError("bad scanline data size")
     rows = np.frombuffer(raw, dtype=np.uint8).reshape(h, stride + 1)
     filters = rows[:, 0]
-    out = np.zeros((h, stride), dtype=np.uint8)
-    for y in range(h):
-        line = rows[y, 1:].copy()
+    # filter-0 rows are already final; unfilter the others in ascending
+    # order, so each one reads its already-unfiltered predecessor
+    out = rows[:, 1:].copy()
+    for y in np.flatnonzero(filters):
         f = filters[y]
+        line = out[y]
         prev = out[y - 1] if y > 0 else np.zeros(stride, dtype=np.uint8)
-        if f == 0:
-            out[y] = line
-        elif f == 2:
+        if f == 2:
             out[y] = line + prev
         elif f in (1, 3, 4):
             cur = line.astype(np.uint16)
@@ -131,6 +135,14 @@ def png_decode(data: bytes) -> np.ndarray:
     return out.reshape(h, w, 3)
 
 
+def _inflate(data: bytes) -> bytes:
+    """zlib.decompress, with a cut or corrupt stream raised as ValueError."""
+    try:
+        return zlib.decompress(data)
+    except zlib.error:
+        raise ValueError("truncated or corrupt zlib stream") from None
+
+
 def fake_jpeg_encode(pixels: np.ndarray, quality: int = 90) -> bytes:
     """STUB lossy codec (see module docstring): quantizes pixels by step q.
 
@@ -152,8 +164,10 @@ def fake_jpeg_encode(pixels: np.ndarray, quality: int = 90) -> bytes:
 def fake_jpeg_decode(data: bytes) -> np.ndarray:
     if data[:8] != FAKE_JPEG_MAGIC:
         raise ValueError("not an NDTOJPG1 payload: bad magic")
+    if len(data) < 17:
+        raise ValueError("truncated NDTOJPG1 header")
     w, h, _step = struct.unpack(">IIB", data[8:17])
-    raw = zlib.decompress(data[17:])
+    raw = _inflate(data[17:])
     if len(raw) != w * h * 3:
         raise ValueError("bad pixel payload size")
     return np.frombuffer(raw, dtype=np.uint8).reshape(h, w, 3).copy()

@@ -48,8 +48,29 @@ IMAGES_SCHEMA = (
 )
 
 
+# One Philox for every _rng call: constructing a Philox reads OS entropy it
+# then discards (~17 us), twice per row in the batch validators.
+_PHILOX = np.random.Philox(0)
+_GEN = np.random.Generator(_PHILOX)
+
+
 def _rng(seed: int, row_id: int) -> np.random.Generator:
-    return np.random.Generator(np.random.Philox(key=[seed, row_id]))
+    """The stream of ``Generator(Philox(key=[seed, row_id]))``: the shared
+    Philox is reset to that key at counter 0 with an empty buffer. The
+    returned generator is valid only until the next ``_rng`` call, from any
+    thread of the process."""
+    _PHILOX.state = {
+        "bit_generator": "Philox",
+        "state": {
+            "counter": np.zeros(4, dtype=np.uint64),
+            "key": np.array([seed, row_id], dtype=np.uint64),
+        },
+        "buffer": np.zeros(4, dtype=np.uint64),
+        "buffer_pos": 4,
+        "has_uint32": 0,
+        "uinteger": 0,
+    }
+    return _GEN
 
 
 def image_pixels(seed: int, row_id: int) -> np.ndarray:

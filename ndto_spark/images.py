@@ -3,11 +3,18 @@
 Combines the three rule families over one input:
 
 1. metadata rules — compiled Catalyst predicates over (image_id, fmt, w, h,
-   caption); this branch NEVER touches ``bytes`` so the parquet scan prunes
-   the heavy column (check `.explain` ReadSchema).
+   caption);
 2. batch rules — Arrow pandas-UDF decode/dimension/format/PSNR/caption
-   checks over ``bytes`` (see batch.py).
+   checks over ``bytes`` (see batch.py);
 3. table rules — key uniqueness (the only shuffle in the pipeline).
+
+``validate_images`` checks each row once, as ndto's generated
+``is_valid/1`` does: one projection computes the metadata rule array and
+the batch checks side by side, so one annotated scan reads ``bytes`` once;
+the uniqueness count is the second and last scan.
+``validate_images_metadata`` runs families 1 and 3 only: that branch NEVER
+touches ``bytes``, so its parquet scan prunes the heavy column (check
+`.explain` ReadSchema).
 
 Output: the engine contract violations + per-partition verdicts.
 """
@@ -20,8 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import table_rules
-from .batch import image_batch_violations
-from .runner import validate
+from .batch import _annotate
+from .runner import PARTITION_COL, RuleSet, _result_from_annotated, validate
 
 IMAGE_METADATA_RULES = {
     "image_id": {"type": "string", "pattern": "^img_[0-9a-f]{16}$"},
@@ -88,38 +95,34 @@ def validate_images(
     ``phash`` into that many range buckets before validation (the north
     rule's 'explicit repartitioning on phash ranges to bound skew').
     repartitionByRange samples the key distribution, so hot ranges split
-    evenly; column pruning pushes through the exchange, so the metadata
-    branch shuffles only its narrow columns while the Arrow branch's
-    ``bytes`` shuffle is the price of a skew-balanced decode stage. Leave
+    evenly; column pruning pushes through the exchange, so the uniqueness
+    branch shuffles only the key while the annotated branch's ``bytes``
+    shuffle is the price of a skew-balanced decode stage. Leave
     None when the input layout is already balanced (e.g. the bench's
     synthetic table) — checkpoint.run_resumable provides the same bounding
     via stored phash quantile buckets for resumable runs.
     """
     if phash_partitions is not None:
         df = df.repartitionByRange(phash_partitions, F.col("phash"))
-    meta = validate(df, IMAGE_METADATA_RULES, key=key)
-    batch_v = image_batch_violations(df, seed, key=key, min_psnr=min_psnr)
-    violations = meta.violations.unionByName(batch_v)
+    meta = RuleSet(IMAGE_METADATA_RULES).violations_array(df)
+    annotated = _annotate(df, seed, key, min_psnr, first=meta)
+    res = _result_from_annotated(annotated, key)
+    violations, verdicts = res.violations, res.verdicts
     if check_uniqueness:
-        # table-level: no single partition
-        dup_v = _uniqueness_violations(df, key).withColumn("partition_id", F.lit(-1))
-        violations = violations.unionByName(dup_v)
-    rows_per_part = df.groupBy(
-        F.spark_partition_id().alias("partition_id")
-    ).agg(F.count(F.lit(1)).alias("n_rows"))
-    viols_per_part = violations.groupBy("partition_id").agg(
-        F.count(F.lit(1)).alias("n_violations")
-    )
-    # full outer: table-level checks (uniqueness) report under partition -1
-    verdicts = (
-        rows_per_part.join(viols_per_part, "partition_id", "full_outer")
-        .select(
-            "partition_id",
-            F.coalesce("n_rows", F.lit(0)).alias("n_rows"),
-            F.coalesce("n_violations", F.lit(0)).alias("n_violations"),
+        # table-level: no single partition, so it reports under -1; a
+        # grouped count over no duplicates is no row, so a table without
+        # duplicates gets no -1 verdict
+        dup_v = _uniqueness_violations(df, key).withColumn(
+            PARTITION_COL, F.lit(-1)
         )
-        .withColumn("pass", F.col("n_violations") == 0)
-    )
+        violations = violations.unionByName(dup_v)
+        verdicts = verdicts.unionByName(
+            dup_v.groupBy(PARTITION_COL).agg(
+                F.lit(0).cast("bigint").alias("n_rows"),
+                F.count(F.lit(1)).alias("n_violations"),
+                F.lit(False).alias("pass"),
+            )
+        )
     return ImagesResult(violations=violations, verdicts=verdicts)
 
 

@@ -7,10 +7,15 @@ no clean row may produce one.
 
 from __future__ import annotations
 
+import struct
+import zlib
+from collections import Counter
+
 import numpy as np
+import pandas as pd
 import pytest
 
-from ndto_spark import codecs, fixtures
+from ndto_spark import batch, codecs, fixtures
 
 N = 400
 SEED = 42
@@ -46,6 +51,116 @@ def test_corrupt_bytes_raise():
         codecs.png_decode(data[: len(data) // 2])
     with pytest.raises(ValueError):
         codecs.decode(b"garbage bytes here!")
+
+
+def _chunk(tag: bytes, payload: bytes) -> bytes:
+    crc = zlib.crc32(tag + payload) & 0xFFFFFFFF
+    return struct.pack(">I", len(payload)) + tag + payload + struct.pack(">I", crc)
+
+
+def _png(w: int, h: int, idat: bytes) -> bytes:
+    """An RGB8 PNG around a given IDAT payload, built by hand."""
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
+    return (
+        codecs.PNG_MAGIC
+        + _chunk(b"IHDR", ihdr)
+        + _chunk(b"IDAT", idat)
+        + _chunk(b"IEND", b"")
+    )
+
+
+def _cut_payloads() -> dict[str, bytes]:
+    pixels = fixtures.image_pixels(SEED, 5)
+    h, w = pixels.shape[:2]
+    png = codecs.png_encode(pixels)
+    jpeg = codecs.fake_jpeg_encode(pixels)
+    raw = np.concatenate(
+        [np.zeros((h, 1), dtype=np.uint8), pixels.reshape(h, w * 3)], axis=1
+    ).tobytes()
+    return {
+        "png_in_magic": png[:5],
+        "png_in_ihdr_crc": png[:31],
+        "png_in_idat": png[: len(png) // 2],
+        "png_in_idat_crc": png[:-14],
+        "png_without_iend": png[:-12],
+        "png_in_iend": png[:-6],
+        "png_cut_zlib_stream": _png(w, h, zlib.compress(raw)[:-5]),
+        "jpeg_in_header": jpeg[:12],
+        "jpeg_cut_zlib_stream": jpeg[:-5],
+    }
+
+
+@pytest.mark.parametrize("case", sorted(_cut_payloads()))
+def test_cut_payload_raises_value_error(case):
+    data = _cut_payloads()[case]
+    with pytest.raises(ValueError):
+        codecs.decode(data)
+    # the check kernel reports the plain ValueError in the $.decode text
+    out = batch.image_check_udf(SEED).func(
+        pd.Series([fixtures.image_id_str(SEED, 5)]),
+        pd.Series([data]),
+        pd.Series([fixtures.caption_text(SEED, 5)]),
+    )
+    assert not out["decode_ok"][0]
+    assert out["err"][0].startswith("ValueError: ")
+
+
+@pytest.mark.parametrize("fmt", ["png", "jpeg"])
+def test_every_cut_point_raises_value_error(fmt):
+    pixels = fixtures.image_pixels(SEED, 6)
+    data = (
+        codecs.png_encode(pixels)
+        if fmt == "png"
+        else codecs.fake_jpeg_encode(pixels)
+    )
+    for cut in range(len(data)):
+        with pytest.raises(ValueError):
+            codecs.decode(data[:cut])
+    assert codecs.decode(data)[1].shape == pixels.shape
+
+
+def _unfilter_reference(filters: list[int], lines: np.ndarray) -> np.ndarray:
+    """PNG spec unfiltering, one byte at a time (3 bytes per pixel)."""
+    h, stride = lines.shape
+    out = [[0] * stride for _ in range(h)]
+    for y in range(h):
+        for x in range(stride):
+            a = out[y][x - 3] if x >= 3 else 0
+            b = out[y - 1][x] if y > 0 else 0
+            c = out[y - 1][x - 3] if y > 0 and x >= 3 else 0
+            f = filters[y]
+            if f == 0:
+                pred = 0
+            elif f == 1:
+                pred = a
+            elif f == 2:
+                pred = b
+            elif f == 3:
+                pred = (a + b) // 2
+            else:
+                p = a + b - c
+                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+                pred = a if pa <= pb and pa <= pc else b if pb <= pc else c
+            out[y][x] = (int(lines[y, x]) + pred) % 256
+    return np.array(out, dtype=np.uint8)
+
+
+def test_png_filters_1_to_4_match_reference_unfilter():
+    filters = [1, 0, 2, 3, 4, 0, 4, 2]
+    h, w = len(filters), 5
+    lines = np.random.default_rng(3).integers(
+        0, 256, size=(h, w * 3), dtype=np.uint8
+    )
+    raw = b"".join(bytes([f]) + lines[y].tobytes() for y, f in enumerate(filters))
+    decoded = codecs.png_decode(_png(w, h, zlib.compress(raw)))
+    expected = _unfilter_reference(filters, lines).reshape(h, w, 3)
+    assert np.array_equal(decoded, expected)
+
+
+def test_png_bad_filter_byte_raises():
+    raw = b"\x05" + bytes(6)
+    with pytest.raises(ValueError, match="bad filter byte 5"):
+        codecs.png_decode(_png(2, 1, zlib.compress(raw)))
 
 
 def test_make_row_deterministic():
@@ -225,3 +340,58 @@ def test_metadata_consistency_verdicts_per_seeded_class(spark):
     # clean row: everything consistent
     r10 = by_id["img_000000000000000a"][0]
     assert (r10.decode_ok, r10.dims_match, r10.fmt_match) == (True, True, True)
+
+
+def test_validate_images_is_one_annotated_scan(spark, tmp_path):
+    """The verdicts plan reads the table twice: the annotated scan (the
+    only one that reads bytes, with the one Arrow UDF) and the uniqueness
+    count; no join. Each verdict agrees with the violations and the input
+    partitions it reports on."""
+    from pyspark.sql import functions as F
+
+    from ndto_spark.images import validate_images
+
+    path = str(tmp_path / "images")
+    fixtures.synth_images(spark, N, n_partitions=4, seed=SEED).write.parquet(path)
+    df = spark.read.parquet(path)
+    res = validate_images(df, seed=SEED)
+
+    plan = res.verdicts._jdf.queryExecution().executedPlan().toString()
+    scans = [line for line in plan.splitlines() if "FileScan parquet" in line]
+    assert plan.count("ArrowEvalPython") == 1
+    assert len(scans) == 2
+    assert sum("bytes" in line.split("ReadSchema:")[1] for line in scans) == 1
+    assert "SortMergeJoin" not in plan
+
+    verdicts = {v.partition_id: v for v in res.verdicts.collect()}
+    per_part = Counter(v.partition_id for v in res.violations.collect())
+    assert set(per_part) <= set(verdicts)
+    for pid, v in verdicts.items():
+        assert v.n_violations == per_part[pid]
+        assert v["pass"] == (v.n_violations == 0)
+    rows = {
+        r.pid: r["count"]
+        for r in df.groupBy(F.spark_partition_id().alias("pid")).count().collect()
+    }
+    assert {p: v.n_rows for p, v in verdicts.items() if p != -1} == rows
+
+    n_dup_keys = (
+        df.filter(F.col("image_id").isNotNull())
+        .groupBy("image_id")
+        .count()
+        .filter("count > 1")
+        .count()
+    )
+    assert n_dup_keys == len(fixtures.expected_violation_classes(N)[8]) > 0
+    assert (verdicts[-1].n_rows, verdicts[-1].n_violations) == (0, n_dup_keys)
+    assert not verdicts[-1]["pass"]
+
+
+def test_validate_images_without_duplicates_has_no_table_verdict(spark):
+    from ndto_spark.images import validate_images
+
+    # the first duplicate row is row 108 (row_id % 100 == 8, copy of 96)
+    df = fixtures.synth_images(spark, 100, n_partitions=2, seed=SEED)
+    verdicts = validate_images(df, seed=SEED).verdicts.collect()
+    assert -1 not in {v.partition_id for v in verdicts}
+    assert sum(v.n_rows for v in verdicts) == 100
