@@ -19,6 +19,12 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import _spread
+
+# largest query/eval side a driver-collect fast path embeds in its scoring
+# task; a larger side takes the expression path
+MAX_DRIVER_QUERIES = 4096
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -70,7 +76,6 @@ def brute_force_topk(
         and isinstance(q_vec_dt, T.ArrayType)
         and isinstance(q_vec_dt.elementType, T.DoubleType)
     )
-    MAX_DRIVER_QUERIES = 4096
     q_rows = None
     if is_double_vec:
         q_rows = queries.select(
@@ -81,8 +86,6 @@ def brute_force_topk(
     if q_rows is not None:
         import numpy as np
         import pandas as pd
-
-        from .dedup import _spread
 
         q_ids = [r["qid"] for r in q_rows if r["qid"] is not None]
         q_vecs = [
@@ -378,7 +381,6 @@ def lsh_topk(
     num_planes: int = 8,
     num_tables: int = 4,
     seed: int = 42,
-    spread: bool = True,
 ) -> DataFrame:
     """Approximate cosine top-k: LSH-bucketed candidates, exact re-rank.
 
@@ -400,15 +402,10 @@ def lsh_topk(
         return lsh_buckets_arrow(df, id_col, vec_col, idname, tables, dim)
 
     qb = F.broadcast(bucket_ids(queries, "query_id"))
-    corpus_rows = corpus
-    if spread:
-        # the Arrow stage must not ride the file-layout-bound scan stage
-        # (one compact parquet file = ONE task); round-robin the raw rows
-        # first so bucketing parallelizes (see dedup._spread)
-        from .dedup import _spread
-
-        corpus_rows = _spread(corpus.select(id_col, vec_col))
-    cb = bucket_ids(corpus_rows, "neighbor_id")
+    # the Arrow stage must not ride the file-layout-bound scan stage
+    # (one compact parquet file = ONE task); round-robin the raw rows
+    # first so bucketing parallelizes (see dedup._spread)
+    cb = bucket_ids(_spread(corpus.select(id_col, vec_col)), "neighbor_id")
     # candidate pairs dedup'd on bare ids (one shuffle of 2 ids per pair)
     cands = (
         cb.join(qb, "bucket")
@@ -496,8 +493,6 @@ def kmeans_centroids(
     import math
 
     _check_codebook_size(k, dim)
-
-    from .dedup import _spread
 
     # _spread before persisting: persist() caches the SCAN's partitioning,
     # and a single-row-group input would otherwise run every Lloyd's
@@ -815,8 +810,6 @@ def ivf_topk(
     # (tiny, broadcast, and they need the n_probe sorted-slice shape).
     # Mixed-length codebooks (impossible from the sampled/trained builders
     # but allowed by the signature) keep the expression path.
-    from .dedup import _spread
-
     cent_dims = {len(v) for _, v in cents}
     if len(cent_dims) == 1:
         corpus_lists = assign_cids_arrow(

@@ -116,8 +116,21 @@ def _spread(df: DataFrame) -> DataFrame:
     expression work to the post-exchange stage, which always has
     shuffle.partitions tasks. The extra shuffle moves raw rows only; on
     well-split 100 TB inputs it is noise next to the expression work it
-    parallelizes (callers expose spread=False to elide it)."""
+    parallelizes.
+
+    A frame whose analyzed plan already is that round-robin
+    (``Repartition(n, shuffle=true)`` under only Project/Filter nodes) is
+    returned unchanged, so spreading twice costs one exchange."""
     n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+    node = df._jdf.queryExecution().analyzed()
+    while node.nodeName() in ("Project", "Filter"):
+        node = node.child()
+    if (
+        node.nodeName() == "Repartition"
+        and node.shuffle()
+        and node.numPartitions() == n
+    ):
+        return df
     return df.repartition(n)
 
 
@@ -128,7 +141,6 @@ def ngram_jaccard_pairs(
     k: int = 5,
     threshold: float = 0.5,
     max_shingle_df: Optional[int] = None,
-    spread: bool = True,
 ) -> DataFrame:
     """Pairs (id_a < id_b) with k-token-shingle Jaccard ≥ threshold.
 
@@ -161,8 +173,7 @@ def ngram_jaccard_pairs(
     #    DF-count groupBy on their join/group key, so none of them add a
     #    further shuffle of the exploded data.
     rows = df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("_t"))
-    if spread:
-        rows = _spread(rows)  # shingling must not ride the 1-task scan
+    rows = _spread(rows)  # shingling must not ride the 1-task scan
     # explode_outer (not explode): InferFiltersFromGenerate would infer a
     # size(word_shingles(..)) > 0 filter BELOW a plain Generate and predicate
     # pushdown expands the whole shingling expression into it — re-evaluating
@@ -257,7 +268,6 @@ def _minhash_base_sigs(
     num_hashes: int,
     bands: int,
     seed: int,
-    spread: bool,
     materialize: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Shared MinHash plumbing: the hashed-shingle frame ``base``
@@ -287,8 +297,7 @@ def _minhash_base_sigs(
             f"num_hashes ({num_hashes}) must be divisible by bands ({bands})"
         )
     rows = df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("_t"))
-    if spread:
-        rows = _spread(rows)  # shingling must not ride the 1-task scan
+    rows = _spread(rows)  # shingling must not ride the 1-task scan
     proj = rows.select(
         "doc",
         F.transform(word_shingles(F.col("_t"), k), md5_low32).alias("hv"),
@@ -365,7 +374,6 @@ def minhash_lsh_pairs(
     bands: int = 8,
     seed: int = 42,
     verify_threshold: Optional[float] = 0.5,
-    spread: bool = True,
 ) -> DataFrame:
     """Candidate near-dup pairs via MinHash LSH banding, optionally verified.
 
@@ -376,7 +384,7 @@ def minhash_lsh_pairs(
     by the (bands, r) S-curve.
     """
     base, sigs = _minhash_base_sigs(
-        df, id_col, text_col, k, num_hashes, bands, seed, spread,
+        df, id_col, text_col, k, num_hashes, bands, seed,
         materialize=verify_threshold is not None,
     )
     cands = _lsh_candidates(sigs, num_hashes, bands)
@@ -448,7 +456,6 @@ def minhash_estimate_pairs(
     bands: int = 8,
     seed: int = 42,
     est_threshold: float = 0.5,
-    spread: bool = True,
 ) -> DataFrame:
     """Signature-ONLY near-dup pairs: LSH band candidates scored by the
     MinHash Jaccard ESTIMATE — the fraction of agreeing signature
@@ -476,7 +483,7 @@ def minhash_estimate_pairs(
     zip_with/filter pass over two bounded arrays per CANDIDATE pair.
     """
     _, sigs = _minhash_base_sigs(
-        df, id_col, text_col, k, num_hashes, bands, seed, spread
+        df, id_col, text_col, k, num_hashes, bands, seed
     )
     cands = _lsh_candidates(sigs, num_hashes, bands)
     sa = sigs.select(F.col("doc").alias("id_a"), F.col("sig").alias("sig_a"))
@@ -831,7 +838,7 @@ def simhash(text_col: Column, bits: int = 16) -> Column:
 
 def simhash_dup_candidates(
     df: DataFrame, id_col: str, text_col: str, bits: int = 16,
-    spread: bool = True, max_examples: int = 8,
+    max_examples: int = 8,
 ) -> DataFrame:
     """Docs sharing an identical simhash value:
     (simhash, n_docs, example_ids).
@@ -852,8 +859,7 @@ def simhash_dup_candidates(
     downstream shuffles anyway.
     """
     rows = df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("_t"))
-    if spread:
-        rows = _spread(rows)  # token hashing must not ride the 1-task scan
+    rows = _spread(rows)  # token hashing must not ride the 1-task scan
     hashed = rows.select(
         "doc",
         F.transform(tokens(F.col("_t")), md5_low32).alias("hv"),
@@ -893,7 +899,6 @@ def embedding_near_dups(
     num_tables: int = 6,
     seed: int = 7,
     exact: bool = False,
-    spread: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine ≥ τ).
 
@@ -911,7 +916,7 @@ def embedding_near_dups(
         F.col(id_col).alias("vid"),
         F.col(vec_col).cast("array<double>").alias("vec"),
     )
-    if spread and not exact:
+    if not exact:
         # plane dot products must not ride the 1-task scan; exact mode
         # already repartition(64)s its streamed side below, so a _spread
         # there is a redundant extra Exchange on the broadcast-NLJ path
@@ -987,7 +992,6 @@ def decontaminate(
     text_col: str,
     bench_text_col: Optional[str] = None,
     k: int = 5,
-    spread: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: flag corpus docs sharing any k-token
     shingle with an evaluation set — (id, n_hits) for contaminated docs.
@@ -1011,8 +1015,7 @@ def decontaminate(
         .dropDuplicates(["shingle"])
     )
     rows = df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("_t"))
-    if spread:
-        rows = _spread(rows)  # shingling must not ride the 1-task scan
+    rows = _spread(rows)  # shingling must not ride the 1-task scan
     d = (
         rows.select(
             "doc",
@@ -1228,7 +1231,6 @@ def line_dedup(
     text_col: str,
     sep: str = "\n",
     min_df: int = 2,
-    spread: bool = True,
 ) -> DataFrame:
     """CCNet-style duplicated-line removal (Wenzek et al. 2019, public):
     drop every line whose exact content appears in >= ``min_df`` DISTINCT
@@ -1249,8 +1251,7 @@ def line_dedup(
     only).
     """
     rows = df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("_t"))
-    if spread:
-        rows = _spread(rows)  # line splitting must not ride a 1-task scan
+    rows = _spread(rows)  # line splitting must not ride a 1-task scan
     # explode_outer: InferFiltersFromGenerate would otherwise clone the
     # split() below an inferred size()>0 filter (see ngram_jaccard_pairs)
     lines = (
@@ -1342,7 +1343,6 @@ def bloom_dedup_flags(
     text_col: str,
     m_bits: int = 1 << 17,
     k: int = 4,
-    spread: bool = True,
 ) -> DataFrame:
     """Incremental cross-corpus dedup: flag rows of ``new`` whose content
     hash is (probably) already in ``prev``, Bloom-first.
@@ -1362,8 +1362,7 @@ def bloom_dedup_flags(
         )
     )
     n = new.select(F.col(id_col).alias("pid"), F.md5(F.col(text_col)).alias("ph"))
-    if spread:
-        n = _spread(n)
+    n = _spread(n)
     per = (
         n.select(
             "pid",
@@ -1510,8 +1509,7 @@ def semantic_dedup(
 
 
 def simhash_members(
-    df: DataFrame, id_col: str, text_col: str, bits: int = 16,
-    spread: bool = True,
+    df: DataFrame, id_col: str, text_col: str, bits: int = 16
 ) -> DataFrame:
     """(id_col, simhash) — the per-doc simhash MEMBERSHIP frame: every doc
     tagged with its group key, singletons included. The building block the
@@ -1523,8 +1521,7 @@ def simhash_members(
     per-bit votes read an attribute instead of re-hashing per bit.
     """
     rows = df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("_t"))
-    if spread:
-        rows = _spread(rows)
+    rows = _spread(rows)
     hashed = rows.select(
         "doc",
         F.transform(tokens(F.col("_t")), md5_low32).alias("hv"),
@@ -1536,8 +1533,7 @@ def simhash_members(
 
 
 def simhash_keepers(
-    df: DataFrame, id_col: str, text_col: str, bits: int = 16,
-    spread: bool = True,
+    df: DataFrame, id_col: str, text_col: str, bits: int = 16
 ) -> DataFrame:
     """(simhash, keeper_id, n_docs) — one keeper (min id) per simhash
     value, singletons included: the GROUPS half of simhash dedup, shaped
@@ -1547,7 +1543,7 @@ def simhash_keepers(
     (min id, count) per group — constant state, mega-cluster-safe with no
     example lists.
     """
-    sh = simhash_members(df, id_col, text_col, bits=bits, spread=spread)
+    sh = simhash_members(df, id_col, text_col, bits=bits)
     return sh.groupBy("simhash").agg(
         F.min(id_col).alias("keeper_id"),
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -1865,10 +1861,11 @@ def semantic_decontaminate(
     bit-identical, not merely close (pinned by the oracle gate). For
     |eval| beyond a few thousand, bucket first (``embedding_near_dups``'
     LSH path) — this operator is deliberately the exact-verdict shape.
-    An eval set with MIXED vector lengths falls back to the expression
-    path (zip_with's null-padding semantics are per-pair there).
+    An eval set with MIXED vector lengths, or more than
+    ``ann.MAX_DRIVER_QUERIES`` rows, falls back to the expression path
+    (zip_with's null-padding semantics are per-pair there).
     """
-    from .ann import dot, norm
+    from . import ann
 
     def _side(df: DataFrame, pre: str) -> DataFrame:
         return (
@@ -1876,19 +1873,19 @@ def semantic_decontaminate(
                 F.col(id_col).alias(f"{pre}id"),
                 F.col(vec_col).cast("array<double>").alias(f"{pre}v"),
             )
-            .withColumn(f"{pre}n", norm(F.col(f"{pre}v")))
+            .withColumn(f"{pre}n", ann.norm(F.col(f"{pre}v")))
             .filter(F.col(f"{pre}n") > 0)
         )
 
-    ev_vecs = [
-        r["v"]
-        for r in evalset.select(
-            F.col(vec_col).cast("array<double>").alias("v")
-        ).collect()
-        if r["v"] is not None
-    ]
+    cap = ann.MAX_DRIVER_QUERIES
+    ev_rows = (
+        evalset.select(F.col(vec_col).cast("array<double>").alias("v"))
+        .limit(cap + 1)
+        .collect()
+    )
+    ev_vecs = [r["v"] for r in ev_rows if r["v"] is not None]
     dims = {len(v) for v in ev_vecs}
-    if len(dims) <= 1:
+    if len(ev_rows) <= cap and len(dims) <= 1:
         import numpy as np
         import pandas as pd
         from pyspark.sql import types as T
@@ -1963,12 +1960,22 @@ def semantic_decontaminate(
             F.col(vec_col).cast("array<double>").alias("_v"),
         )
         # the Arrow stage otherwise inherits the scan's file-layout-bound
-        # task count (one compact parquet file = one core)
-        return _spread(src).mapInPandas(score, out_schema)
+        # task count (one compact parquet file = one core); the kernel
+        # scores rows, so duplicate (and NULL) ids merge per id here, as
+        # the expression path's groupBy does
+        return (
+            _spread(src)
+            .mapInPandas(score, out_schema)
+            .groupBy(id_col)
+            .agg(
+                F.sum("n_hits").cast("bigint").alias("n_hits"),
+                F.max("max_sim").alias("max_sim"),
+            )
+        )
 
     co = _side(corpus, "c_")
     ev = F.broadcast(_side(evalset, "e_"))
-    sim = dot(F.col("c_v"), F.col("e_v")) / (F.col("c_n") * F.col("e_n"))
+    sim = ann.dot(F.col("c_v"), F.col("e_v")) / (F.col("c_n") * F.col("e_n"))
     hits = co.crossJoin(ev).select(
         "c_id", sim.alias("sim")
     ).filter(F.col("sim") >= F.lit(float(threshold)))
@@ -1988,7 +1995,6 @@ def dup_spans(
     text_col: str,
     k: int = 20,
     min_count: int = 2,
-    spread: bool = True,
 ) -> DataFrame:
     """Repeated-substring span detection — the detection half of
     ExactSubstr dedup (Lee et al., "Deduplicating Training Data Makes
@@ -2006,15 +2012,14 @@ def dup_spans(
     only (doc, hash) longs ever shuffle — never text. One
     ``repartition(hash)`` Exchange is shared (ReuseExchange) by the
     corpus-wide gram count and the join back, and the per-doc rollup is
-    partially aggregated map-side. ``spread`` pins the hashing stage to
-    shuffle.partitions tasks (file-layout-bound scans otherwise run it
-    1-task). Memory per task is bounded by gram-count partial-agg state.
+    partially aggregated map-side. The hashing stage runs behind _spread
+    (file-layout-bound scans otherwise run it 1-task). Memory per task is
+    bounded by gram-count partial-agg state.
     """
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
     rows = df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("_t"))
-    if spread:
-        rows = _spread(rows)  # gram hashing must not ride the 1-task scan
+    rows = _spread(rows)  # gram hashing must not ride the 1-task scan
 
     def _gram_hashes(t: Column) -> Column:
         n = F.length(t) - F.lit(k - 1)
@@ -2071,7 +2076,6 @@ def cross_group_dup_matrix(
     bands: int = 16,
     seed: int = 42,
     verify_threshold: Optional[float] = 0.5,
-    spread: bool = True,
 ) -> DataFrame:
     """Cross-GROUP duplication matrix — the curation report that tells
     you which sources copy which (mirror crawls, syndication, scraped
@@ -2086,7 +2090,7 @@ def cross_group_dup_matrix(
     """
     pairs = minhash_lsh_pairs(
         df, id_col, text_col, k=k, num_hashes=num_hashes, bands=bands,
-        seed=seed, verify_threshold=verify_threshold, spread=spread,
+        seed=seed, verify_threshold=verify_threshold,
     )
     g = df.select(F.col(id_col), F.col(group_col))
     ga = g.select(

@@ -15,7 +15,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import spill
-from ..dedup import md5_low32, tokens, word_shingles
+from ..dedup import _spread, md5_low32, tokens, word_shingles
 
 # tiny per-language stopword marker sets for the n-gram/stopword heuristic
 LANG_MARKERS: dict[str, list[str]] = {
@@ -169,8 +169,6 @@ def repetition_metrics(
     InferFiltersFromGenerate from re-evaluating the gram construction per
     row (the repo-wide generator rule).
     """
-    from ..dedup import _spread
-
     # _spread before the gram explode (file-layout-bound scans)
     g = (
         _spread(
@@ -229,8 +227,6 @@ def token_stats(
     hapax tail in half.
     """
     from pyspark.sql import Window
-
-    from ..dedup import _spread
 
     # _spread before the tokenize explode (file-layout-bound scans)
     toks = _spread(
@@ -303,8 +299,6 @@ def bm25_scores(
             f"{len(terms)} query terms: bm25_scores caps at 128 (expression "
             "width); split the query or prune terms"
         )
-    from ..dedup import _spread
-
     # _spread before the tokenize explode (file-layout-bound scans)
     base = _spread(
         df.where(
@@ -422,8 +416,6 @@ def dsir_weights(
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     import math
-
-    from ..dedup import _spread
 
     # _spread ahead of the n-gram hashing (file-layout-bound scan tasks)
     base = _spread(
@@ -1023,7 +1015,7 @@ def collocations(
     pattern). The tf joins shuffle the PAIR VOCABULARY (min_pair_tf-pruned)
     against the unigram vocabulary — vocab-sized, never corpus-sized.
     """
-    from ..dedup import _spread, bind
+    from ..dedup import bind
 
     # _spread before both tokenize explodes (file-layout-bound scans); the
     # shared round-robin exchange is reused across the unigram and pair
@@ -1103,8 +1095,6 @@ def token_entropy(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     sort_array + fold (vocab-per-doc sized lists, bounded by doc length);
     two exchanges, both partial-aggregated, no window, no Python.
     """
-    from ..dedup import _spread
-
     # _spread before the tokenize explode (file-layout-bound scans)
     toks = _spread(
         df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("_t"))
@@ -1272,8 +1262,6 @@ def tfidf_top_terms(
 
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    from ..dedup import _spread
-
     # _spread before the tokenize explode (file-layout-bound scans)
     base = _spread(
         df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("_t"))
@@ -1334,7 +1322,7 @@ def lm_score(
     corpus text never re-tokenizes and the scoring joins carry
     (doc, left, right, k) rows only.
     """
-    from ..dedup import _spread, bind, tokens
+    from ..dedup import bind
 
     def _pairs(toks: Column) -> Column:
         n = F.size(toks)
@@ -1424,8 +1412,6 @@ def zipf_fit(
     grp = (
         F.col(group_col) if group_col is not None else F.lit("all")
     ).alias("grp")
-    from ..dedup import _spread
-
     # _spread before the tokenize explode (file-layout-bound scans)
     toks = _spread(
         df.select(grp, F.col(text_col).alias("_t"))

@@ -24,6 +24,7 @@ from pyspark.sql import types as T
 
 from . import spill
 from .compiler import CompileOptions, Compiler, cached
+from .dedup import _spread
 from .runner import (
     PARTITION_COL,
     VIOLATIONS_COL,
@@ -132,6 +133,18 @@ def validate_json_column(
     registry: Optional[dict[str, Schema]] = None,
     options: Optional[CompileOptions] = None,
 ) -> ValidationResult:
+    """Validate the JSON strings in column ``col`` against ``schema``.
+
+    Each value is parsed once with ``from_json`` and checked by the
+    compiled rule tree; a non-NULL value that is not parseable JSON gets
+    one ``json`` violation at ``$.json``. Returns a ValidationResult
+    (annotated rows, violations, per-partition verdicts) keyed by
+    ``key``.
+
+    The input is round-robined first (``dedup._spread``), so
+    ``partition_id`` in the result is the post-spread round-robin
+    partition, not the input's scan partition."""
+
     def build() -> tuple[dict[str, Column], Column]:
         dtype = spec_to_spark_type(schema)
         parsed = {
@@ -162,10 +175,8 @@ def validate_json_column(
     # round-robin ahead of the parse + rule projection (dedup._spread
     # rationale): one compact parquet file is ONE scan task, and the
     # from_json + compiled-rule work would ride it single-core; the
-    # exchange carries only the pruned (key, json) columns. partition_id
-    # is assigned ABOVE the exchange, as before.
-    from .dedup import _spread
-
+    # exchange carries only the pruned (key, json) columns.
+    #
     # PLAN NOTE: parse ONCE. Compiling the rule tree directly against the
     # from_json(...) expression duplicates the parse into every reference
     # (one per keyword check — measured 48 from_json nodes / ~30x slowdown
@@ -183,9 +194,7 @@ def validate_json_column(
     return _result_from_annotated(annotated, key)
 
 
-def infer_json_schema(
-    df: DataFrame, col: str, spread: bool = True
-) -> DataFrame:
+def infer_json_schema(df: DataFrame, col: str) -> DataFrame:
     """Schema INFERENCE over a JSON string column — the reverse direction
     of the validator (reference parses a schema into rules; this derives a
     draft schema FROM data, the first step when no spec exists yet).
@@ -210,11 +219,7 @@ def infer_json_schema(
     (key, type) pairs — bounded by keys x types, partial-aggregated; the
     row total broadcasts back as a 1-row frame.
     """
-    src = df.select(F.col(col).alias("__raw"))
-    if spread:
-        from .dedup import _spread
-
-        src = _spread(src)
+    src = _spread(df.select(F.col(col).alias("__raw")))
     parsed = src.select(
         "__raw",
         F.from_json(F.col("__raw"), "map<string,variant>").alias("__m"),

@@ -1245,8 +1245,9 @@ def q_infer_json_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("}"),
         )
     )
-    # spread=False: the frame above is already round-robined
-    return infer_json_schema(ev.select(js.alias("js")), "js", spread=False)
+    # the frame above is already round-robined, so infer_json_schema's
+    # own _spread leaves it as is
+    return infer_json_schema(ev.select(js.alias("js")), "js")
 
 
 def q_validate_json_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:

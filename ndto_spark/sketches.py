@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from . import spill
+from .dedup import _spread
 
 # same rationale as ann.MAX_CODEBOOK_LITERALS: the counter table is
 # embedded as a literal map in the filter expression; beyond this the
@@ -71,8 +72,7 @@ def _h32(value: Column, j: Column) -> Column:
 
 
 def cms_table(
-    df: DataFrame, col: str, *, depth: int = 4, width: int = 1024,
-    spread: bool = True,
+    df: DataFrame, col: str, *, depth: int = 4, width: int = 1024
 ) -> DataFrame:
     """Build the count-min counter table for ``col`` as a DataFrame
     ``(j, pos, cnt)`` with ``j < depth``, ``pos < width``.
@@ -81,16 +81,14 @@ def cms_table(
     AFTER the explode so CollapseProject cannot re-evaluate it per
     generated row) and one groupBy whose partial aggregation caps per-task
     state at d*w counters. NULL keys are excluded (they are not countable
-    values). ``spread`` round-robins the key column first (dedup._spread):
+    values). The key column is round-robined first (dedup._spread):
     scan parallelism is file-layout-bound, and the depth*|rows| md5 work
     otherwise rides the scan task count (a single-row-group input runs it
     on ONE core); the shuffled payload is one column."""
     _check_sketch_size(depth, width)
-    rows = df.where(F.col(col).isNotNull()).select(F.col(col).alias("__v"))
-    if spread:
-        from .dedup import _spread
-
-        rows = _spread(rows)
+    rows = _spread(
+        df.where(F.col(col).isNotNull()).select(F.col(col).alias("__v"))
+    )
     ex = rows.select(
         "__v",
         F.explode(F.array(*[F.lit(j) for j in range(depth)])).alias("j"),
@@ -189,8 +187,6 @@ def heavy_hitters(
     # aggregates counters from it, the filter job re-reads it with the
     # positions precomputed. _spread first — both passes otherwise ride
     # the scan's file-layout-bound task count.
-    from .dedup import _spread
-
     pos_cols = [
         ((_h32(F.col(col), F.lit(j)) % F.lit(width)).cast("int")).alias(
             f"_p{j}"

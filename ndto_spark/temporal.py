@@ -46,6 +46,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import _spread
+
 _US = 1_000_000
 
 # fixed-width granularities only: calendar units (month/quarter/year) are
@@ -729,8 +731,6 @@ def interval_overlap_join(
     # rationale): the sequence+explode and the join's map side otherwise
     # ride the scan's file-layout-bound task count (one compact parquet
     # file = one core); interval rows are a handful of narrow columns
-    from .dedup import _spread
-
     left = _spread(left)
     right = _spread(right)
 

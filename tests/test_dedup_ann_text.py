@@ -341,7 +341,7 @@ def test_decontaminate_flags_overlapping_docs(spark):
         [(100, "alpha beta gamma delta epsilon")], "doc_id bigint, text string"
     )
     out = {r.doc_id: r.n_hits for r in
-           decontaminate(corpus, bench, "doc_id", "text", k=5, spread=False).collect()}
+           decontaminate(corpus, bench, "doc_id", "text", k=5).collect()}
     # doc 1 shares both 5-shingles of its first 6 tokens? bench has exactly
     # ONE 5-shingle; doc 1 contains it at position 0, doc 3 at position 1
     assert out == {1: 1, 3: 1}
@@ -720,6 +720,60 @@ def test_semantic_decontaminate_flags_and_counts(spark):
         for r in semantic_decontaminate(co, ev, threshold=0.5).collect()
     }
     assert out == {1: (1, 1.0), 2: (2, round(2**-0.5, 9))}
+
+
+def _semantic_rows(df):
+    return sorted(
+        (tuple(r) for r in df.collect()),
+        key=lambda t: (t[0] is None, t[0] or 0),
+    )
+
+
+@pytest.mark.parametrize("path", ["arrow", "mixed_dims", "over_cap"])
+def test_semantic_decontaminate_aggregates_per_id(spark, monkeypatch, path):
+    # duplicate and NULL corpus ids: every path returns ONE row per id
+    from ndto_spark import ann
+    from ndto_spark.dedup import semantic_decontaminate
+
+    co = spark.createDataFrame(
+        [
+            (1, [1.0, 0.0]),
+            (1, [0.9, 0.1]),
+            (None, [1.0, 0.0]),
+            (None, [0.8, 0.2]),
+            (2, [0.0, 1.0]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    ev_rows = [(100, [1.0, 0.0])]
+    if path == "mixed_dims":
+        # a 3-dim eval vector never matches a 2-dim one, and a mixed-length
+        # eval set takes the expression path
+        ev_rows.append((101, [0.0, 0.0, 1.0]))
+    if path == "over_cap":
+        monkeypatch.setattr(ann, "MAX_DRIVER_QUERIES", 0)
+    ev = spark.createDataFrame(ev_rows, "vec_id long, embedding array<double>")
+    got = _semantic_rows(semantic_decontaminate(co, ev, threshold=0.5))
+    assert got == [(1, 2, 1.0), (None, 2, 1.0)]
+
+
+def test_semantic_decontaminate_eval_cap_falls_back(spark, monkeypatch):
+    from ndto_spark import ann
+    from ndto_spark.dedup import semantic_decontaminate
+
+    co = spark.createDataFrame(
+        [(i, [float(i % 3), 1.0, float(i % 5)]) for i in range(1, 25)],
+        "vec_id long, embedding array<double>",
+    )
+    ev = spark.createDataFrame(
+        [(100, [1.0, 1.0, 0.0]), (101, [0.0, 1.0, 1.0]), (102, [2.0, 0.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    uncapped = _semantic_rows(semantic_decontaminate(co, ev, threshold=0.6))
+    assert uncapped
+    monkeypatch.setattr(ann, "MAX_DRIVER_QUERIES", 2)
+    capped = _semantic_rows(semantic_decontaminate(co, ev, threshold=0.6))
+    assert capped == uncapped
 
 
 def test_dup_spans_cross_doc_within_doc_and_short(spark):

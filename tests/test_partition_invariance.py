@@ -61,7 +61,7 @@ def test_minhash_pairs_partition_invariant(spark):
     _assert_invariant(
         spark,
         lambda d: dedup.minhash_lsh_pairs(
-            d, "doc_id", "text", verify_threshold=0.5, spread=False
+            d, "doc_id", "text", verify_threshold=0.5
         ).select("id_a", "id_b"),
     )
 
@@ -69,7 +69,7 @@ def test_minhash_pairs_partition_invariant(spark):
 def test_near_dup_groups_partition_invariant(spark):
     def op(d):
         pairs = dedup.minhash_lsh_pairs(
-            d, "doc_id", "text", verify_threshold=0.5, spread=False
+            d, "doc_id", "text", verify_threshold=0.5
         )
         return dedup.near_dup_groups(d, pairs, "doc_id")
 
@@ -79,9 +79,9 @@ def test_near_dup_groups_partition_invariant(spark):
 def test_simhash_partition_invariant(spark):
     _assert_invariant(
         spark,
-        lambda d: dedup.simhash_dup_candidates(
-            d, "doc_id", "text", spread=False
-        ).withColumn("example_ids", F.col("example_ids").cast("string")),
+        lambda d: dedup.simhash_dup_candidates(d, "doc_id", "text").withColumn(
+            "example_ids", F.col("example_ids").cast("string")
+        ),
     )
 
 

@@ -23,28 +23,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def get_spark(cpus: int):
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ndto_spark-bench-extra")
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
-        .config("spark.default.parallelism", str(max(cpus, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "48g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.files.maxPartitionBytes", "4m")
-        .config("spark.sql.files.openCostInBytes", "1m")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing",
-        )
-        .getOrCreate()
-    )
+from bench import get_spark  # noqa: E402  (the session shape bench.py times)
 
 
 def main() -> None:
