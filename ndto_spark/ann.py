@@ -1,28 +1,50 @@
 """Similarity search over embedding columns (array<float>).
 
 - ``brute_force_topk``: exact cosine top-k — the correctness baseline. The
-  query set is broadcast; similarities are computed expression-side
-  (zip_with + aggregate, whole-stage codegen) and the per-query top-k is
-  taken with an aggregation (slice(sort_array(collect_list))) so the corpus
-  never shuffles more than k rows per query per partition after partial
-  aggregation.
+  query side is collected to the driver and the corpus streams through the
+  vector kernel below; ``two_phase_topk`` keeps the per-query top-k with
+  O(k · partitions) state.
 - ``lsh_topk``: the scale path — random-hyperplane LSH buckets shrink the
   candidate set before the exact re-rank. Recall is tunable via
   (num_planes, num_tables).
+- ``ivf_topk``: coarse-quantizer lists; both sides are assigned by the
+  vector kernel, candidates meet on an equi-join of list ids.
+
+The vector kernel (``_scan``) is the one Arrow path for every cosine and
+projection scorer here and in ``dedup.semantic_decontaminate``. A big side
+streams through ``mapInPandas`` against a driver-side matrix ``W``; each
+batch decodes into a dense (n, d) float64 block plus a validity mask and
+accumulates V·Wᵀ and the row norms in ASCENDING index order — the left
+fold of ``dot``/``norm``, so every score is bit-identical to the
+expression fold (never np.dot/@/einsum: BLAS reorders the sums). Contract:
+
+- ids keep their native Spark type; vectors are cast to array<double> in
+  Spark before the kernel;
+- a row is valid iff it is non-NULL, exactly d long and has no NULL
+  element; a pair with an invalid side scores NULL (a zero norm still
+  gives NaN, where the ANSI fold raises DIVIDE_BY_ZERO);
+- argmin/top-n follow Spark's (score, cid) struct order: NULL first, NaN
+  last, ties to the smaller cid;
+- a driver side with mixed lengths splits into uniform-length blocks, and
+  a pair scorer's side splits further into blocks of at most
+  max(MAX_DRIVER_QUERIES, 1) rows — one scan per block, unioned before
+  the top-k or per-id aggregation.
 """
 
 from __future__ import annotations
 
+import functools
 import random
-from typing import Optional
+from typing import Callable, NamedTuple, Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .dedup import _spread
 
-# largest query/eval side a driver-collect fast path embeds in its scoring
-# task; a larger side takes the expression path
+# largest driver-side block a pair scorer embeds in one scan; a bigger
+# query/eval side is scored in blocks of this many rows
 MAX_DRIVER_QUERIES = 4096
 
 
@@ -40,8 +62,199 @@ def norm(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+class _Block(NamedTuple):
+    """One uniform-length slice of the driver-side matrix."""
+
+    W: np.ndarray  # (m, d) float64; zero rows where invalid
+    ok: np.ndarray  # (m,) row validity
+    norms: np.ndarray  # (m,) ascending-fold row norms
+    keys: list  # per-row payload, in row order
+
+
+def _row_norms(M):
+    import numpy as np
+
+    acc = np.zeros(M.shape[0])
+    for i in range(M.shape[1]):
+        acc = acc + M[:, i] * M[:, i]
+    return np.sqrt(acc)
+
+
+def _fold(V, W):
+    """V·Wᵀ accumulated in ascending index order (dot's left fold)."""
+    import numpy as np
+
+    acc = np.zeros((V.shape[0], W.shape[0]))
+    for i in range(V.shape[1]):
+        acc = acc + V[:, i][:, None] * W[:, i][None, :]
+    return acc
+
+
+def _decode(vs, nn, d: int):
+    """A pandas Series of arrays -> (dense (n, d) float64 block, validity
+    mask). ``nn`` says the row has no NULL element (Arrow hands NULL
+    elements over as NaN, so Spark computes it); invalid rows stay zero."""
+    import numpy as np
+
+    ok = nn & np.fromiter(
+        (v is not None and len(v) == d for v in vs), dtype=bool, count=len(vs)
+    )
+    V = np.zeros((len(vs), d))
+    if ok.any():
+        V[ok] = np.stack(vs[ok].to_list())
+    return V, ok
+
+
+def _blocks(rows: list, cap: Optional[int] = None) -> "list[_Block]":
+    """Driver-side (key, vector) rows -> uniform-length blocks, each at
+    most max(cap, 1) rows when a cap is given. NULL vectors join the
+    length-0 block as invalid rows."""
+    import numpy as np
+
+    by_len: dict = {}
+    for key, v in rows:
+        by_len.setdefault(0 if v is None else len(v), []).append((key, v))
+    out = []
+    for d, rs in sorted(by_len.items()):
+        step = len(rs) if cap is None else max(cap, 1)
+        for s in range(0, len(rs), step):
+            part = rs[s : s + step]
+            ok = np.array(
+                [v is not None and None not in v for _, v in part], dtype=bool
+            )
+            W = np.zeros((len(part), d))
+            for i, (_, v) in enumerate(part):
+                if ok[i]:
+                    W[i] = v
+            out.append(_Block(W, ok, _row_norms(W), [k for k, _ in part]))
+    return out
+
+
+def _scan(
+    df: DataFrame,
+    vec_col: str,
+    cols: "list[Column]",
+    groups: "list[list[_Block]]",
+    body: Callable,
+    schema: T.StructType,
+) -> DataFrame:
+    """The vector kernel's launcher: one ``mapInPandas`` over ``df`` per
+    group of blocks, unioned. Each batch reaches ``body(pdf, parts)`` with
+    one ``(block, ok, V·Wᵀ, row norms)`` part per block of its group;
+    ``pdf`` holds ``cols`` plus ``_v`` (the vectors as array<double>) and
+    ``_nn`` (no NULL element)."""
+    groups = [g for g in groups if g]
+    if not groups:
+        return df.sparkSession.createDataFrame([], schema)
+    v = F.col(vec_col)
+    src = df.select(
+        *cols,
+        v.cast("array<double>").alias("_v"),
+        F.coalesce(
+            F.forall(v, lambda x: x.isNotNull()), F.lit(False)
+        ).alias("_nn"),
+    )
+
+    def kernel(blocks):
+        def run(batches):
+            for pdf in batches:
+                vs, nn = pdf["_v"], pdf["_nn"].to_numpy(dtype=bool)
+                parts = []
+                for b in blocks:
+                    V, ok = _decode(vs, nn, b.W.shape[1])
+                    parts.append((b, ok, _fold(V, b.W), _row_norms(V)))
+                yield body(pdf, parts)
+
+        return run
+
+    frames = [src.mapInPandas(kernel(g), schema) for g in groups]
+    return functools.reduce(DataFrame.union, frames)
+
+
+def _cosine(
+    big: DataFrame,
+    vec_col: str,
+    cols: "list[Column]",
+    rows: list,
+    emit: Callable,
+    schema: T.StructType,
+) -> DataFrame:
+    """Cosine of every ``big`` row against every driver-side (key, vector)
+    row: ``emit(pdf, block, sims, null)`` turns one block's (n, m) scores
+    and NULL mask into output rows."""
+    import numpy as np
+
+    def body(pdf, parts):
+        ((b, ok, acc, vn),) = parts
+        with np.errstate(divide="ignore", invalid="ignore"):
+            sims = acc / (vn[:, None] * b.norms[None, :])
+        return emit(pdf, b, sims, ~(ok[:, None] & b.ok[None, :]))
+
+    groups = [[b] for b in _blocks(rows, MAX_DRIVER_QUERIES)]
+    return _scan(big, vec_col, cols, groups, body, schema)
+
+
+def _eq_null_safe(a, b: list):
+    """(n, m) ``a <=> b`` of a pandas Series against a list of values."""
+    import numpy as np
+    import pandas as pd
+
+    an = a.isna().to_numpy()[:, None]
+    bv = np.asarray(b, dtype=object)
+    bn = pd.isna(bv)[None, :]
+    eq = a.to_numpy(dtype=object)[:, None] == bv[None, :]
+    return (an & bn) | (eq & ~an & ~bn)
+
+
+def _neighbors(
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    group_col: Optional[str] = None,
+) -> DataFrame:
+    """Per-query cosine top-k over the pairs with distinct non-NULL ids
+    (and, given ``group_col``, groups that differ null-safely)."""
+    import numpy as np
+    import pandas as pd
+
+    g = [group_col] if group_col else []
+    rows = [
+        ((r[0], r[2] if group_col else None), r[1])
+        for r in queries.select(
+            id_col, F.col(vec_col).cast("array<double>"), *g
+        ).collect()
+        if r[0] is not None
+    ]
+    schema = T.StructType(
+        [
+            T.StructField("query_id", queries.schema[id_col].dataType),
+            T.StructField("neighbor_id", corpus.schema[id_col].dataType),
+            T.StructField("cosine_sim", T.DoubleType()),
+        ]
+    )
+
+    def emit(pdf, b, sims, null):
+        qid = np.asarray([q for q, _ in b.keys])
+        nid = pdf["_id"]
+        keep = nid.notna().to_numpy()[:, None] & (
+            nid.to_numpy()[:, None] != qid[None, :]
+        )
+        if group_col:
+            keep &= ~_eq_null_safe(pdf["_g"], [x for _, x in b.keys])
+        r, c = np.nonzero(keep)
+        return pd.DataFrame(
+            {
+                "query_id": qid[c],
+                "neighbor_id": nid.iloc[r].reset_index(drop=True),
+                "cosine_sim": pd.arrays.FloatingArray(sims[r, c], null[r, c]),
+            }
+        )
+
+    cols = [F.col(id_col).alias("_id")] + [F.col(c).alias("_g") for c in g]
+    src = _spread(corpus.select(id_col, vec_col, *g))
+    return two_phase_topk(_cosine(src, vec_col, cols, rows, emit, schema), k)
 
 
 def brute_force_topk(
@@ -55,164 +268,11 @@ def brute_force_topk(
 
     Returns (query_id, neighbor_id, cosine_sim), k rows per query,
     self-matches excluded. Ties broken by neighbor id (deterministic).
+    Scores come from the vector kernel (module docstring): the query side
+    is collected and the corpus, spread off the file-layout-bound scan,
+    streams through one scan per query block.
     """
-    # Arrow fast path: when the queries side is small enough to collect
-    # (it was broadcast regardless — same driver footprint class) and the
-    # vectors are array<double>, score all pairs in one vectorized
-    # mapInPandas pass instead of the broadcast-NLJ with an interpreted
-    # HOF fold per pair. BIT-EXACT: ascending-dim accumulation is the
-    # exact left-fold order of dot()/norm(), dot/(qn*cn) the same op
-    # order, and pairs with NULL/ragged vectors emit NULL sims exactly
-    # like the expression path's null-poisoned fold (legitimate NaN/Inf
-    # from zero norms stays NaN/Inf). Non-double element types and
-    # over-cap query sides fall back to the expression path below.
-    from pyspark.sql import types as T
-
-    vec_dt = corpus.schema[vec_col].dataType
-    q_vec_dt = queries.schema[vec_col].dataType
-    is_double_vec = (
-        isinstance(vec_dt, T.ArrayType)
-        and isinstance(vec_dt.elementType, T.DoubleType)
-        and isinstance(q_vec_dt, T.ArrayType)
-        and isinstance(q_vec_dt.elementType, T.DoubleType)
-    )
-    q_rows = None
-    if is_double_vec:
-        q_rows = queries.select(
-            F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-        ).limit(MAX_DRIVER_QUERIES + 1).collect()
-        if len(q_rows) > MAX_DRIVER_QUERIES:
-            q_rows = None  # too many queries for the driver path
-    if q_rows is not None:
-        import numpy as np
-        import pandas as pd
-
-        q_ids = [r["qid"] for r in q_rows if r["qid"] is not None]
-        q_vecs = [
-            r["qv"] for r in q_rows if r["qid"] is not None
-        ]
-        dims = {len(v) for v in q_vecs if v is not None}
-        d = dims.pop() if len(dims) == 1 else None
-        if d is not None and all(
-            v is not None and not any(x is None for x in v) for v in q_vecs
-        ):
-            m = len(q_ids)
-            Q = np.asarray(q_vecs, dtype=np.float64).reshape(m, d)
-            qn = np.zeros(m)
-            for k2 in range(d):
-                qn = qn + Q[:, k2] * Q[:, k2]
-            qn = np.sqrt(qn)
-            out_schema = T.StructType(
-                [
-                    T.StructField("query_id", queries.schema[id_col].dataType),
-                    T.StructField("neighbor_id", corpus.schema[id_col].dataType),
-                    T.StructField("cosine_sim", T.DoubleType()),
-                ]
-            )
-            qid_arr = np.asarray(q_ids)
-
-            def score(batches):
-                for pdf in batches:
-                    n = len(pdf)
-                    if n == 0 or m == 0:
-                        yield pd.DataFrame(
-                            {
-                                "query_id": qid_arr[:0],
-                                "neighbor_id": pdf["_id"][:0],
-                                "cosine_sim": pd.Series([], dtype="float64"),
-                            }
-                        )
-                        continue
-                    ids = pdf["_id"]
-                    vs = pdf["_v"]
-                    keep_row = np.fromiter(
-                        (i is not None for i in ids), dtype=bool, count=n
-                    )
-                    good = np.fromiter(
-                        (
-                            v is not None and len(v) == d
-                            for v in vs
-                        ),
-                        dtype=bool,
-                        count=n,
-                    ) & keep_row
-                    V = np.zeros((n, d))
-                    if good.any():
-                        # (a NULL *element* inside a full-length vector
-                        # arrives as NaN and scores NaN where the fold
-                        # gave NULL — indistinguishable post-Arrow; no
-                        # gate input carries null elements)
-                        V[good] = (
-                            np.array([np.asarray(v) for v in vs[good]])
-                            .astype(np.float64)
-                            .reshape(int(good.sum()), d)
-                        )
-                    cn = np.zeros(n)
-                    sims = np.zeros((n, m))
-                    for k2 in range(d):
-                        cn = cn + V[:, k2] * V[:, k2]
-                        sims = sims + V[:, k2][:, None] * Q[:, k2][None, :]
-                    cn = np.sqrt(cn)
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        sims = sims / (cn[:, None] * qn[None, :])
-                    # all pairs except self-matches and dropped rows
-                    pair_keep = keep_row[:, None] & (
-                        ids.to_numpy()[:, None] != qid_arr[None, :]
-                    )
-                    r_idx, q_idx = np.nonzero(pair_keep)
-                    vals = sims[r_idx, q_idx]
-                    na_mask = ~good[r_idx]  # bad vector -> NULL sim
-                    yield pd.DataFrame(
-                        {
-                            "query_id": qid_arr[q_idx],
-                            "neighbor_id": ids.iloc[r_idx].reset_index(
-                                drop=True
-                            ),
-                            "cosine_sim": pd.arrays.FloatingArray(
-                                vals, na_mask
-                            ),
-                        }
-                    )
-
-            src = _spread(
-                corpus.select(
-                    F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
-                )
-            )
-            return two_phase_topk(src.mapInPandas(score, out_schema), k)
-
-    # norms precomputed ONCE per vector, not per pair: HOFs run
-    # interpreted, so cosine()'s 3 folds per pair cost 3x the necessary
-    # work in an all-pairs scorer (measured 14.3 -> 6.7 s on a 1000-node
-    # kNN graph). dot/(qn*cn) keeps cosine()'s exact fold and multiply
-    # order — bit-identical floats, the oracles don't move. (A fixed-dim
-    # UNROLL of the folds was tried and is ~1.8x SLOWER than the HOF
-    # pass: 128 chained GetArrayItems per pair defeat codegen — don't
-    # rediscover.)
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qvec"),
-            norm(F.col(vec_col)).alias("_qn"),
-        )
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        norm(F.col(vec_col)).alias("_cn"),
-    )
-    scored = (
-        c.join(q, F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                dot(F.col("qvec"), F.col("cvec"))
-                / (F.col("_qn") * F.col("_cn"))
-            ).alias("cosine_sim"),
-        )
-    )
-    return two_phase_topk(scored, k)
+    return _neighbors(corpus, queries, id_col, vec_col, k)
 
 
 def two_phase_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -270,105 +330,50 @@ def _planes(dim: int, num_planes: int, seed: int) -> list[list[float]]:
     ]
 
 
-def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane signature: one bit per plane, packed into a long."""
-    bits = []
-    for j, p in enumerate(planes):
-        proj = F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(x) for x in p]),
-                lambda v, w: v.cast("double") * w,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bits.append(F.when(proj > 0, F.lit(1 << j)).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out.cast("long")
-
-
 def lsh_buckets_arrow(
     df: DataFrame,
     id_col: str,
     vec_col: str,
     idname: str,
     tables: "list[list[list[float]]]",
-    dim: int,
 ) -> DataFrame:
-    """(idname, bucket) rows — ``num_tables`` per vector — computed in ONE
-    vectorized Arrow pass instead of num_tables x num_planes interpreted
-    HOF folds per row (lsh_bucket's zip_with+aggregate run on the
-    CodegenFallback path and allocate a fresh array per fold; measured
-    6.6 s -> ~0.5 s for 20k x 4x6 x 64 at sf1.0).
-
-    BIT-EXACT: projections accumulate in ascending dimension order — the
-    exact left-fold order of ``lsh_bucket`` — with the same elementary
-    IEEE-754 double ops, and the sign test (NaN -> bit 0) matches
-    F.when(proj > 0). Vectors that are NULL or not exactly ``dim`` long
-    get signature 0 in every table, which is what the expression path's
-    null-propagating fold + when/otherwise(0) yields.
-    """
+    """(idname, bucket) rows — one per table per vector, bucket
+    ``"{table}:{signature}"`` — from the vector kernel: every plane's
+    projection is one column of V·Wᵀ, bit j of a table's signature is
+    ``projection_j > 0`` (NaN -> 0). An invalid vector (NULL, a NULL
+    element, or not plane-length) gets signature 0 in every table."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
-    P = [np.asarray(p, dtype=np.float64) for p in tables]
+    table_of = np.asarray([t for t, ps in enumerate(tables) for _ in ps])
+    bit = np.asarray([1 << j for ps in tables for j in range(len(ps))])
+    ntab = len(tables)
     schema = T.StructType(
         [
             T.StructField(idname, df.schema[id_col].dataType),
             T.StructField("bucket", T.StringType()),
         ]
     )
-    ntab = len(P)
 
-    def gen(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0 or ntab == 0:
-                yield pd.DataFrame(
-                    {idname: pdf["_id"][:0], "bucket": pd.Series([], dtype=object)}
-                )
-                continue
-            vs = pdf["_v"]
-            good = np.fromiter(
-                (v is not None and len(v) == dim for v in vs),
-                dtype=bool,
-                count=n,
-            )
-            V = np.zeros((n, dim))
-            if good.any():
-                # NULL elements arrive as NaN: every plane's fold then
-                # yields NaN -> bit 0, identical to the expression path's
-                # null-poisoned fold
-                V[good] = (
-                    np.array([np.asarray(v) for v in vs[good]])
-                    .astype(np.float64)
-                    .reshape(int(good.sum()), dim)
-                )
-            sigs = np.zeros((n, ntab), dtype=np.int64)
-            for t in range(ntab):
-                for j in range(P[t].shape[0]):
-                    proj = np.zeros(n)
-                    for i2 in range(dim):
-                        proj = proj + V[:, i2] * P[t][j, i2]
-                    sigs[:, t] += np.where(proj > 0, 1 << j, 0)
-            sigs[~good] = 0
-            ids = pdf["_id"]
-            out_ids = ids.iloc[np.repeat(np.arange(n), ntab)].reset_index(
-                drop=True
-            )
-            buckets = [
-                f"{t}:{sigs[r, t]}" for r in range(n) for t in range(ntab)
-            ]
-            yield pd.DataFrame({idname: out_ids, "bucket": buckets})
+    def body(pdf, parts):
+        # an invalid row decodes to zeros: every projection is 0, no bit set
+        ((_, _, proj, _),) = parts
+        n = len(pdf)
+        bits = np.where(proj > 0, bit[None, :], 0)
+        sigs = np.zeros((n, ntab), dtype=np.int64)
+        for t in range(ntab):
+            sigs[:, t] = bits[:, table_of == t].sum(axis=1)
+        ids = pdf["_id"].iloc[np.repeat(np.arange(n), ntab)]
+        buckets = [f"{t}:{sigs[r, t]}" for r in range(n) for t in range(ntab)]
+        return pd.DataFrame(
+            {idname: ids.reset_index(drop=True), "bucket": buckets}
+        )
 
-    src = df.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
+    planes = [(None, p) for ps in tables for p in ps]
+    return _scan(
+        df, vec_col, [F.col(id_col).alias("_id")], [_blocks(planes)], body,
+        schema,
     )
-    return src.mapInPandas(gen, schema)
 
 
 def lsh_topk(
@@ -395,11 +400,9 @@ def lsh_topk(
     # ids + buckets ONLY — the vectors never enter the bucket join or the
     # candidate-dedup shuffle (measured 2.4x on the sibling
     # embedding_near_dups pipeline when 64-double payloads rode through
-    # both). Bucketing runs as one vectorized Arrow pass
-    # (lsh_buckets_arrow — bit-exact to the lsh_bucket expression; the
-    # interpreted HOF folds were the dominant cost of the whole query).
+    # both). Bucketing runs in the vector kernel (lsh_buckets_arrow).
     def bucket_ids(df: DataFrame, idname: str) -> DataFrame:
-        return lsh_buckets_arrow(df, id_col, vec_col, idname, tables, dim)
+        return lsh_buckets_arrow(df, id_col, vec_col, idname, tables)
 
     qb = F.broadcast(bucket_ids(queries, "query_id"))
     # the Arrow stage must not ride the file-layout-bound scan stage
@@ -443,10 +446,11 @@ def lsh_topk(
     return two_phase_topk(scored, k)
 
 
-# The IVF/k-means codebook is embedded as k x dim LITERAL vectors in the
-# assignment expressions — right for a COARSE codebook (k ≤ a few hundred),
-# but a caller passing k in the thousands would build a multi-MB Catalyst
-# tree and stall driver planning with no warning. Fail loudly instead; for
+# A codebook rides every assignment task (the vector kernel) or the plan
+# itself as k x dim LITERAL vectors (centroid_outliers) — right for a
+# COARSE codebook (k ≤ a few hundred), but a caller passing k in the
+# thousands would stall driver planning or bloat every task with no
+# warning. Fail loudly instead; for
 # large k use the bucketed hyperplane-LSH path (lsh_topk), whose bucket id
 # is O(num_planes) expressions regardless of table count.
 MAX_CODEBOOK_LITERALS = 65_536
@@ -474,10 +478,10 @@ def kmeans_centroids(
 ) -> list[list[float]]:
     """Distributed Lloyd's k-means for the IVF coarse codebook.
 
-    Each iteration is ONE Spark job: expression-side nearest-centroid
-    assignment (k literal dot products + array argmin — no shuffle, same
-    pattern as ivf_topk's assign) followed by a groupBy(cid) with per-
-    dimension avg aggregates (codegen'd, partial map-side combine). Only
+    Each iteration is ONE Spark job: nearest-centroid assignment in the
+    vector kernel (assign_cids_arrow, no shuffle, as ivf_topk assigns)
+    followed by a groupBy(cid) with per-dimension avg aggregates
+    (codegen'd, partial map-side combine). Only
     the k x dim centroid matrix ever reaches the driver. Empty clusters
     keep their previous centroid. Init = deterministic md5-ordered sample
     (the same pick ivf_topk uses standalone). Null or short vectors are
@@ -540,17 +544,8 @@ def _lloyds_iterate(
 
     for _ in range(n_iter):
         norms = [math.sqrt(sum(x * x for x in c)) or 1.0 for c in cents]
-        # assignment via the vectorized Arrow kernel (bit-exact to the
-        # array_min struct ordering — see assign_cids_arrow); the k
-        # interpreted dot folds per row were the loop's dominant cost
         assigned = assign_cids_arrow(
-            base,
-            "vid",
-            "vec",
-            "x",
-            list(enumerate(cents)),
-            norms,
-            dim,
+            base, "vid", "vec", "x", list(enumerate(cents)), norms,
             with_id=False,
         ).select("cid", F.col("x_vec").alias("vec"))
         means = (
@@ -576,114 +571,77 @@ def assign_cids_arrow(
     idname: str,
     cents: "list[tuple]",
     cent_norms: "list[float]",
-    dim: int,
     with_id: bool = True,
+    top_n: int = 1,
 ) -> DataFrame:
-    """Nearest-centroid assignment — ``(idname, idname_vec, idname_nrm,
-    cid)`` — in ONE vectorized Arrow pass instead of n_lists interpreted
-    dot folds per row (the lsh_buckets_arrow treatment; the assignment
-    expression was the dominant cost of the IVF/k-means family).
+    """Nearest-centroid assignment from the vector kernel: ``(idname,
+    idname_vec, idname_nrm, cid)``, ``top_n`` rows per input row (its
+    ``top_n`` nearest lists, nearest first).
 
-    BIT-EXACT to ``array_min`` over the (-dot/(nrm·cn), cid) structs:
-    folds accumulate in ascending dimension order (dot/norm's left-fold
-    order), (-d)/(nrm·cn) is the same op order, NaN scores sort LAST
-    (Spark's double ordering) via a +inf substitution so argmin picks the
-    smallest non-NaN — ties break to the smaller cid (first occurrence)
-    exactly like the struct ordering — and vectors whose length != dim
-    (null-poisoned dot -> null score, nulls-first struct min) land on the
-    first centroid id, as the expression path resolves them. ``idname_nrm``
-    is the vector's own-length norm fold (what norm(vec) returns
-    regardless of dim mismatches); NULL vectors carry a NULL norm.
-    ``with_id=False`` drops the id column (the Lloyd's loop needs only
-    (cid, vec))."""
+    ``cents`` holds (list id, vector) pairs; list ids may be any orderable
+    type (ivf_topk's sampled codebook uses corpus ids) and come out as
+    their dense rank, a long, so equal ids share a list. Scores are
+    ``(-dot) / (nrm · cent_norm)`` ordered as Spark orders the (score,
+    list id) struct: NULL first (a vector invalid against a centroid's
+    length), NaN last, ties to the smaller list id. ``idname_nrm`` is the
+    vector's own-length norm fold, NULL for a NULL vector or one with a
+    NULL element. ``with_id=False`` drops the id column (the Lloyd's loop
+    needs only (cid, vec))."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
-    C = np.asarray([list(v) for _, v in cents], dtype=np.float64)
-    cn_arr = np.asarray(cent_norms, dtype=np.float64)
-    cid_arr = np.asarray([int(c) for c, _ in cents], dtype=np.int64)
-    kk = C.shape[0]
-    if kk:
-        # process centroids in ascending-cid order: the struct ordering
-        # breaks score ties to the SMALLER cid VALUE, and np.argmin picks
-        # the first index — ascending order makes those identical (cid
-        # values are unsorted in the untrained-IVF sampled codebook)
-        order0 = np.argsort(cid_arr, kind="stable")
-        C, cn_arr, cid_arr = C[order0], cn_arr[order0], cid_arr[order0]
-    # a row whose scores are ALL null (len != dim) or ALL NaN (zero norms)
-    # resolves to the minimum cid value under the struct ordering (nulls
-    # first / NaN ties -> cid comparison)
-    first_cid = int(cid_arr[0]) if kk else None
-    vec_dt = df.schema[vec_col].dataType
-    fields = []
-    if with_id:
-        fields.append(T.StructField(idname, df.schema[id_col].dataType))
-    fields += [
-        T.StructField(f"{idname}_vec", T.ArrayType(T.DoubleType())),
-        T.StructField(f"{idname}_nrm", T.DoubleType()),
-        # long, not int: untrained-IVF codebooks carry corpus ids as cids
-        T.StructField("cid", T.LongType()),
-    ]
-    out_schema = T.StructType(fields)
+    order = sorted(
+        range(len(cents)), key=lambda i: (cents[i][0] is not None, cents[i][0])
+    )
+    rank: dict = {}
+    cid_of = np.asarray(
+        [rank.setdefault(cents[i][0], len(rank)) for i in order], dtype=np.int64
+    )
+    cn = np.asarray([cent_norms[i] for i in order], dtype=np.float64)
+    kk = len(order)
+    top = min(top_n, kk)
+    fields = [T.StructField(idname, df.schema[id_col].dataType)] if with_id else []
+    schema = T.StructType(
+        fields
+        + [
+            T.StructField(f"{idname}_vec", T.ArrayType(T.DoubleType())),
+            T.StructField(f"{idname}_nrm", T.DoubleType()),
+            T.StructField("cid", T.LongType()),
+        ]
+    )
 
-    def gen(batches):
-        for pdf in batches:
-            n = len(pdf)
-            vs = pdf["_v"]
-            good = np.fromiter(
-                (v is not None and len(v) == dim for v in vs),
-                dtype=bool,
-                count=n,
-            )
-            V = np.zeros((n, dim))
-            if good.any():
-                V[good] = (
-                    np.array([np.asarray(v) for v in vs[good]])
-                    .astype(np.float64)
-                    .reshape(int(good.sum()), dim)
-                )
-            nrm = np.zeros(n)
-            D = np.zeros((n, kk)) if kk else np.zeros((n, 0))
-            for k2 in range(dim):
-                nrm = nrm + V[:, k2] * V[:, k2]
-                if kk:
-                    D = D + V[:, k2][:, None] * C[:, k2][None, :]
-            nrm = np.sqrt(nrm)
-            if kk:
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    negs = (-D) / (nrm[:, None] * cn_arr[None, :])
-                negs = np.where(np.isnan(negs), np.inf, negs)
-                cids = cid_arr[np.argmin(negs, axis=1)]
-            else:
-                cids = np.zeros(n, dtype="int64")
-            # rows whose vector is NULL or not dim-long: the expression
-            # path's dot nulls out -> (null, cid) structs -> nulls-first
-            # min -> FIRST centroid id; their norm is the own-length fold
-            nrm_mask = np.zeros(n, dtype=bool)
-            for i3 in np.nonzero(~good)[0]:
-                v = vs.iloc[i3]
-                if v is None:
-                    nrm_mask[i3] = True
-                    continue
-                acc = 0.0
-                for x in np.asarray(v, dtype=np.float64):
-                    acc = acc + x * x
-                nrm[i3] = np.sqrt(acc)
-            if first_cid is not None and (~good).any():
-                cids[~good] = first_cid
-            data = {}
-            if with_id:
-                data[idname] = pdf["_id"]
-            data[f"{idname}_vec"] = vs
-            data[f"{idname}_nrm"] = pd.arrays.FloatingArray(nrm, nrm_mask)
-            data["cid"] = cids
-            yield pd.DataFrame(data)
+    def body(pdf, parts):
+        vs, nn = pdf["_v"], pdf["_nn"].to_numpy(dtype=bool)
+        n = len(pdf)
+        neg = np.zeros((n, kk))
+        null = np.ones((n, kk), dtype=bool)
+        nrm, have = np.zeros(n), np.zeros(n, dtype=bool)
+        for b, ok, acc, vn in parts:
+            with np.errstate(divide="ignore", invalid="ignore"):
+                neg[:, b.keys] = (-acc) / (vn[:, None] * cn[b.keys][None, :])
+            null[:, b.keys] = ~(ok[:, None] & b.ok[None, :])
+            nrm[ok] = vn[ok]
+            have |= ok
+        # rows whose length matches no centroid still carry their norm
+        for d in {len(v) for v in vs[nn & ~have]}:
+            V, ok = _decode(vs, nn, d)
+            nrm[ok] = _row_norms(V)[ok]
+        nan = np.isnan(neg) & ~null
+        best = np.lexsort(
+            (np.where(null | nan, 0.0, neg), nan, ~null), axis=1
+        )[:, :top]
+        rows = np.repeat(np.arange(n), top)
+        data = {}
+        if with_id:
+            data[idname] = pdf["_id"].iloc[rows].reset_index(drop=True)
+        data[f"{idname}_vec"] = vs.iloc[rows].reset_index(drop=True)
+        data[f"{idname}_nrm"] = pd.arrays.FloatingArray(nrm[rows], ~nn[rows])
+        data["cid"] = cid_of[best.reshape(-1)]
+        return pd.DataFrame(data)
 
-    cols = [F.col(vec_col).cast("array<double>").alias("_v")]
-    if with_id:
-        cols = [F.col(id_col).alias("_id")] + cols
-    return df.select(*cols).mapInPandas(gen, out_schema)
+    cols = [F.col(id_col).alias("_id")] if with_id else []
+    blocks = _blocks([(j, cents[i][1]) for j, i in enumerate(order)])
+    return _scan(df, vec_col, cols, [blocks], body, schema)
 
 
 def ivf_topk(
@@ -705,10 +663,10 @@ def ivf_topk(
 
     ``centroids`` takes a trained codebook (see kmeans_centroids; list ids
     are the codebook indices). Default: a deterministic md5-ordered sample
-    of the corpus (portable — the DuckDB oracle reproduces the same pick);
-    the IVF mechanics are identical either way, and the codebook is always
-    driver-side metadata of size O(n_lists · dim) broadcast into the
-    assignment expressions below.
+    of the corpus whose corpus ids are the list ids (portable — the DuckDB
+    oracle reproduces the same pick); the IVF mechanics are identical
+    either way, and the codebook is always driver-side metadata of size
+    O(n_lists · dim) embedded in both assignment scans.
     """
     import math
 
@@ -728,11 +686,7 @@ def ivf_topk(
             .collect()
         ]
     if not cents:
-        # empty corpus (or an untrainable codebook): no lists, no neighbors —
-        # an empty result with the contract schema, not an unresolvable
-        # zero-arm array() expression
-        from pyspark.sql import types as T
-
+        # empty corpus (or an untrainable codebook): no lists, no neighbors
         return corpus.sparkSession.createDataFrame(
             [],
             T.StructType(
@@ -750,82 +704,17 @@ def ivf_topk(
     _check_codebook_size(len(cents), max(len(v) for _, v in cents))
     cent_norms = [math.sqrt(sum(x * x for x in v)) or 1.0 for _, v in cents]
 
-    def assign(df: DataFrame, idname: str, n: int) -> DataFrame:
-        # PLAN NOTE: list assignment is pure expression-side — one projection
-        # computing n_lists dot products against literal centroid vectors,
-        # then an array argmax. The previous implementation cross-joined the
-        # corpus with the broadcast centroids and ranked with a Window
-        # partitioned by vector id: a full shuffle of n_lists× the corpus
-        # just to take an argmax. This version has NO Exchange at all.
-        base = df.select(
-            F.col(id_col).alias(idname),
-            F.col(vec_col).cast("array<double>").alias(f"{idname}_vec"),
-        ).withColumn("_nrm", norm(F.col(f"{idname}_vec")))
-        sims = F.array(
-            *[
-                F.struct(
-                    (
-                        -dot(
-                            F.col(f"{idname}_vec"),
-                            F.array(*[F.lit(float(x)) for x in cvec]),
-                        )
-                        / (F.col("_nrm") * F.lit(cn))
-                    ).alias("neg"),
-                    F.lit(cid).alias("cid"),
-                )
-                for (cid, cvec), cn in zip(cents, cent_norms)
-            ]
+    def lists(df: DataFrame, idname: str, top_n: int) -> DataFrame:
+        return assign_cids_arrow(
+            df, id_col, vec_col, idname, cents, cent_norms, top_n=top_n
         )
-        if n == 1:
-            out = base.select(
-                idname,
-                f"{idname}_vec",
-                F.col("_nrm").alias(f"{idname}_nrm"),
-                F.array_min(sims)["cid"].alias("cid"),
-            )
-        else:
-            # the sims array is the generator input itself (evaluated once
-            # per row); sibling columns are plain attributes, so nothing
-            # heavy collapses into the Generate (cf. dedup.py PLAN NOTEs).
-            # explode_outer + post-filter, NOT plain explode:
-            # InferFiltersFromGenerate would infer size(...)>0 BELOW the
-            # Generate and predicate pushdown expands the whole sims
-            # expression into that filter (re-evaluating n_lists dot
-            # products per row) — the same measured pathology the runner
-            # pattern avoids.
-            out = base.select(
-                idname,
-                f"{idname}_vec",
-                F.col("_nrm").alias(f"{idname}_nrm"),
-                F.explode_outer(
-                    F.slice(F.array_sort(sims), 1, n)["cid"]
-                ).alias("cid"),
-            ).filter(F.col("cid").isNotNull())
-        return out
 
-    # corpus assignment as ONE vectorized Arrow pass (assign_cids_arrow —
-    # bit-exact to the array_min struct ordering; the n_lists interpreted
-    # dot folds per row dominated the query), spread off the
-    # file-layout-bound scan first. Queries stay on the expression path
-    # (tiny, broadcast, and they need the n_probe sorted-slice shape).
-    # Mixed-length codebooks (impossible from the sampled/trained builders
-    # but allowed by the signature) keep the expression path.
-    cent_dims = {len(v) for _, v in cents}
-    if len(cent_dims) == 1:
-        corpus_lists = assign_cids_arrow(
-            _spread(corpus.select(id_col, vec_col)),
-            id_col,
-            vec_col,
-            "neighbor_id",
-            cents,
-            cent_norms,
-            cent_dims.pop(),
-        )
-    else:
-        corpus_lists = assign(
-            _spread(corpus.select(id_col, vec_col)), "neighbor_id", 1
-        )
-    query_lists = F.broadcast(assign(queries, "query_id", n_probe))
+    # the corpus assignment is spread off the file-layout-bound scan; the
+    # query side is small and broadcast
+    corpus_lists = lists(
+        _spread(corpus.select(id_col, vec_col)), "neighbor_id", 1
+    )
+    query_lists = F.broadcast(lists(queries, "query_id", n_probe))
     # each corpus vector lives in exactly ONE list, so a (query, neighbor)
     # pair occurs at most once — no dedup shuffle needed; with the broadcast
     # list join and the map-side phase-1 of two_phase_topk, the corpus side
@@ -833,12 +722,9 @@ def ivf_topk(
     cands = corpus_lists.join(query_lists, "cid").filter(
         F.col("query_id") != F.col("neighbor_id")
     )
-    # per-VECTOR norms hoisted out of the per-PAIR expression (the
-    # brute_force_topk treatment, CLAUDE.md): assign() already computes
-    # norm(vec) once per vector for the centroid sims and now carries it
-    # through the join, so scoring runs ONE dot fold per pair instead of
-    # dot + two norm folds; dot/(qn*cn) is the same op order cosine()
-    # ran, so the double is bit-identical
+    # the assignment carries each vector's norm through the join, so
+    # scoring runs ONE dot fold per pair; dot/(qn*cn) is the kernel's op
+    # order, so the double is bit-identical
     scored = cands.select(
         "query_id",
         "neighbor_id",
@@ -1037,42 +923,12 @@ def hard_negatives(
     negatives of everything, including each other. Ties break by
     neighbor id. Returns (query_id, neighbor_id, cosine_sim).
 
-    100 TB shape: identical to ``brute_force_topk`` — anchors broadcast,
-    ONE corpus scan, and the group filter prunes candidates BEFORE the
-    bounded two-phase top-k (O(k·partitions) state per anchor, never the
-    candidate set). For anchor sets too big to broadcast, run per-shard.
+    100 TB shape: identical to ``brute_force_topk`` — anchors collected
+    into the vector kernel, ONE corpus scan, and the group mask prunes
+    pairs BEFORE the bounded two-phase top-k (O(k·partitions) state per
+    anchor, never the candidate set).
     """
-    # per-VECTOR norms hoisted out of the per-PAIR expression (the
-    # brute_force_topk treatment): one dot fold per surviving pair instead
-    # of dot + two norm folds; dot/(qn*cn) is cosine()'s exact op order,
-    # so the double is bit-identical
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qvec"),
-            F.col(group_col).alias("qg"),
-            norm(F.col(vec_col)).alias("_qn"),
-        )
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        F.col(group_col).alias("cg"),
-        norm(F.col(vec_col)).alias("_cn"),
-    )
-    scored = c.join(
-        q,
-        (F.col("query_id") != F.col("neighbor_id"))
-        & ~F.col("qg").eqNullSafe(F.col("cg")),
-    ).select(
-        "query_id",
-        "neighbor_id",
-        (
-            dot(F.col("qvec"), F.col("cvec"))
-            / (F.col("_qn") * F.col("_cn"))
-        ).alias("cosine_sim"),
-    )
-    return two_phase_topk(scored, k)
+    return _neighbors(corpus, queries, id_col, vec_col, k, group_col)
 
 
 def centroid_outliers(

@@ -29,7 +29,7 @@ from pyspark.sql.functions import pandas_udf
 
 from . import codecs, fixtures
 from .compiler import cached
-from .runner import PARTITION_COL, VIOLATIONS_COL, _result_from_annotated
+from .runner import PARTITION_COL, VIOLATIONS_COL
 
 IMAGE_CHECK_TYPE = T.StructType(
     [
@@ -115,23 +115,6 @@ def image_check_udf(seed: int):
         )
 
     return check
-
-
-def image_batch_violations(
-    df: DataFrame,
-    seed: int,
-    key: str = "image_id",
-    min_psnr: float = 40.0,
-) -> DataFrame:
-    """Violation rows from the batch (bytes-dependent) checks.
-
-    Output matches the runner's violation shape: (key, column, schema_path,
-    keyword, description, partition_id). A row can carry several batch
-    violations (they are independent physical checks, unlike the reference's
-    single-value short-circuit — documented extension).
-    """
-    annotated = _annotate(df, seed, key, min_psnr)
-    return _result_from_annotated(annotated, key).violations
 
 
 def _annotate(

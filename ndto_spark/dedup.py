@@ -951,12 +951,8 @@ def embedding_near_dups(
         tables = [
             ann._planes(dim, num_planes, seed + t * 1000) for t in range(num_tables)
         ]
-        # bucketing as ONE vectorized Arrow pass (ann.lsh_buckets_arrow —
-        # bit-exact to the lsh_bucket expression folds, which ran
-        # interpreted and dominated the pipeline)
-        exploded = ann.lsh_buckets_arrow(
-            v, "vid", "vec", "vid", tables, dim
-        )
+        # bucketing in the vector kernel (ann.lsh_buckets_arrow)
+        exploded = ann.lsh_buckets_arrow(v, "vid", "vec", "vid", tables)
         a = exploded.select(F.col("vid").alias("id_a"), "bucket")
         b = exploded.select(F.col("vid").alias("id_b"), "bucket")
         cand = (
@@ -1414,18 +1410,18 @@ def semantic_dedup(
     Returns ``(id, cid, n_dups, removed)`` for every valid input vector.
 
     100 TB shape: training + assignment reuse ann.kmeans_centroids'
-    expression-side argmin (k literal dot products, no shuffle; the
-    codebook-literal bound caps k*dim); the pairwise step is confined
-    WITHIN clusters — one repartition(cid) Exchange feeds both sides of
-    the self-join (ReuseExchange), so cost is sum over clusters of
-    |c|^2/2, never n^2. k must scale with the corpus (the paper uses
-    ~sqrt(n) clusters); for k beyond the literal bound run per-shard or
+    vector-kernel argmin (no shuffle; the codebook-size bound caps k*dim);
+    the pairwise step is confined WITHIN clusters — one repartition(cid)
+    Exchange feeds both sides of the self-join (ReuseExchange), so cost
+    is sum over clusters of |c|^2/2, never n^2. k must scale with the
+    corpus (the paper uses ~sqrt(n) clusters); for k beyond the bound
+    run per-shard or
     use the hyperplane-LSH path (embedding_near_dups).
     """
     import math
 
     from . import ann
-    from .ann import dot, norm
+    from .ann import dot
 
     cents = ann.kmeans_centroids(
         df, dim=dim, id_col=id_col, vec_col=vec_col, k=k, n_iter=n_iter,
@@ -1445,10 +1441,8 @@ def semantic_dedup(
         )
         return spark.createDataFrame([], schema)
     norms = [math.sqrt(sum(x * x for x in c)) or 1.0 for c in cents]
-    # assignment via the vectorized Arrow kernel (ann.assign_cids_arrow —
-    # bit-exact to the array_min struct ordering), spread off the
-    # file-layout-bound scan; the k interpreted dot folds per row
-    # dominated the pre-join stage
+    # assignment in the vector kernel, spread off the file-layout-bound
+    # scan
     src = (
         df.select(
             F.col(id_col).alias("vid"),
@@ -1458,13 +1452,7 @@ def semantic_dedup(
     )
     assigned = (
         ann.assign_cids_arrow(
-            _spread(src),
-            "vid",
-            "vec",
-            "vid",
-            list(enumerate(cents)),
-            norms,
-            dim,
+            _spread(src), "vid", "vec", "vid", list(enumerate(cents)), norms
         )
         .select(
             "vid",
@@ -1847,145 +1835,58 @@ def semantic_decontaminate(
     max() over per-pair doubles is order-independent, so the result is
     as engine-exact as the pairwise cosine itself.
 
-    100 TB shape: eval sets are SMALL, so the eval side collects ONCE to
-    an (m × d) matrix embedded in the scoring task (the IVF-codebook /
-    CMS-table discipline) and the corpus streams through one Arrow
-    ``mapInPandas`` pass — linear in |corpus|·|eval| like the previous
-    BroadcastNestedLoopJoin shape, but the |corpus|·|eval|·d multiply-add
-    volume runs vectorized in numpy instead of one interpreted HOF fold
-    per pair (guide §4.2; measured 83.6 → ~2 s at 19k × 870 × 64).
-    BIT-EXACTNESS: the accumulation loops run in ascending dimension
-    order, exactly the left-fold order of ``ann.dot``/``ann.norm``, and
-    every elementary op (product, add, divide, max) is the same single
-    IEEE-754 double op the expression path ran — outputs are
-    bit-identical, not merely close (pinned by the oracle gate). For
-    |eval| beyond a few thousand, bucket first (``embedding_near_dups``'
-    LSH path) — this operator is deliberately the exact-verdict shape.
-    An eval set with MIXED vector lengths, or more than
-    ``ann.MAX_DRIVER_QUERIES`` rows, falls back to the expression path
-    (zip_with's null-padding semantics are per-pair there).
+    100 TB shape: eval sets are SMALL, so the eval side collects ONCE into
+    the vector kernel (``ann`` module docstring) and the corpus streams
+    through one Arrow scan per eval block, bit-identical to the
+    ``ann.dot``/``ann.norm`` fold; duplicate and NULL corpus ids merge per
+    id in the final groupBy. A NULL, NULL-element, zero or length-mismatched
+    vector on either side never hits. For |eval| beyond a few thousand,
+    bucket first (``embedding_near_dups``' LSH path) — this operator is
+    deliberately the exact-verdict shape.
     """
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import types as T
+
     from . import ann
 
-    def _side(df: DataFrame, pre: str) -> DataFrame:
-        return (
-            df.select(
-                F.col(id_col).alias(f"{pre}id"),
-                F.col(vec_col).cast("array<double>").alias(f"{pre}v"),
-            )
-            .withColumn(f"{pre}n", ann.norm(F.col(f"{pre}v")))
-            .filter(F.col(f"{pre}n") > 0)
-        )
-
-    cap = ann.MAX_DRIVER_QUERIES
-    ev_rows = (
-        evalset.select(F.col(vec_col).cast("array<double>").alias("v"))
-        .limit(cap + 1)
-        .collect()
+    ev = [
+        (None, r[0])
+        for r in evalset.select(F.col(vec_col).cast("array<double>")).collect()
+    ]
+    thr = float(threshold)
+    schema = T.StructType(
+        [
+            T.StructField(id_col, corpus.schema[id_col].dataType),
+            T.StructField("n_hits", T.LongType()),
+            T.StructField("max_sim", T.DoubleType()),
+        ]
     )
-    ev_vecs = [r["v"] for r in ev_rows if r["v"] is not None]
-    dims = {len(v) for v in ev_vecs}
-    if len(ev_rows) <= cap and len(dims) <= 1:
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql import types as T
 
-        d = dims.pop() if dims else 0
-        E = np.asarray(ev_vecs, dtype=np.float64).reshape(len(ev_vecs), d)
-        # sequential ascending-dim norm — ann.norm's exact fold order
-        en = np.zeros(E.shape[0])
-        for k in range(d):
-            en = en + E[:, k] * E[:, k]
-        en = np.sqrt(en)
-        kept = en > 0
-        E, en = E[kept], en[kept]
-        m = E.shape[0]
-        thr = float(threshold)
-        out_schema = T.StructType(
-            [
-                T.StructField(id_col, corpus.schema[id_col].dataType),
-                T.StructField("n_hits", T.LongType()),
-                T.StructField("max_sim", T.DoubleType()),
-            ]
+    def emit(pdf, b, sims, null):
+        hit = ~null & (sims >= thr)  # NaN (zero norm) never hits
+        nh = hit.sum(axis=1)
+        sel = nh > 0
+        ms = np.where(hit, sims, -np.inf).max(axis=1)
+        return pd.DataFrame(
+            {
+                id_col: pdf["_id"][sel],
+                "n_hits": nh[sel].astype("int64"),
+                "max_sim": ms[sel],
+            }
         )
 
-        def score(batches):
-            for pdf in batches:
-                if m == 0 or len(pdf) == 0:
-                    yield pd.DataFrame(
-                        {
-                            id_col: pdf["_id"][:0],
-                            "n_hits": pd.Series([], dtype="int64"),
-                            "max_sim": pd.Series([], dtype="float64"),
-                        }
-                    )
-                    continue
-                vs = pdf["_v"]
-                good = np.fromiter(
-                    (v is not None and len(v) == d for v in vs),
-                    dtype=bool,
-                    count=len(vs),
-                )
-                ids = pdf["_id"][good]
-                V = (
-                    np.array([np.asarray(v) for v in vs[good]])
-                    .astype(np.float64)
-                    .reshape(int(good.sum()), d)
-                )
-                n = V.shape[0]
-                cn = np.zeros(n)
-                sims = np.zeros((n, m))
-                for k in range(d):
-                    cn = cn + V[:, k] * V[:, k]
-                    sims = sims + V[:, k][:, None] * E[:, k][None, :]
-                cn = np.sqrt(cn)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    sims = sims / (cn[:, None] * en[None, :])
-                mask = sims >= thr  # NaN (zero-norm corpus row) -> False
-                nh = mask.sum(axis=1)
-                sel = nh > 0
-                ms = np.max(
-                    np.where(mask[sel], sims[sel], -np.inf), axis=1
-                ) if sel.any() else np.array([], dtype=np.float64)
-                yield pd.DataFrame(
-                    {
-                        id_col: ids[sel],
-                        "n_hits": nh[sel].astype("int64"),
-                        "max_sim": ms,
-                    }
-                )
-
-        src = corpus.select(
-            F.col(id_col).alias("_id"),
-            F.col(vec_col).cast("array<double>").alias("_v"),
-        )
-        # the Arrow stage otherwise inherits the scan's file-layout-bound
-        # task count (one compact parquet file = one core); the kernel
-        # scores rows, so duplicate (and NULL) ids merge per id here, as
-        # the expression path's groupBy does
-        return (
-            _spread(src)
-            .mapInPandas(score, out_schema)
-            .groupBy(id_col)
-            .agg(
-                F.sum("n_hits").cast("bigint").alias("n_hits"),
-                F.max("max_sim").alias("max_sim"),
-            )
-        )
-
-    co = _side(corpus, "c_")
-    ev = F.broadcast(_side(evalset, "e_"))
-    sim = ann.dot(F.col("c_v"), F.col("e_v")) / (F.col("c_n") * F.col("e_n"))
-    hits = co.crossJoin(ev).select(
-        "c_id", sim.alias("sim")
-    ).filter(F.col("sim") >= F.lit(float(threshold)))
-    return (
-        hits.groupBy("c_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_hits"),
-            F.max("sim").alias("max_sim"),
-        )
-        .select(F.col("c_id").alias(id_col), "n_hits", "max_sim")
+    scored = ann._cosine(
+        _spread(corpus.select(id_col, vec_col)),
+        vec_col,
+        [F.col(id_col).alias("_id")],
+        ev,
+        emit,
+        schema,
+    )
+    return scored.groupBy(id_col).agg(
+        F.sum("n_hits").cast("bigint").alias("n_hits"),
+        F.max("max_sim").alias("max_sim"),
     )
 
 

@@ -304,8 +304,7 @@ def synth_documents(
     5-gram shingles: Jaccard ≈ 0.76, a solid near-duplicate. (A mutation
     every few positions shreds most k-gram shingles and the pair drops
     BELOW a 0.5 threshold — k-gram similarity decays k shingles per edit.)
-    Used as the dedup-pipeline scaling corpus (tools/scaling_bench.py) and
-    anywhere a large deterministic text table is needed.
+    Used anywhere a large deterministic text table is needed.
     """
     from pyspark.sql import functions as F
 
@@ -330,20 +329,6 @@ def synth_documents(
     ]
     return base.select(
         F.col("id").alias("doc_id"), F.concat_ws(" ", *toks).alias("text")
-    )
-
-
-def synth_documents_cached(
-    spark, n_rows: int, n_partitions: int = 32, seed: int = 42
-):
-    """synth_documents materialized once to /tmp parquet and reused
-    (synth_images_cached's convention — generation is excluded from any
-    downstream timing)."""
-    return _cached_parquet(
-        spark,
-        f"/tmp/ndto_bench_docs_{FIXTURES_VERSION}"
-        f"_n{n_rows}_p{n_partitions}_s{seed}",
-        lambda: synth_documents(spark, n_rows, n_partitions, seed),
     )
 
 

@@ -4208,7 +4208,8 @@ def _md5_low32_sql(expr: str) -> str:
 
 
 def _hyperplane_bucket_sql(vec_expr: str, planes: list[list[float]]) -> str:
-    """DuckDB expression mirroring ann.lsh_bucket for one table's planes."""
+    """DuckDB expression for one table's signature as the vector kernel
+    computes it in ann.lsh_buckets_arrow: bit j = plane j's projection > 0."""
     terms = []
     for j, p in enumerate(planes):
         arr = "[" + ", ".join(repr(float(x)) for x in p) + "]"

@@ -123,7 +123,7 @@ def asof_join(
     upstream if per-key order across shards is not required.
 
     Two session defaults gut the window stage at scale (measured on a
-    40M-row leg, tools/scaling_bench.py):
+    40M-row leg):
 
     - AQE's 64 MB ``advisoryPartitionSizeInBytes`` coalesces this
       operator's narrow unioned rows (~40 B) into multi-million-row sort
