@@ -87,7 +87,7 @@ def image_check_udf(seed: int):
                 fmtd[i] = f
                 ha[i] = int(pix.shape[0])
                 wa[i] = int(pix.shape[1])
-            except Exception as e:  # zlib.error / ValueError / struct.error
+            except Exception as e:  # codecs.decode: ValueError on bad bytes
                 err[i] = f"{type(e).__name__}: {e}"
 
         # vectorized: which rows carry a parseable id (rid recovers the

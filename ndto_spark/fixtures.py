@@ -378,26 +378,48 @@ def feature_image_pixels(row_id: int) -> np.ndarray:
     return _two_tone(w, h, c1, c2, swap=row_id % 2 == 1)
 
 
-def synth_feature_images(spark, n_rows: int, n_partitions: int = 4):
-    """(image_id 'fi_%08d', bytes): two-tone PNGs; every 25th payload
-    truncated (the ok=False path is part of the gated contract)."""
+def _synth(
+    spark, n_rows: int, n_partitions: int, id_col: str, prefix: str, payload_of
+):
+    """(id_col '<prefix>_%08d', bytes): one distributed pass over
+    ``spark.range``; row i's payload is ``payload_of(i)``."""
     import pandas as pd
-
-    base = spark.range(0, n_rows, 1, n_partitions)
 
     def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
-            ids, blobs = [], []
-            for i in pdf["id"]:
-                i = int(i)
-                payload = codecs.png_encode(feature_image_pixels(i))
-                if i % FEATURE_CORRUPT_EVERY == FEATURE_CORRUPT_EVERY - 1:
-                    payload = payload[: max(8, len(payload) // 3)]
-                ids.append(f"fi_{i:08d}")
-                blobs.append(payload)
-            yield pd.DataFrame({"image_id": ids, "bytes": blobs})
+            ids = [int(i) for i in pdf["id"]]
+            yield pd.DataFrame(
+                {
+                    id_col: [f"{prefix}_{i:08d}" for i in ids],
+                    "bytes": [payload_of(i) for i in ids],
+                }
+            )
 
-    return base.mapInPandas(gen, "image_id string, bytes binary")
+    return spark.range(0, n_rows, 1, n_partitions).mapInPandas(
+        gen, f"{id_col} string, bytes binary"
+    )
+
+
+def _truncated(payload: bytes, i: int, keep) -> bytes:
+    """Every FEATURE_CORRUPT_EVERY-th payload cut to ``keep(payload)``."""
+    if i % FEATURE_CORRUPT_EVERY == FEATURE_CORRUPT_EVERY - 1:
+        return keep(payload)
+    return payload
+
+
+def _third(payload: bytes) -> bytes:
+    return payload[: max(8, len(payload) // 3)]
+
+
+def synth_feature_images(spark, n_rows: int, n_partitions: int = 4):
+    """(image_id 'fi_%08d', bytes): two-tone PNGs; every 25th payload
+    truncated (the ok=False path is part of the gated contract)."""
+    return _synth(
+        spark, n_rows, n_partitions, "image_id", "fi",
+        lambda i: _truncated(
+            codecs.png_encode(feature_image_pixels(i)), i, _third
+        ),
+    )
 
 
 def featimg_cache_path(n_rows: int, n_partitions: int = 4) -> str:
@@ -432,23 +454,12 @@ def synth_dup_images(
     image dedup without being able to encode a PNG. No corrupted payloads:
     decode robustness is gated elsewhere (image_features_clips).
     """
-    import pandas as pd
-
     if not 0 < group_mod <= 128:
         raise ValueError("group_mod must be in (0, 128] for byte-injectivity")
-    base = spark.range(0, n_rows, 1, n_partitions)
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for i in pdf["id"]:
-                i = int(i)
-                payload = codecs.png_encode(feature_image_pixels(i % group_mod))
-                ids.append(f"di_{i:08d}")
-                blobs.append(payload)
-            yield pd.DataFrame({"image_id": ids, "bytes": blobs})
-
-    return base.mapInPandas(gen, "image_id string, bytes binary")
+    return _synth(
+        spark, n_rows, n_partitions, "image_id", "di",
+        lambda i: codecs.png_encode(feature_image_pixels(i % group_mod)),
+    )
 
 
 def synth_dup_images_cached(
@@ -500,23 +511,12 @@ def phash_image_pixels(row_id: int) -> np.ndarray:
 
 def synth_phash_images(spark, n_rows: int, n_partitions: int = 4):
     """(image_id 'pi_%08d', bytes): cell-mask PNGs; every 25th truncated."""
-    import pandas as pd
-
-    base = spark.range(0, n_rows, 1, n_partitions)
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for i in pdf["id"]:
-                i = int(i)
-                payload = codecs.png_encode(phash_image_pixels(i))
-                if i % FEATURE_CORRUPT_EVERY == FEATURE_CORRUPT_EVERY - 1:
-                    payload = payload[: max(8, len(payload) // 3)]
-                ids.append(f"pi_{i:08d}")
-                blobs.append(payload)
-            yield pd.DataFrame({"image_id": ids, "bytes": blobs})
-
-    return base.mapInPandas(gen, "image_id string, bytes binary")
+    return _synth(
+        spark, n_rows, n_partitions, "image_id", "pi",
+        lambda i: _truncated(
+            codecs.png_encode(phash_image_pixels(i)), i, _third
+        ),
+    )
 
 
 def synth_phash_images_cached(spark, n_rows: int, n_partitions: int = 4):
@@ -547,25 +547,15 @@ def audio_clip_samples(row_id: int) -> np.ndarray:
 
 
 def synth_audio_clips(spark, n_rows: int, n_partitions: int = 4):
-    """(clip_id 'au_%08d', bytes): PCM16 mono WAVs; every 25th truncated."""
-    import pandas as pd
-
-    base = spark.range(0, n_rows, 1, n_partitions)
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for i in pdf["id"]:
-                i = int(i)
-                sr, _, _ = audio_clip_params(i)
-                payload = codecs.wav_encode(audio_clip_samples(i), sr)
-                if i % FEATURE_CORRUPT_EVERY == FEATURE_CORRUPT_EVERY - 1:
-                    payload = payload[:20]  # RIFF magic intact → no raw-PCM
-                ids.append(f"au_{i:08d}")
-                blobs.append(payload)
-            yield pd.DataFrame({"clip_id": ids, "bytes": blobs})
-
-    return base.mapInPandas(gen, "clip_id string, bytes binary")
+    """(clip_id 'au_%08d', bytes): PCM16 mono WAVs; every 25th truncated
+    to its first 20 bytes (RIFF magic intact, so no raw-PCM fallback)."""
+    return _synth(
+        spark, n_rows, n_partitions, "clip_id", "au",
+        lambda i: _truncated(
+            codecs.wav_encode(audio_clip_samples(i), audio_clip_params(i)[0]),
+            i, lambda p: p[:20],
+        ),
+    )
 
 
 def synth_audio_clips_cached(spark, n_rows: int, n_partitions: int = 4):
@@ -592,27 +582,17 @@ def video_frame_pixels(clip_id: int, frame_idx: int) -> np.ndarray:
 def synth_video_clips(spark, n_rows: int, n_partitions: int = 4):
     """(clip_id 'vc_%08d', bytes): MPNG AVI clips of 6..20 two-tone frames;
     every 25th payload truncated (skipped by non-strict frame sampling)."""
-    import pandas as pd
 
-    base = spark.range(0, n_rows, 1, n_partitions)
+    def payload_of(i: int) -> bytes:
+        frames = [
+            codecs.png_encode(video_frame_pixels(i, f))
+            for f in range(video_clip_n_frames(i))
+        ]
+        return _truncated(
+            codecs.avi_encode(frames, fps=10), i, lambda p: p[: len(p) // 2]
+        )
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for i in pdf["id"]:
-                i = int(i)
-                frames = [
-                    codecs.png_encode(video_frame_pixels(i, f))
-                    for f in range(video_clip_n_frames(i))
-                ]
-                payload = codecs.avi_encode(frames, fps=10)
-                if i % FEATURE_CORRUPT_EVERY == FEATURE_CORRUPT_EVERY - 1:
-                    payload = payload[: len(payload) // 2]
-                ids.append(f"vc_{i:08d}")
-                blobs.append(payload)
-            yield pd.DataFrame({"clip_id": ids, "bytes": blobs})
-
-    return base.mapInPandas(gen, "clip_id string, bytes binary")
+    return _synth(spark, n_rows, n_partitions, "clip_id", "vc", payload_of)
 
 
 def synth_video_clips_cached(spark, n_rows: int, n_partitions: int = 4):

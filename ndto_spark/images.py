@@ -193,55 +193,23 @@ def metadata_consistency(df: DataFrame) -> DataFrame:
     dims_match compares decoded (w, h) to the declared columns; fmt_match
     compares the payload's magic-sniffed format to the declared one.
     Complements validate_images_metadata (which checks the declared values
-    against RULES, not against the bytes).
-
-    100 TB shape: one mapInPandas Arrow exchange over (id, bytes, w, h,
-    fmt) — the same batch discipline as decode_image_features
-    (preallocated arrays, per-row Python only for the decode itself);
-    zero shuffle; emits four narrow columns however wide the input.
+    against RULES, not against the bytes). Runs on multimodal's payload
+    kernel.
     """
-    import pandas as pd
-
     from . import codecs
+    from .multimodal import _map_payloads
 
-    def run(batches):
-        import numpy as np
+    def rows(got, err, w, h, fmt):
+        if err is not None:
+            return [(False, None, None)]
+        dfmt, px = got
+        dims = w is not None and h is not None and px.shape[:2] == (h, w)
+        return [(True, dims, fmt is not None and dfmt == fmt)]
 
-        for pdf in batches:
-            n = len(pdf)
-            payloads = pdf["bytes"].to_numpy(dtype=object, copy=False)
-            dw = pdf["w"].to_numpy(dtype=object, copy=False)
-            dh = pdf["h"].to_numpy(dtype=object, copy=False)
-            dfmt = pdf["fmt"].to_numpy(dtype=object, copy=False)
-            ok = np.zeros(n, dtype=bool)
-            dims = np.full(n, None, dtype=object)
-            fmts = np.full(n, None, dtype=object)
-            for i in range(n):
-                try:
-                    fmt, px = codecs.decode(bytes(payloads[i]))
-                except Exception:
-                    continue
-                ok[i] = True
-                dims[i] = bool(
-                    dw[i] is not None
-                    and dh[i] is not None
-                    and int(px.shape[1]) == int(dw[i])
-                    and int(px.shape[0]) == int(dh[i])
-                )
-                fmts[i] = bool(dfmt[i] is not None and fmt == dfmt[i])
-            yield pd.DataFrame(
-                {
-                    "image_id": pdf["image_id"],
-                    "decode_ok": ok,
-                    "dims_match": dims,
-                    "fmt_match": fmts,
-                }
-            )
-
-    return df.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        run,
-        "image_id string, decode_ok boolean, dims_match boolean, "
-        "fmt_match boolean",
+    return _map_payloads(
+        df, "image_id",
+        "decode_ok boolean, dims_match boolean, fmt_match boolean",
+        codecs.decode, rows, extra_cols=("w", "h", "fmt"),
     )
 
 

@@ -1,28 +1,45 @@
 """Multimodal column plumbing: image / audio / video as opaque binary
 columns with typed metadata.
 
-The Spark-side machinery — schema contracts, Arrow batch shapes, iterator
-UDF signatures, partition sizing — is real and tested. Decoding status:
+Decoders (pure-stdlib codecs in codecs.py, no external library):
 
-- ``decode_image_features``: REAL (pure-stdlib PNG codec) — mapInPandas
-  over image bytes → per-image feature rows (w, h, mean RGB, phash).
-- ``resize_images``: REAL batch resize (nearest-neighbor, pure numpy).
-- ``extract_audio_features``: REAL — standard RIFF/WAVE PCM16 decoding
-  needs no external library (codecs.wav_decode); per-clip sample-rate /
-  duration / rms / peak / zero-crossing features, vectorized numpy.
-- ``sample_video_frames``: REAL — standard RIFF/AVI container demux
-  (codecs.avi_decode_frames, pure stdlib like the WAV path) over MPNG
-  (real PNG frames, real decode) / MJPG video streams; one output row per
-  sampled frame, bounded batches. A headerless length-prefixed frame
-  concatenation is also accepted (``allow_raw_concat``, the raw-PCM
-  analog). What stays environment-limited: inter-frame-compressed codecs
-  (H.264 etc.) need libraries this container lacks — such streams fail
-  ValueError per clip (skipped non-strict), never NotImplementedError.
+- images: PNG and the fake-JPEG container — ``decode_image_features``,
+  ``resize_images``, ``color_histograms``, ``embed_images``,
+  ``image_sharpness``, ``transform_images`` and
+  ``images.metadata_consistency``;
+- audio: RIFF/WAVE PCM16 — ``extract_audio_features`` and
+  ``energy_segments``;
+- video: RIFF/AVI over MPNG/MJPG streams, or a headerless length-prefixed
+  frame concatenation — ``sample_video_frames``. Inter-frame-compressed
+  codecs (H.264 etc.) need codec libraries beyond these pure-stdlib
+  decoders; such clips are undecodable, never NotImplementedError.
+
+The payload kernel (``_map_payloads``) is the one Arrow path for every
+decoder above: one ``mapInArrow`` over ``(id, bytes, *extra columns)``
+that decodes each row once and lets the operator turn the decoded value,
+or the decode error, into zero or more output rows. Contract:
+
+- the output id column keeps the input column's name and native Spark
+  type, and its values pass through as Arrow values untouched (a pandas
+  batch would turn a long column holding a NULL into float64 and round
+  ids above 2^53); the schema is ``df.schema[id_col]`` followed by the
+  operator's fields;
+- a NULL payload is undecodable and never reaches the decoder; a decoder
+  that raises is undecodable too. ``decode_image_features``,
+  ``metadata_consistency`` and ``extract_audio_features`` emit an
+  ``ok=False`` row for it, ``sample_video_frames(strict=True)`` re-raises,
+  every other operator emits no row;
+- audio's raw-PCM fallback and video's raw-concatenation fallback are part
+  of their decoders;
+- each input row is processed once, with no aggregation: NULL and
+  duplicate ids pass through, the operators stay lazy, and they bind to
+  streaming frames unchanged.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+import struct
+from typing import Callable, Iterable
 
 import numpy as np
 
@@ -31,160 +48,165 @@ from pyspark.sql import functions as F
 
 from . import codecs
 
-IMAGE_FEATURES_SCHEMA = (
-    "image_id string, ok boolean, w int, h int, mean_r double, mean_g double, "
-    "mean_b double, phash bigint"
-)
+
+def _map_payloads(
+    df: DataFrame,
+    id_col: str,
+    fields: str,
+    decode: Callable,
+    rows: Callable[..., Iterable[tuple]],
+    extra_cols: tuple = (),
+) -> DataFrame:
+    """The payload kernel's launcher (module docstring): one ``mapInArrow``
+    over ``(id_col, bytes, *extra_cols)``. Each row's payload goes through
+    ``decode`` once; ``rows(value, err, *extras)`` gets the decoded value
+    and ``err=None``, or ``None`` and the exception (a NULL payload is a
+    ValueError), and returns tuples of the DDL ``fields``. Output columns
+    are built from column-wise lists."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import StructType
+
+    schema = StructType([df.schema[id_col], *StructType.fromDDL(fields)])
+    types = [to_arrow_type(f.dataType) for f in schema.fields[1:]]
+
+    def run(batches):
+        for batch in batches:
+            payloads, *extras = (c.to_pylist() for c in batch.columns[1:])
+            take, out = [], []
+            for i, payload in enumerate(payloads):
+                value = err = None
+                if payload is None:
+                    err = ValueError("NULL payload")
+                else:
+                    try:
+                        value = decode(payload)
+                    except Exception as e:
+                        err = e
+                for row in rows(value, err, *(x[i] for x in extras)):
+                    take.append(i)
+                    out.append(row)
+            cols = list(zip(*out)) or [()] * len(types)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(0).take(pa.array(take, pa.int64())),
+                    *(pa.array(c, t) for c, t in zip(cols, types)),
+                ],
+                names=schema.names,
+            )
+
+    return df.select(id_col, "bytes", *extra_cols).mapInArrow(run, schema)
+
+
+def _pixels(data: bytes) -> np.ndarray:
+    return codecs.decode(data)[1]
 
 
 def decode_image_features(df: DataFrame, id_col: str = "image_id") -> DataFrame:
-    """Arrow-batched image feature extraction (REAL decode, pure codec)."""
-    import pandas as pd
-
+    """Per-image (ok, w, h, mean RGB, phash) over REAL decode; undecodable
+    payloads give ok=False with NULL features."""
     from .fixtures import phash_of
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            # per-row Python is only the decode; bookkeeping is
-            # preallocated-array work (batch.py's measured ~2x pattern —
-            # row-at-a-time dict appends widened the Arrow-stage critical
-            # path)
-            n = len(pdf)
-            payloads = pdf["bytes"].to_numpy(dtype=object, copy=False)
-            ok = np.zeros(n, dtype=bool)
-            w = np.full(n, None, dtype=object)
-            h = np.full(n, None, dtype=object)
-            mr = np.full(n, None, dtype=object)
-            mg = np.full(n, None, dtype=object)
-            mb = np.full(n, None, dtype=object)
-            ph = np.full(n, None, dtype=object)
-            for i in range(n):
-                try:
-                    _, px = codecs.decode(bytes(payloads[i]))
-                except Exception:
-                    continue
-                m = px.reshape(-1, 3).mean(axis=0)
-                ok[i] = True
-                w[i] = int(px.shape[1])
-                h[i] = int(px.shape[0])
-                mr[i] = float(m[0])
-                mg[i] = float(m[1])
-                mb[i] = float(m[2])
-                ph[i] = phash_of(px)
-            yield pd.DataFrame(
-                {
-                    "image_id": pdf[id_col].to_numpy(dtype=object, copy=False),
-                    "ok": ok, "w": w, "h": h,
-                    "mean_r": mr, "mean_g": mg, "mean_b": mb, "phash": ph,
-                }
-            )
+    def rows(px, err):
+        if err is not None:
+            return [(False,) + (None,) * 6]
+        m = px.reshape(-1, 3).mean(axis=0)
+        return [(
+            True, int(px.shape[1]), int(px.shape[0]),
+            float(m[0]), float(m[1]), float(m[2]), phash_of(px),
+        )]
 
-    return df.select(id_col, "bytes").mapInPandas(run, IMAGE_FEATURES_SCHEMA)
+    return _map_payloads(
+        df, id_col,
+        "ok boolean, w int, h int, mean_r double, mean_g double, "
+        "mean_b double, phash bigint",
+        _pixels, rows,
+    )
 
 
 def resize_images(
     df: DataFrame, target_w: int, target_h: int, id_col: str = "image_id"
 ) -> DataFrame:
     """Nearest-neighbor batch resize → (id, bytes) of re-encoded PNGs (REAL)."""
-    import pandas as pd
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            # preallocated keep-mask bookkeeping (see decode_image_features)
-            n = len(pdf)
-            payloads = pdf["bytes"].to_numpy(dtype=object, copy=False)
-            blobs = np.full(n, None, dtype=object)
-            keep = np.zeros(n, dtype=bool)
-            for i in range(n):
-                try:
-                    _, px = codecs.decode(bytes(payloads[i]))
-                except Exception:
-                    continue
-                ys = (np.arange(target_h) * px.shape[0] // target_h).clip(
-                    0, px.shape[0] - 1
-                )
-                xs = (np.arange(target_w) * px.shape[1] // target_w).clip(
-                    0, px.shape[1] - 1
-                )
-                blobs[i] = codecs.png_encode(px[np.ix_(ys, xs)])
-                keep[i] = True
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(dtype=object, copy=False)[keep],
-                    "bytes": blobs[keep],
-                }
-            )
+    def rows(px, err):
+        if err is not None:
+            return ()
+        ys = (np.arange(target_h) * px.shape[0] // target_h).clip(
+            0, px.shape[0] - 1
+        )
+        xs = (np.arange(target_w) * px.shape[1] // target_w).clip(
+            0, px.shape[1] - 1
+        )
+        return [(codecs.png_encode(px[np.ix_(ys, xs)]),)]
 
-    return df.select(id_col, "bytes").mapInPandas(
-        run, f"{id_col} string, bytes binary"
-    )
-
-
-AUDIO_FEATURES_SCHEMA = (
-    "clip_id string, ok boolean, err string, sample_rate int, n_channels int, "
-    "n_samples int, duration_sec double, rms double, peak double, "
-    "zero_cross_rate double"
-)
-VIDEO_FRAMES_SCHEMA = "clip_id string, frame_idx int, frame_png binary"
+    return _map_payloads(df, id_col, "bytes binary", _pixels, rows)
 
 
 def extract_audio_features(
     df: DataFrame, id_col: str = "clip_id", allow_raw_pcm: bool = True
 ) -> DataFrame:
-    """REAL audio decode: standard RIFF/WAVE PCM16 (pure-stdlib codec in
-    codecs.py, same pattern as the real PNG codec — WAV needs no external
-    library). Emits per-clip (sample_rate, channels, frames, duration, rms,
-    peak, zero-crossing rate); feature math is vectorized numpy over the
-    decoded sample matrix, Arrow-batched via mapInPandas.
+    """REAL audio decode: standard RIFF/WAVE PCM16 (codecs.wav_decode).
+    Emits per-clip (sample_rate, channels, frames, duration, rms, peak,
+    zero-crossing rate); feature math is vectorized numpy over the decoded
+    sample matrix. Undecodable clips give ok=False with the error in
+    ``err`` and NULL features.
 
     ``allow_raw_pcm``: payloads that are not RIFF/WAVE fall back to a
     headerless 16-bit mono PCM interpretation (sample_rate NULL) — useful
     for raw capture streams; set False to mark them ok=False instead.
     """
-    import pandas as pd
 
-    def feats(x: np.ndarray, sr, iid):
+    def decode(data):
+        try:
+            return codecs.wav_decode(data)
+        except ValueError:
+            if not allow_raw_pcm or data.startswith(codecs.WAV_MAGIC):
+                raise
+            raw = data[: (len(data) // 2) * 2]
+            return None, np.frombuffer(raw, dtype="<i2").reshape(-1, 1)
+
+    def rows(got, err):
+        if err is not None:
+            return [(False, str(err)) + (None,) * 7]
+        sr, x = got
         mono = x.astype(np.float64).mean(axis=1) / 32768.0
         ok = mono.size > 0
-        return dict(
-            clip_id=iid, ok=ok, err=None,
-            sample_rate=sr, n_channels=int(x.shape[1]),
-            n_samples=int(x.shape[0]),
-            duration_sec=(float(x.shape[0]) / sr) if (ok and sr) else None,
-            rms=float(np.sqrt((mono**2).mean())) if ok else None,
-            peak=float(np.abs(mono).max()) if ok else None,
-            zero_cross_rate=(
+        return [(
+            ok, None, sr, int(x.shape[1]), int(x.shape[0]),
+            (float(x.shape[0]) / sr) if (ok and sr) else None,
+            float(np.sqrt((mono**2).mean())) if ok else None,
+            float(np.abs(mono).max()) if ok else None,
+            (
                 float((np.signbit(mono[1:]) != np.signbit(mono[:-1])).mean())
                 if mono.size > 1
                 else 0.0 if ok else None
             ),
-        )
+        )]
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out = []
-            for iid, payload in zip(pdf[id_col], pdf["bytes"]):
-                data = bytes(payload) if payload is not None else b""
-                try:
-                    sr, x = codecs.wav_decode(data)
-                    out.append(feats(x, sr, iid))
-                except ValueError as e:
-                    if allow_raw_pcm and not data.startswith(codecs.WAV_MAGIC):
-                        raw = data[: (len(data) // 2) * 2]
-                        x = np.frombuffer(raw, dtype="<i2").reshape(-1, 1)
-                        out.append(feats(x, None, iid))
-                    else:
-                        out.append(
-                            dict(
-                                clip_id=iid, ok=False, err=str(e),
-                                sample_rate=None, n_channels=None,
-                                n_samples=None, duration_sec=None, rms=None,
-                                peak=None, zero_cross_rate=None,
-                            )
-                        )
-            yield pd.DataFrame(out)
+    return _map_payloads(
+        df, id_col,
+        "ok boolean, err string, sample_rate int, n_channels int, "
+        "n_samples int, duration_sec double, rms double, peak double, "
+        "zero_cross_rate double",
+        decode, rows,
+    )
 
-    return df.select(id_col, "bytes").mapInPandas(run, AUDIO_FEATURES_SCHEMA)
+
+def _video_frames(data: bytes) -> list:
+    """Frames of a RIFF/AVI clip, or of a headerless concatenation of
+    big-endian-length-prefixed frames (the audio path's raw-PCM analog)."""
+    if data[:4] == codecs.AVI_MAGIC:
+        return codecs.avi_decode_frames(data)[1]
+    frames, pos = [], 0
+    while pos + 4 <= len(data):
+        (ln,) = struct.unpack(">I", data[pos : pos + 4])
+        frame = data[pos + 4 : pos + 4 + ln]
+        if len(frame) != ln:
+            raise ValueError("truncated raw frame concatenation")
+        frames.append(frame)
+        pos += 4 + ln
+    return frames
 
 
 def sample_video_frames(
@@ -192,57 +214,25 @@ def sample_video_frames(
     every_n: int = 10,
     id_col: str = "clip_id",
     strict: bool = False,
-    allow_raw_concat: bool = True,
 ) -> DataFrame:
     """REAL frame sampling over RIFF/AVI clips (codecs.avi_decode_frames —
-    pure-stdlib demux of MPNG/MJPG video streams), one output row per
-    sampled frame. ``allow_raw_concat`` also accepts the headerless
-    length-prefixed frame concatenation (the audio path's raw-PCM analog).
-    Non-strict mode skips undecodable clips (no rows — a validator keeps the
-    job alive on malformed payloads); ``strict=True`` raises instead."""
-    import struct
+    pure-stdlib demux of MPNG/MJPG video streams) or raw frame
+    concatenations, one output row per sampled frame. Non-strict mode
+    skips undecodable clips (no rows — a validator keeps the job alive on
+    malformed payloads); ``strict=True`` raises instead."""
 
-    import pandas as pd
+    def rows(frames, err):
+        if err is not None:
+            if strict:
+                raise err
+            return ()
+        return [
+            (idx, frame) for idx, frame in enumerate(frames) if idx % every_n == 0
+        ]
 
-    from . import codecs
-
-    def raw_concat_frames(data: bytes) -> list[bytes]:
-        frames, pos = [], 0
-        while pos + 4 <= len(data):
-            (ln,) = struct.unpack(">I", data[pos : pos + 4])
-            frame = data[pos + 4 : pos + 4 + ln]
-            if len(frame) != ln:
-                raise ValueError("truncated raw frame concatenation")
-            frames.append(frame)
-            pos += 4 + ln
-        return frames
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for iid, payload in zip(pdf[id_col], pdf["bytes"]):
-                data = bytes(payload)
-                try:
-                    if data[:4] == codecs.AVI_MAGIC:
-                        _, frames = codecs.avi_decode_frames(data)
-                    elif allow_raw_concat:
-                        frames = raw_concat_frames(data)
-                    else:
-                        raise ValueError("not a RIFF/AVI payload")
-                except ValueError:
-                    if strict:
-                        raise
-                    continue
-                rows.extend(
-                    dict(clip_id=iid, frame_idx=idx, frame_png=frame)
-                    for idx, frame in enumerate(frames)
-                    if idx % every_n == 0
-                )
-            yield pd.DataFrame(
-                rows, columns=["clip_id", "frame_idx", "frame_png"]
-            )
-
-    return df.select(id_col, "bytes").mapInPandas(run, VIDEO_FRAMES_SCHEMA)
+    return _map_payloads(
+        df, id_col, "frame_idx int, frame_png binary", _video_frames, rows
+    )
 
 
 def scene_cuts(
@@ -331,47 +321,21 @@ def color_histograms(
     Output: (id, channel 0..2, bin, n_px) — sparse long format, so the
     row volume is data-bounded (≤ 3·n_bins per image) and needs no
     array-vs-list comparison shims in the gate.
-
-    100 TB shape: same single Arrow exchange as decode_image_features —
-    mapInPandas, per-row Python is one ``bincount`` per channel
-    (vectorized over pixels), bookkeeping is list-extend per NONZERO bin
-    only; no shuffle, no joins.
     """
     if n_bins < 2 or 256 % n_bins:
         raise ValueError(f"n_bins must divide 256 and be >= 2, got {n_bins}")
     width = 256 // n_bins
-    import pandas as pd
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            payloads = pdf["bytes"].to_numpy(dtype=object, copy=False)
-            ids = pdf[id_col].to_numpy(dtype=object, copy=False)
-            o_id, o_ch, o_bin, o_n = [], [], [], []
-            for i in range(len(pdf)):
-                try:
-                    _, px = codecs.decode(bytes(payloads[i]))
-                except Exception:
-                    continue
-                for ch in range(3):
-                    counts = np.bincount(
-                        (px[:, :, ch] // width).ravel(), minlength=n_bins
-                    )
-                    nz = np.nonzero(counts)[0]
-                    o_id.extend([ids[i]] * len(nz))
-                    o_ch.extend([ch] * len(nz))
-                    o_bin.extend(int(b) for b in nz)
-                    o_n.extend(int(c) for c in counts[nz])
-            yield pd.DataFrame(
-                {
-                    "image_id": pd.Series(o_id, dtype=object),
-                    "channel": pd.Series(o_ch, dtype="int32"),
-                    "bin": pd.Series(o_bin, dtype="int32"),
-                    "n_px": pd.Series(o_n, dtype="int64"),
-                }
-            )
+    def rows(px, err):
+        if err is not None:
+            return
+        for ch in range(3):
+            counts = np.bincount((px[:, :, ch] // width).ravel(), minlength=n_bins)
+            for b in np.nonzero(counts)[0]:
+                yield ch, int(b), int(counts[b])
 
-    return df.select(id_col, "bytes").mapInPandas(
-        run, "image_id string, channel int, bin int, n_px long"
+    return _map_payloads(
+        df, id_col, "channel int, bin int, n_px long", _pixels, rows
     )
 
 
@@ -384,51 +348,29 @@ def embed_images(
     stand-in for a CLIP-style encoder that wires the image pipeline into
     the ANN/near-dup/SemDeDup operators (which only need an id + vector
     contract). Cell boundaries are the integer lattice ``i·h div grid``
-    (phash_of's convention). Undecodable payloads emit nothing.
-
-    100 TB shape: the same single Arrow decode exchange as
-    decode_image_features; per-row Python is one reshape-free numpy mean
-    per cell; downstream ANN consumes (id, embedding) without the bytes
-    column ever shuffling.
+    (phash_of's convention). Undecodable payloads and images smaller than
+    the grid emit nothing.
     """
     if grid < 1:
         raise ValueError(f"grid must be >= 1, got {grid}")
-    import pandas as pd
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            payloads = pdf["bytes"].to_numpy(dtype=object, copy=False)
-            ids = pdf[id_col].to_numpy(dtype=object, copy=False)
-            o_id, o_emb = [], []
-            for i in range(len(pdf)):
-                try:
-                    _, px = codecs.decode(bytes(payloads[i]))
-                except Exception:
-                    continue
-                h, w = px.shape[0], px.shape[1]
-                if h < grid or w < grid:
-                    continue
-                gray = px.mean(axis=2, dtype=np.float64)
-                emb = [
-                    float(
-                        gray[
-                            r * h // grid : (r + 1) * h // grid,
-                            c * w // grid : (c + 1) * w // grid,
-                        ].mean()
-                    )
-                    for r in range(grid)
-                    for c in range(grid)
-                ]
-                o_id.append(ids[i])
-                o_emb.append(emb)
-            yield pd.DataFrame(
-                {"image_id": pd.Series(o_id, dtype=object),
-                 "embedding": pd.Series(o_emb, dtype=object)}
+    def rows(px, err):
+        if err is not None or px.shape[0] < grid or px.shape[1] < grid:
+            return ()
+        h, w = px.shape[0], px.shape[1]
+        gray = px.mean(axis=2, dtype=np.float64)
+        return [([
+            float(
+                gray[
+                    r * h // grid : (r + 1) * h // grid,
+                    c * w // grid : (c + 1) * w // grid,
+                ].mean()
             )
+            for r in range(grid)
+            for c in range(grid)
+        ],)]
 
-    return df.select(id_col, "bytes").mapInPandas(
-        run, "image_id string, embedding array<double>"
-    )
+    return _map_payloads(df, id_col, "embedding array<double>", _pixels, rows)
 
 
 def energy_segments(
@@ -446,72 +388,40 @@ def energy_segments(
     into segments.
 
     Output: (id, n_windows, n_active, n_segments, longest_run,
-    rms_max_e6). Undecodable payloads emit nothing (the ok=False path is
-    gated in audio_features_clips). Keep ``window`` a power of two when
+    rms_max_e6), one row per decodable non-empty clip. Undecodable
+    payloads emit nothing (the ok=False path is gated in
+    audio_features_clips). Keep ``window`` a power of two when
     bit-reproducibility matters: the frame mean then divides by a power
     of two (exact), which is what lets the gate's closed-form fixture
     oracle replay rms_e6 exactly.
-
-    100 TB shape: same single Arrow exchange as extract_audio_features;
-    per-row Python is one reshape + vectorized per-frame reduction; the
-    per-clip summary keeps output rows == input rows.
     """
     if window < 1:
         raise ValueError(f"window must be >= 1, got {window}")
-    import pandas as pd
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            payloads = pdf["bytes"].to_numpy(dtype=object, copy=False)
-            ids = pdf[id_col].to_numpy(dtype=object, copy=False)
-            out = []
-            for i in range(len(pdf)):
-                data = bytes(payloads[i]) if payloads[i] is not None else b""
-                try:
-                    _, x = codecs.wav_decode(data)
-                except Exception:
-                    continue
-                if x.shape[0] == 0:
-                    continue
-                mono = x.astype(np.float64).mean(axis=1) / 32768.0
-                n = mono.size
-                rms_e6 = []
-                for s in range(0, n, window):
-                    fr = mono[s : s + window]
-                    rms_e6.append(
-                        int(np.floor(np.sqrt((fr * fr).mean()) * 1e6))
-                    )
-                act = [r >= thr_e6 for r in rms_e6]
-                segs, run_len, longest, prev = 0, 0, 0, False
-                for a in act:
-                    if a:
-                        run_len = run_len + 1 if prev else 1
-                        if run_len == 1:
-                            segs += 1
-                        longest = max(longest, run_len)
-                    prev = a
-                out.append(
-                    dict(
-                        clip_id=ids[i],
-                        n_windows=len(rms_e6),
-                        n_active=sum(act),
-                        n_segments=segs,
-                        longest_run=longest,
-                        rms_max_e6=max(rms_e6),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "clip_id", "n_windows", "n_active", "n_segments",
-                    "longest_run", "rms_max_e6",
-                ],
-            )
+    def rows(got, err):
+        if err is not None or got[1].shape[0] == 0:
+            return ()
+        mono = got[1].astype(np.float64).mean(axis=1) / 32768.0
+        rms_e6 = [
+            int(np.floor(np.sqrt((fr * fr).mean()) * 1e6))
+            for fr in (mono[s : s + window] for s in range(0, mono.size, window))
+        ]
+        act = [r >= thr_e6 for r in rms_e6]
+        segs, run_len, longest, prev = 0, 0, 0, False
+        for a in act:
+            if a:
+                run_len = run_len + 1 if prev else 1
+                if run_len == 1:
+                    segs += 1
+                longest = max(longest, run_len)
+            prev = a
+        return [(len(rms_e6), sum(act), segs, longest, max(rms_e6))]
 
-    return df.select(id_col, "bytes").mapInPandas(
-        run,
-        "clip_id string, n_windows long, n_active long, n_segments long, "
-        "longest_run long, rms_max_e6 long",
+    return _map_payloads(
+        df, id_col,
+        "n_windows long, n_active long, n_segments long, longest_run long, "
+        "rms_max_e6 long",
+        codecs.wav_decode, rows,
     )
 
 
@@ -528,56 +438,28 @@ def image_sharpness(df: DataFrame, id_col: str = "image_id") -> DataFrame:
     is a single integer expression (n·ΣL² ≥ (ΣL)² by Cauchy-Schwarz, so
     floor == truncate and any engine agrees bit-for-bit). Images smaller
     than 3×3 or undecodable emit nothing.
-
-    100 TB shape: same single Arrow exchange as decode_image_features —
-    mapInPandas, the Laplacian is four vectorized numpy shifts per image,
-    output is one narrow row per image; bytes never shuffle.
     """
-    import pandas as pd
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            payloads = pdf["bytes"].to_numpy(dtype=object, copy=False)
-            ids = pdf[id_col].to_numpy(dtype=object, copy=False)
-            o_id, o_n, o_s, o_q, o_v = [], [], [], [], []
-            for i in range(len(pdf)):
-                try:
-                    _, px = codecs.decode(bytes(payloads[i]))
-                except Exception:
-                    continue
-                h, w = px.shape[0], px.shape[1]
-                if h < 3 or w < 3:
-                    continue
-                g = px.sum(axis=2, dtype=np.int64)
-                lap = (
-                    4 * g[1:-1, 1:-1]
-                    - g[:-2, 1:-1]
-                    - g[2:, 1:-1]
-                    - g[1:-1, :-2]
-                    - g[1:-1, 2:]
-                )
-                n = int(lap.size)
-                s = int(lap.sum())
-                q = int((lap * lap).sum())
-                o_id.append(ids[i])
-                o_n.append(n)
-                o_s.append(s)
-                o_q.append(q)
-                o_v.append((1_000_000 * (n * q - s * s)) // (n * n))
-            yield pd.DataFrame(
-                {
-                    "image_id": pd.Series(o_id, dtype=object),
-                    "n_interior": pd.Series(o_n, dtype="int64"),
-                    "lap_sum": pd.Series(o_s, dtype="int64"),
-                    "lap_sumsq": pd.Series(o_q, dtype="int64"),
-                    "lap_var_e6": pd.Series(o_v, dtype="int64"),
-                }
-            )
+    def rows(px, err):
+        if err is not None or px.shape[0] < 3 or px.shape[1] < 3:
+            return ()
+        g = px.sum(axis=2, dtype=np.int64)
+        lap = (
+            4 * g[1:-1, 1:-1]
+            - g[:-2, 1:-1]
+            - g[2:, 1:-1]
+            - g[1:-1, :-2]
+            - g[1:-1, 2:]
+        )
+        n = int(lap.size)
+        s = int(lap.sum())
+        q = int((lap * lap).sum())
+        return [(n, s, q, (1_000_000 * (n * q - s * s)) // (n * n))]
 
-    return df.select(id_col, "bytes").mapInPandas(
-        run,
-        "image_id string, n_interior long, lap_sum long, lap_sumsq long, "
-        "lap_var_e6 long",
+    return _map_payloads(
+        df, id_col,
+        "n_interior long, lap_sum long, lap_sumsq long, lap_var_e6 long",
+        _pixels, rows,
     )
 
 
@@ -657,11 +539,9 @@ def image_dhash(
 
     Output: (id, dhash bigint). Undecodable payloads emit nothing.
 
-    100 TB shape: decode rides the SAME single Arrow exchange as
-    embed_images; the bit assembly is a pure codegen projection over the
-    pooled-cell array — bytes never shuffle — and the hash feeds
-    phash_near_dups(bits=grid·(grid−1)) unchanged for banded hamming
-    near-dup at scale.
+    The bit assembly is a pure codegen projection over embed_images'
+    pooled-cell array, and the hash feeds phash_near_dups(bits=grid·
+    (grid−1)) unchanged for banded hamming near-dup at scale.
     """
     if grid < 2:
         raise ValueError(f"grid must be >= 2 for horizontal gradients, got {grid}")
@@ -678,10 +558,14 @@ def image_dhash(
                 F.lit(0)
             ).cast("bigint")
             pos += 1
-    return emb.select("image_id", dhash.alias("dhash"))
+    return emb.select(id_col, dhash.alias("dhash"))
 
 
-_IMAGE_TRANSFORMS = ("hflip", "vflip", "rot180")
+_IMAGE_TRANSFORMS = {
+    "hflip": lambda px: px[:, ::-1],
+    "vflip": lambda px: px[::-1, :],
+    "rot180": lambda px: px[::-1, ::-1],
+}
 
 
 def transform_images(
@@ -694,49 +578,22 @@ def transform_images(
     decodes to bit-identical flipped pixels on any platform, and
     downstream features (phash/dhash/embeddings) of an augmented corpus
     are closed-form in the original's. Undecodable payloads emit nothing
-    (same contract as resize_images).
-
-    100 TB shape: one Arrow exchange (mapInPandas), numpy view-flips (no
-    copy until the PNG encode), bytes never shuffle — augmentation
-    multiplies the corpus WITHOUT a join, so it composes with
-    dedup/feature operators as a plain union of transformed frames.
+    (same contract as resize_images). Augmentation multiplies the corpus
+    WITHOUT a join, so it composes with dedup/feature operators as a
+    plain union of transformed frames.
     """
     if op not in _IMAGE_TRANSFORMS:
         raise ValueError(
-            f"op must be one of {_IMAGE_TRANSFORMS}, got {op!r}"
+            f"op must be one of {tuple(_IMAGE_TRANSFORMS)}, got {op!r}"
         )
-    import pandas as pd
+    flip = _IMAGE_TRANSFORMS[op]
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            # preallocated keep-mask bookkeeping (see decode_image_features)
-            n = len(pdf)
-            payloads = pdf["bytes"].to_numpy(dtype=object, copy=False)
-            blobs = np.full(n, None, dtype=object)
-            keep = np.zeros(n, dtype=bool)
-            for i in range(n):
-                try:
-                    _, px = codecs.decode(bytes(payloads[i]))
-                except Exception:
-                    continue
-                if op == "hflip":
-                    out = px[:, ::-1]
-                elif op == "vflip":
-                    out = px[::-1, :]
-                else:  # rot180
-                    out = px[::-1, ::-1]
-                blobs[i] = codecs.png_encode(np.ascontiguousarray(out))
-                keep[i] = True
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(dtype=object, copy=False)[keep],
-                    "bytes": blobs[keep],
-                }
-            )
+    def rows(px, err):
+        if err is not None:
+            return ()
+        return [(codecs.png_encode(np.ascontiguousarray(flip(px))),)]
 
-    return df.select(id_col, "bytes").mapInPandas(
-        run, f"{id_col} string, bytes binary"
-    )
+    return _map_payloads(df, id_col, "bytes binary", _pixels, rows)
 
 
 def audio_fingerprint(

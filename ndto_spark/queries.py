@@ -2592,8 +2592,8 @@ def q_video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_stream_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING multimodal ingest: the same Arrow decode operator
-    (decode_image_features — mapInPandas is stateless, so it binds to a
-    readStream unchanged) run as a Structured Streaming file source →
+    (decode_image_features — the payload kernel is stateless, so it binds
+    to a readStream unchanged) run as a Structured Streaming file source →
     append parquet sink, driven to completion with availableNow. The
     oracle is byte-identical to the batch image_features_clips oracle:
     a stateless streaming operator must emit exactly the batch rows."""

@@ -273,6 +273,17 @@ def approx_distinct_hll_portable(df: DataFrame, col: str, p: int = 10) -> DataFr
 
     Returns (column_name, approx_distinct bigint).
     """
+    stats, est = _hll(df, col, p)
+    return stats.select(F.lit(col).alias("column_name"), est)
+
+
+def _hll(
+    df: DataFrame, col: str, p: int, group_col: Optional[str] = None
+) -> "tuple[DataFrame, Column]":
+    """The portable HLL core: per-(group, register) max rho over the
+    non-NULL ``col`` values (and non-NULL ``group_col`` when given), reduced
+    to (grp?, seen, s) per group — a global aggregate without a group — and
+    the ``approx_distinct`` estimate column over that frame."""
     m = 1 << p
     w_bits = 32 - p
     mask = (1 << w_bits) - 1
@@ -283,13 +294,20 @@ def approx_distinct_hll_portable(df: DataFrame, col: str, p: int = 10) -> DataFr
     rho = F.when(w == 0, F.lit(w_bits + 1)).otherwise(
         F.lit(w_bits + 1) - F.length(F.bin(w))
     )
+    keep, grp = F.col(col).isNotNull(), []
+    if group_col is not None:
+        keep, grp = keep & F.col(group_col).isNotNull(), ["grp"]
     regs = (
-        df.where(F.col(col).isNotNull())
-        .select(F.shiftright(x, w_bits).alias("reg"), rho.alias("rho"))
-        .groupBy("reg")
+        df.where(keep)
+        .select(
+            *(F.col(group_col).alias(g) for g in grp),
+            F.shiftright(x, w_bits).alias("reg"),
+            rho.alias("rho"),
+        )
+        .groupBy(*grp, "reg")
         .agg(F.max("rho").alias("mrho"))
     )
-    stats = regs.agg(
+    stats = regs.groupBy(*grp).agg(
         F.count(F.lit(1)).alias("seen"),
         F.sum(F.pow(F.lit(2.0), -F.col("mrho"))).alias("s"),
     )
@@ -302,10 +320,7 @@ def approx_distinct_hll_portable(df: DataFrame, col: str, p: int = 10) -> DataFr
         (e_raw <= F.lit(2.5 * m)) & (zeros > 0),
         F.lit(float(m)) * F.log(F.lit(float(m)) / zeros),
     ).otherwise(e_raw)
-    return stats.select(
-        F.lit(col).alias("column_name"),
-        F.floor(est).cast("bigint").alias("approx_distinct"),
-    )
+    return stats, F.floor(est).cast("bigint").alias("approx_distinct")
 
 
 def reference_profile(
@@ -422,43 +437,8 @@ def approx_distinct_hll_portable_grouped(
     representable in float64, making the estimate order-independent —
     deterministic under any partitioning.
     """
-    m = 1 << p
-    w_bits = 32 - p
-    mask = (1 << w_bits) - 1
-    x = F.conv(F.substring(F.md5(F.col(col).cast("string")), 1, 8), 16, 10).cast(
-        "long"
-    )
-    w = x.bitwiseAND(F.lit(mask))
-    rho = F.when(w == 0, F.lit(w_bits + 1)).otherwise(
-        F.lit(w_bits + 1) - F.length(F.bin(w))
-    )
-    regs = (
-        df.where(F.col(col).isNotNull() & F.col(group_col).isNotNull())
-        .select(
-            F.col(group_col).alias("grp"),
-            F.shiftright(x, w_bits).alias("reg"),
-            rho.alias("rho"),
-        )
-        .groupBy("grp", "reg")
-        .agg(F.max("rho").alias("mrho"))
-    )
-    stats = regs.groupBy("grp").agg(
-        F.count(F.lit(1)).alias("seen"),
-        F.sum(F.pow(F.lit(2.0), -F.col("mrho"))).alias("s"),
-    )
-    alpha = hll_alpha(m)
-    e_raw = F.lit(alpha * m * m) / (
-        F.lit(float(m)) - F.col("seen") + F.col("s")
-    )
-    zeros = F.lit(m) - F.col("seen")
-    est = F.when(
-        (e_raw <= F.lit(2.5 * m)) & (zeros > 0),
-        F.lit(float(m)) * F.log(F.lit(float(m)) / zeros),
-    ).otherwise(e_raw)
-    return stats.select(
-        F.col("grp").alias(group_col),
-        F.floor(est).cast("bigint").alias("approx_distinct"),
-    )
+    stats, est = _hll(df, col, p, group_col)
+    return stats.select(F.col("grp").alias(group_col), est)
 
 
 # ---------------------------------------------------------------------------

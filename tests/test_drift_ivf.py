@@ -146,6 +146,27 @@ def test_grouped_hll_tracks_exact_distinct(spark):
         assert abs(out[g] - e) <= max(3, 0.1 * e), (g, out[g], e)
 
 
+
+@pytest.mark.parametrize("rows", ["empty", "all_null"])
+def test_portable_hll_frame_shapes_on_no_values(spark, rows):
+    df = spark.createDataFrame(
+        [] if rows == "empty" else [(None, "a"), (None, "b")],
+        "v long, g string",
+    )
+    got = table_rules.approx_distinct_hll_portable(df, "v").collect()
+    assert [tuple(r) for r in got] == [("v", None)]
+    grouped = table_rules.approx_distinct_hll_portable_grouped(df, "v", "g")
+    assert grouped.collect() == []
+
+
+def test_portable_hll_one_group_matches_ungrouped(spark):
+    df = spark.range(0, 3000).select(
+        (F.col("id") % 700).alias("v"), F.lit("all").alias("g")
+    )
+    (whole,) = table_rules.approx_distinct_hll_portable(df, "v").collect()
+    (grp,) = table_rules.approx_distinct_hll_portable_grouped(df, "v", "g").collect()
+    assert whole.approx_distinct == grp.approx_distinct
+
 def test_quantize_embeddings_codes_bounds_and_nulls(spark):
     from ndto_spark.ann import quantize_embeddings
 
