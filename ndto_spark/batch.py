@@ -8,11 +8,11 @@ pandas UDFs over Arrow batches — zero per-row Python crossings, one
 JVM→Python round trip per Arrow batch (2048 rows in the bench sessions:
 ``spark.sql.execution.arrow.maxRecordsPerBatch``, see CLAUDE.md).
 
-The check columns come as one cached (chk, violations) pair
-(``_check_columns``). ``images.validate_images`` puts them in the same
-projection as the metadata rules, so its one annotated scan reads ``bytes``
-once; ``images.validate_images_metadata`` leaves them out and its scan
-never reads ``bytes``.
+The check columns come as one (chk, violations) pair (``_check_columns``).
+``images.validate_images`` projects ``chk`` once ahead of the metadata and
+check violations (``runner._annotate``), so its one annotated scan reads
+``bytes`` once; ``images.validate_images_metadata`` leaves them out and
+its scan never reads ``bytes``.
 """
 
 from __future__ import annotations
@@ -22,14 +22,13 @@ from typing import Optional
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from . import codecs, fixtures
-from .compiler import cached
-from .runner import PARTITION_COL, VIOLATIONS_COL
+from .runner import _violation
 
 IMAGE_CHECK_TYPE = T.StructType(
     [
@@ -117,48 +116,21 @@ def image_check_udf(seed: int):
     return check
 
 
-def _annotate(
-    df: DataFrame,
-    seed: int,
-    key: str,
-    min_psnr: float,
-    first: Optional[Column] = None,
-) -> DataFrame:
-    """(key, violations, partition_id): the batch checks' violations array,
-    after the ``first`` violations array when one is given. Both arrays and
-    the check UDF call sit in one projection, so ``bytes`` is read once."""
-    # seed picks the references the UDF regenerates; min_psnr is folded
-    # into the entries as a literal
-    chk, violations = cached(
-        ("image_batch_violations", seed, key, min_psnr),
-        lambda: _check_columns(seed, key, min_psnr),
-    )
-    cols = [F.col(key), F.col("w"), F.col("h"), F.col("fmt"), chk]
-    if first is not None:
-        cols.append(first.alias("_first"))
-        violations = F.concat(F.col("_first"), violations)
-    return df.select(
-        *cols, F.spark_partition_id().alias(PARTITION_COL)
-    ).select(F.col(key), violations.alias(VIOLATIONS_COL), PARTITION_COL)
-
-
 def _check_columns(
     seed: int, key: str, min_psnr: float
 ) -> tuple[Column, Column]:
-    """The check UDF call (aliased ``chk``) and the violations array built
-    from its fields and the declared (w, h, fmt) columns."""
-    chk = image_check_udf(seed)(
-        F.col(key), F.col("bytes"), F.col("caption")
-    ).alias("chk")
+    """The check UDF call, to be projected as ``chk``, and the violations
+    array built from its fields and the declared (w, h, fmt) columns."""
+    chk = image_check_udf(seed)(F.col(key), F.col("bytes"), F.col("caption"))
     c = F.col("chk")
     entries = [
         F.when(
             ~c["decode_ok"],
-            _v("bytes", "$.decode", "decode", F.concat(F.lit("Image payload does not decode: "), F.coalesce(c["err"], F.lit("unknown")))),
+            _violation("bytes", "$.decode", "decode", F.concat(F.lit("Image payload does not decode: "), F.coalesce(c["err"], F.lit("unknown")))),
         ),
         F.when(
             c["decode_ok"] & ((c["w_actual"] != F.col("w")) | (c["h_actual"] != F.col("h"))),
-            _v(
+            _violation(
                 "bytes",
                 "$.dimensions",
                 "dimensions",
@@ -173,7 +145,7 @@ def _check_columns(
         ),
         F.when(
             c["decode_ok"] & (c["fmt_detected"] != F.col("fmt")),
-            _v(
+            _violation(
                 "bytes",
                 "$.format",
                 "format",
@@ -186,7 +158,7 @@ def _check_columns(
         ),
         F.when(
             c["decode_ok"] & c["psnr"].isNotNull() & (c["psnr"] < min_psnr),
-            _v(
+            _violation(
                 "bytes",
                 "$.psnr",
                 "psnr",
@@ -199,16 +171,8 @@ def _check_columns(
         ),
         F.when(
             c["caption_ok"].isNotNull() & ~c["caption_ok"],
-            _v("caption", "$.caption_equality", "caption_equality", F.lit("Caption does not match the reference caption")),
+            _violation("caption", "$.caption_equality", "caption_equality", "Caption does not match the reference caption"),
         ),
     ]
     return chk, F.array_compact(F.array(*entries))
 
-
-def _v(column: str, path: str, keyword: str, description: Column) -> Column:
-    return F.struct(
-        F.lit(column).alias("column"),
-        F.lit(path).alias("schema_path"),
-        F.lit(keyword).alias("keyword"),
-        description.cast("string").alias("description"),
-    )

@@ -31,7 +31,6 @@ import hashlib
 import json
 import os
 import time
-from dataclasses import dataclass
 from typing import Callable, Optional
 
 from pyspark.sql import Column, DataFrame
@@ -164,7 +163,6 @@ def run_resumable(
     if max_buckets_per_call is not None:
         pending = pending[:max_buckets_per_call]
 
-    spark = df.sparkSession
     metric_cols = [
         f.name
         for f in df.schema.fields
@@ -197,11 +195,11 @@ def run_resumable(
             viol = res.violations.withColumn("bucket", F.lit(b)).observe(
                 obs, F.count(F.lit(1)).alias("n_violations")
             )
-            # idempotent per-bucket output: dynamic partition overwrite
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            viol.write.mode("overwrite").partitionBy("bucket").parquet(
-                ckpt.violations_dir
-            )
+            # idempotent per-bucket output: dynamic partition overwrite, as
+            # a write option so the session's own mode is left alone
+            viol.write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy("bucket").parquet(ckpt.violations_dir)
             n_viol = int(obs.get["n_violations"])
             # per-partition metrics (north_star: manifest carries metrics
             # per partition): null counts + min/max of every numeric column

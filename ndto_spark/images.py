@@ -6,14 +6,16 @@ Combines the three rule families over one input:
    caption);
 2. batch rules — Arrow pandas-UDF decode/dimension/format/PSNR/caption
    checks over ``bytes`` (see batch.py);
-3. table rules — key uniqueness (the only shuffle in the pipeline).
+3. table rules — key uniqueness (the only shuffle besides the verdicts).
 
 ``validate_images`` checks each row once, as ndto's generated
-``is_valid/1`` does: one projection computes the metadata rule array and
-the batch checks side by side, so one annotated scan reads ``bytes`` once;
-the uniqueness count is the second and last scan.
-``validate_images_metadata`` runs families 1 and 3 only: that branch NEVER
-touches ``bytes``, so its parquet scan prunes the heavy column (check
+``is_valid/1`` does: the check struct is projected once
+(``runner._annotate``), and the metadata and check violations are built
+beside it into one array, so one annotated scan reads ``bytes`` once. The
+uniqueness rows join that result as table-level violations in
+``runner._result_from_annotated``; their count is the second and last
+scan. ``validate_images_metadata`` runs families 1 and 3 only: that branch
+NEVER touches ``bytes``, so its parquet scan prunes the heavy column (check
 `.explain` ReadSchema).
 
 Output: the engine contract violations + per-partition verdicts.
@@ -21,14 +23,20 @@ Output: the engine contract violations + per-partition verdicts.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import table_rules
-from .batch import _annotate
-from .runner import PARTITION_COL, RuleSet, _result_from_annotated, validate
+from .batch import _check_columns
+from .compiler import cached
+from .runner import (
+    PARTITION_COL,
+    RuleSet,
+    ValidationResult,
+    _annotate,
+    _result_from_annotated,
+    _violation,
+)
 
 IMAGE_METADATA_RULES = {
     "image_id": {"type": "string", "pattern": "^img_[0-9a-f]{16}$"},
@@ -51,34 +59,23 @@ def validate_images_metadata(
 
     Output: (key, column, schema_path, keyword, description).
     """
-    meta = validate(df, IMAGE_METADATA_RULES, key=key)
-    violations = meta.violations.select(
-        key, "column", "schema_path", "keyword", "description"
-    )
-    if check_uniqueness:
-        violations = violations.unionByName(_uniqueness_violations(df, key))
-    return violations
+    annotated = _annotate(df, RuleSet(IMAGE_METADATA_RULES).violations_array(df))
+    table = _uniqueness(df, key) if check_uniqueness else None
+    return _result_from_annotated(annotated, key, table).violations.drop(PARTITION_COL)
 
 
-def _uniqueness_violations(df: DataFrame, key: str) -> DataFrame:
-    """One violation row per duplicated non-null key: (key, column,
-    schema_path, keyword, description)."""
+def _uniqueness(df: DataFrame, key: str) -> DataFrame:
+    """One table-level ``(key, v)`` row per duplicated non-null key."""
     dups = table_rules.uniqueness(df.filter(F.col(key).isNotNull()), key)
     return dups.select(
         F.col(key),
-        F.lit(key).alias("column"),
-        F.lit("$.unique").alias("schema_path"),
-        F.lit("unique").alias("keyword"),
-        F.format_string("Key appears %d times", F.col("n_dups")).alias(
-            "description"
-        ),
+        _violation(
+            key,
+            "$.unique",
+            "unique",
+            F.format_string("Key appears %d times", F.col("n_dups")),
+        ).alias("v"),
     )
-
-
-@dataclass
-class ImagesResult:
-    violations: DataFrame  # image_id, column, schema_path, keyword, description, partition_id
-    verdicts: DataFrame  # partition_id, n_rows, n_violations, pass
 
 
 def validate_images(
@@ -88,8 +85,12 @@ def validate_images(
     min_psnr: float = 40.0,
     check_uniqueness: bool = True,
     phash_partitions: int | None = None,
-) -> ImagesResult:
+) -> ValidationResult:
     """Validate an image+caption table (see module docstring).
+
+    Key uniqueness is table-level: its violations report under
+    ``partition_id = -1``, and its verdict ``(-1, 0, k, false)`` exists
+    only when k > 0 keys repeat.
 
     ``phash_partitions``: when set, the input is repartitionByRange'd on
     ``phash`` into that many range buckets before validation (the north
@@ -105,25 +106,15 @@ def validate_images(
     if phash_partitions is not None:
         df = df.repartitionByRange(phash_partitions, F.col("phash"))
     meta = RuleSet(IMAGE_METADATA_RULES).violations_array(df)
-    annotated = _annotate(df, seed, key, min_psnr, first=meta)
-    res = _result_from_annotated(annotated, key)
-    violations, verdicts = res.violations, res.verdicts
-    if check_uniqueness:
-        # table-level: no single partition, so it reports under -1; a
-        # grouped count over no duplicates is no row, so a table without
-        # duplicates gets no -1 verdict
-        dup_v = _uniqueness_violations(df, key).withColumn(
-            PARTITION_COL, F.lit(-1)
-        )
-        violations = violations.unionByName(dup_v)
-        verdicts = verdicts.unionByName(
-            dup_v.groupBy(PARTITION_COL).agg(
-                F.lit(0).cast("bigint").alias("n_rows"),
-                F.count(F.lit(1)).alias("n_violations"),
-                F.lit(False).alias("pass"),
-            )
-        )
-    return ImagesResult(violations=violations, verdicts=verdicts)
+    # seed picks the references the UDF regenerates; min_psnr is folded
+    # into the entries as a literal
+    chk, checks = cached(
+        ("image_batch_violations", seed, key, min_psnr),
+        lambda: _check_columns(seed, key, min_psnr),
+    )
+    annotated = _annotate(df, F.concat(meta, checks), pre={"chk": chk})
+    table = _uniqueness(df, key) if check_uniqueness else None
+    return _result_from_annotated(annotated, key, table)
 
 
 def pair_quality_filter(

@@ -26,11 +26,11 @@ from . import spill
 from .compiler import CompileOptions, Compiler, cached
 from .dedup import _spread
 from .runner import (
-    PARTITION_COL,
-    VIOLATIONS_COL,
     ValidationResult,
+    _annotate,
     _entry,
     _result_from_annotated,
+    _violation,
 )
 from .spec import Schema, SpecError, normalize
 
@@ -157,16 +157,10 @@ def validate_json_column(
         }
         comp = Compiler(registry=registry, options=options)
         compiled = comp.compile(schema, F.col(_PARSED_COL), dtype, "$")
-        bad_json = F.col(_BAD_JSON_COL)
         entry = F.when(
-            bad_json,
-            F.struct(
-                F.lit(col).alias("column"),
-                F.lit("$.json").alias("schema_path"),
-                F.lit("json").alias("keyword"),
-                F.lit("Value is not parseable JSON").alias("description"),
-            ),
-        ).otherwise(_entry(F.lit(col), compiled))
+            F.col(_BAD_JSON_COL),
+            _violation(col, "$.json", "json", "Value is not parseable JSON"),
+        ).otherwise(_entry(col, compiled))
         return parsed, F.array_compact(F.array(entry))
 
     parsed, arr = cached(
@@ -185,13 +179,7 @@ def validate_json_column(
     # CollapseProject refuses to inline a non-cheap producer expression
     # that is consumed more than once, so the plan carries exactly one
     # from_json (asserted by tests/test_json_rules.py::test_single_parse).
-    parsed_df = _spread(df).withColumns(parsed)
-    annotated = (
-        parsed_df.withColumn(VIOLATIONS_COL, arr)
-        .withColumn(PARTITION_COL, F.spark_partition_id())
-        .drop(_PARSED_COL, _BAD_JSON_COL)
-    )
-    return _result_from_annotated(annotated, key)
+    return _result_from_annotated(_annotate(_spread(df), arr, pre=parsed), key)
 
 
 def infer_json_schema(df: DataFrame, col: str) -> DataFrame:

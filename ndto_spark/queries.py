@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 from . import ann, dedup, table_rules, temporal
 from . import fixtures as _FX
 from .functions import text as textfn
-from .runner import RuleSet
 
 # ---------------------------------------------------------------------------
 # rule sets (shared by queries and the flagship entry)
@@ -72,8 +71,13 @@ def _violations(df: DataFrame, rules: dict, key: str) -> DataFrame:
     # regex/JSON rule on ONE core). Column pruning pushes the needed-cols
     # projection below the exchange, and partition_id is dropped from this
     # helper's output, so results are unchanged.
-    res = validate(dedup._spread(df), rules, key=key)
-    return res.violations.select(
+    return _gate_rows(validate(dedup._spread(df), rules, key=key).violations, key)
+
+
+def _gate_rows(violations: DataFrame, key: str) -> DataFrame:
+    """A violations frame as the validate_* gate rows: (key, column_name,
+    schema_path, keyword, description)."""
+    return violations.select(
         F.col(key),
         F.col("column").alias("column_name"),
         "schema_path",
@@ -117,9 +121,7 @@ def q_stats_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_uniqueness_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return table_rules.uniqueness(
-        _read(spark, sf_dir, "lineitem"), "l_orderkey", two_phase=True
-    )
+    return table_rules.uniqueness(_read(spark, sf_dir, "lineitem"), "l_orderkey")
 
 
 def q_ref_integrity_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1027,13 +1029,7 @@ def q_validate_stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id bigint, column string, schema_path string, "
         "keyword string, description string",
     )
-    return sink.select(
-        "event_id",
-        F.col("column").alias("column_name"),
-        "schema_path",
-        "keyword",
-        "description",
-    )
+    return _gate_rows(sink, "event_id")
 
 
 def q_validate_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1082,10 +1078,7 @@ def q_validate_row_object(spark: SparkSession, sf_dir: str) -> DataFrame:
         "min_properties": 3,
     }
     res = validate_row_object(ev, schema, key="event_id")
-    return res.violations.select(
-        "event_id", F.col("column").alias("column_name"), "schema_path",
-        "keyword", "description",
-    )
+    return _gate_rows(res.violations, "event_id")
 
 
 def q_validate_map_object(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1173,10 +1166,7 @@ def q_validate_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     ev = _read(spark, sf_dir, "events")
     res = validate_json_column(ev, "props", schema, key="event_id")
-    return res.violations.select(
-        "event_id", F.col("column").alias("column_name"), "schema_path",
-        "keyword", "description",
-    )
+    return _gate_rows(res.violations, "event_id")
 
 
 def q_count_anomalies_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1280,10 +1270,7 @@ def q_validate_json_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "required": ["tag"],
     }
     res = validate_json_column(df, "props", schema, key="event_id")
-    return res.violations.select(
-        "event_id", F.col("column").alias("column_name"), "schema_path",
-        "keyword", "description",
-    )
+    return _gate_rows(res.violations, "event_id")
 
 
 def q_validate_images(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1301,10 +1288,7 @@ def q_validate_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bench.materialize_images' key so both share one cache
     df = fixtures.synth_images_cached(spark, n, n_partitions=16, seed=42)
     res = validate_images(df, seed=42, phash_partitions=8)
-    return res.violations.select(
-        "image_id", F.col("column").alias("column_name"), "schema_path",
-        "keyword", "description",
-    )
+    return _gate_rows(res.violations, "image_id")
 
 
 def q_stateful_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1369,10 +1353,7 @@ def q_validate_images_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = validate_images_metadata(
         df.select("image_id", "w", "h", "fmt", "caption")
     )
-    return out.select(
-        "image_id", F.col("column").alias("column_name"), "schema_path",
-        "keyword", "description",
-    )
+    return _gate_rows(out, "image_id")
 
 
 def q_pair_filter_images(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2415,13 +2396,7 @@ def q_validate_oas_petstore(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = validate_row_object(
         pets, schemas["petstore_pet"], key="event_id", registry=schemas
     )
-    return res.violations.select(
-        "event_id",
-        F.col("column").alias("column_name"),
-        "schema_path",
-        "keyword",
-        "description",
-    )
+    return _gate_rows(res.violations, "event_id")
 
 
 # fixed fixture sizes: the oracle SQL regenerates features from the row id,

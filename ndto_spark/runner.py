@@ -6,14 +6,20 @@ outputs (SURVEY.md §2.3):
 - ``violations``: one row per (input row, column rule) that failed —
   ``(row key, column, schema_path, keyword, description, partition_id)``,
   mirroring the reference's ``{false, {SchemaPath, Description}}`` tuples
-  (/root/reference/src/ndto_generator.erl:216-227) with exactly ONE
+  (ndto's src/ndto_generator.erl:216-227) with exactly ONE
   violation per (row, rule) chosen by the reference's priority.
 - ``verdicts``: per-partition pass/fail + counters (the distributed
   extension the single-value reference does not have).
 
-Everything is a single Catalyst expression per rule — validation adds zero
-shuffles and zero Python; violations/verdicts are plain projections and one
-partition-local aggregation over the annotated frame.
+Every validator in the package goes through the same three steps here:
+``_violation`` builds the one violation record, ``_annotate`` adds the
+violations array and ``partition_id`` to the input (after any columns the
+array reads, such as a parsed JSON struct or the image check struct), and
+``_result_from_annotated`` turns the annotated frame — plus optional
+table-level violation rows, reported under ``partition_id = -1`` — into
+the violations and verdicts frames. Compiled rules are single Catalyst
+expressions, so validation adds zero shuffles and zero Python; the
+verdicts are one aggregation over the per-row counts.
 """
 
 from __future__ import annotations
@@ -35,7 +41,7 @@ PARTITION_COL = "partition_id"
 class ValidationResult:
     annotated: DataFrame  # input + violations array<struct> + partition_id
     violations: DataFrame  # key, column, schema_path, keyword, description, partition_id
-    verdicts: DataFrame  # partition_id, pass, n_rows, n_violations
+    verdicts: DataFrame  # partition_id, n_rows, n_violations, pass
 
 
 class RuleSet:
@@ -75,26 +81,60 @@ class RuleSet:
 
         def build() -> Column:
             entries = [
-                _entry(F.lit(col), c) for col, c in self.compile(df).items()
+                _entry(col, c) for col, c in self.compile(df).items()
             ]
             return F.array_compact(F.array(*entries))
 
         return cached(("RuleSet.violations_array", *self._key(df)), build)
 
 
-def _entry(column: Column, c: Compiled) -> Column:
-    """The violation struct of one failed rule, NULL when it passed."""
+def _violation(
+    column: Column | str, path: Column | str, keyword: Column | str,
+    description: Column | str,
+) -> Column:
+    """The one violation record: struct<column, schema_path, keyword,
+    description>, each a string (a ``str`` argument is a literal)."""
+
+    def lit(x: Column | str) -> Column:
+        return F.lit(x) if isinstance(x, str) else x
+
+    return F.struct(
+        lit(column).alias("column"),
+        lit(path).alias("schema_path"),
+        lit(keyword).alias("keyword"),
+        lit(description).cast("string").alias("description"),
+    )
+
+
+def _entry(column: str, c: Compiled) -> Column:
+    """The violation of one failed rule, NULL when it passed."""
     return F.when(
         ~c.pred,
-        F.struct(
-            column.alias("column"),
-            # pred=False ⇒ viol non-null by construction; the coalesce is a
-            # safety net that keeps the row reportable regardless
-            F.coalesce(c.viol["schema_path"], F.lit("$")).alias("schema_path"),
-            F.coalesce(c.viol["keyword"], F.lit("unknown")).alias("keyword"),
-            c.viol["description"].alias("description"),
+        # pred=False ⇒ viol non-null by construction; the coalesces are a
+        # safety net that keeps the row reportable regardless
+        _violation(
+            column,
+            F.coalesce(c.viol["schema_path"], F.lit("$")),
+            F.coalesce(c.viol["keyword"], F.lit("unknown")),
+            c.viol["description"],
         ),
     )
+
+
+def _annotate(
+    df: DataFrame, violations: Column, pre: Optional[dict[str, Column]] = None
+) -> DataFrame:
+    """``df`` + the violations array + ``partition_id`` (the partition of
+    this scan). ``pre``: named columns that ``violations`` reads, projected
+    first and dropped after. A named column consumed by several rule
+    expressions is evaluated once per row — CollapseProject does not inline
+    a non-cheap producer into several consumers."""
+    if pre:
+        df = df.withColumns(pre)
+    annotated = df.withColumn(VIOLATIONS_COL, violations).withColumn(
+        PARTITION_COL, F.spark_partition_id()
+    )
+    return annotated.drop(*pre) if pre else annotated
 
 
 def validate_row_object(
@@ -117,16 +157,13 @@ def validate_row_object(
         dtype = df.select(row.alias("_row")).schema["_row"].dataType
         comp = Compiler(registry=registry, options=options)
         compiled = comp.compile(schema, row, dtype, "$")
-        return F.array_compact(F.array(_entry(F.lit("$row"), compiled)))
+        return F.array_compact(F.array(_entry("$row", compiled)))
 
     # the input schema fixes the row struct's type (names, order, nesting)
     arr = cached(
         ("validate_row_object", schema, registry, options, df.schema), build
     )
-    annotated = df.withColumn(VIOLATIONS_COL, arr).withColumn(
-        PARTITION_COL, F.spark_partition_id()
-    )
-    return _result_from_annotated(annotated, key)
+    return _result_from_annotated(_annotate(df, arr), key)
 
 
 def validate(
@@ -137,13 +174,21 @@ def validate(
     options: Optional[CompileOptions] = None,
 ) -> ValidationResult:
     ruleset = rules if isinstance(rules, RuleSet) else RuleSet(rules, registry, options)
-    annotated = df.withColumn(VIOLATIONS_COL, ruleset.violations_array(df)).withColumn(
-        PARTITION_COL, F.spark_partition_id()
+    return _result_from_annotated(
+        _annotate(df, ruleset.violations_array(df)), key
     )
-    return _result_from_annotated(annotated, key)
 
 
-def _result_from_annotated(annotated: DataFrame, key: str) -> ValidationResult:
+def _result_from_annotated(
+    annotated: DataFrame, key: str, table: Optional[DataFrame] = None
+) -> ValidationResult:
+    """The violations and verdicts of an ``_annotate``d frame.
+
+    ``table``: table-level violations, ``(key, v)`` rows with ``v`` a
+    ``_violation`` record (key uniqueness). They belong to no partition, so
+    they report under ``partition_id = -1``; with no such rows there is no
+    -1 verdict. The verdicts are ONE groupBy(partition_id) over the per-row
+    counts unioned with those rows."""
     # PLAN NOTE: explode_outer + post-filter, NOT a plain explode. For
     # explode(arr) the optimizer infers Filter(size(arr) > 0) below the
     # Generate (InferFiltersFromGenerate) and then pushes it through the
@@ -155,25 +200,28 @@ def _result_from_annotated(annotated: DataFrame, key: str) -> ValidationResult:
     # count as the input — a streamed narrow op), the inferred filter never
     # materializes, and the cheap v IS NOT NULL filter cannot cross the
     # Generate, so every rule expression is evaluated exactly once per row.
-    violations = (
-        annotated.select(
-            F.col(key),
-            F.explode_outer(VIOLATIONS_COL).alias("v"),
-            F.col(PARTITION_COL),
-        )
-        .filter(F.col("v").isNotNull())
-        .select(
-            key,
-            F.col("v.column").alias("column"),
-            F.col("v.schema_path").alias("schema_path"),
-            F.col("v.keyword").alias("keyword"),
-            F.col("v.description").alias("description"),
-            PARTITION_COL,
-        )
+    rows = annotated.select(
+        F.col(key), F.explode_outer(VIOLATIONS_COL).alias("v"), PARTITION_COL
+    ).filter(F.col("v").isNotNull())
+    counts = annotated.select(
+        PARTITION_COL,
+        F.lit(1).alias("n_rows"),
+        F.size(VIOLATIONS_COL).alias("n_violations"),
     )
-    verdicts = annotated.groupBy(PARTITION_COL).agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.size(VIOLATIONS_COL)).alias("n_violations"),
+    if table is not None:
+        table = table.select(F.col(key), "v", F.lit(-1).alias(PARTITION_COL))
+        rows = rows.unionByName(table)
+        counts = counts.unionByName(
+            table.select(
+                PARTITION_COL,
+                F.lit(0).alias("n_rows"),
+                F.lit(1).alias("n_violations"),
+            )
+        )
+    violations = rows.select(key, "v.*", PARTITION_COL)
+    verdicts = counts.groupBy(PARTITION_COL).agg(
+        F.sum("n_rows").alias("n_rows"),
+        F.sum("n_violations").alias("n_violations"),
     ).withColumn("pass", F.col("n_violations") == 0)
     return ValidationResult(annotated=annotated, violations=violations, verdicts=verdicts)
 

@@ -24,7 +24,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .runner import RuleSet
+from .runner import PARTITION_COL, RuleSet, _annotate, _result_from_annotated
 from .spec import Schema
 
 
@@ -34,24 +34,11 @@ def validate_stream(
     key: str,
 ) -> DataFrame:
     """Streaming violation rows: (key, column, schema_path, keyword,
-    description) — append-mode friendly (stateless projection)."""
+    description) — append-mode friendly (stateless projection): the
+    violations half of the batch ``runner`` result."""
     ruleset = rules if isinstance(rules, RuleSet) else RuleSet(rules)
-    arr = ruleset.violations_array(stream_df)
-    # explode_outer + post-filter: see runner._result_from_annotated — a
-    # plain explode lets the optimizer expand the violations alias into an
-    # inferred pre-Generate filter, evaluating every rule twice per record
-    return (
-        stream_df.withColumn("violations", arr)
-        .select(F.col(key), F.explode_outer("violations").alias("v"))
-        .filter(F.col("v").isNotNull())
-        .select(
-            key,
-            F.col("v.column").alias("column"),
-            F.col("v.schema_path").alias("schema_path"),
-            F.col("v.keyword").alias("keyword"),
-            F.col("v.description").alias("description"),
-        )
-    )
+    annotated = _annotate(stream_df, ruleset.violations_array(stream_df))
+    return _result_from_annotated(annotated, key).violations.drop(PARTITION_COL)
 
 
 def stateful_verdicts(

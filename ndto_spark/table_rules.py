@@ -10,8 +10,8 @@ Scale notes (100 TB design point):
 - ``column_stats`` is ONE full scan with partial (map-side) aggregation; the
   reduced state is a single row per column. No shuffle of row data.
 - ``uniqueness`` relies on hash-aggregate partial combine, which already
-  neutralizes key skew for counting; ``two_phase=True`` adds an explicit
-  partition-local pre-aggregation for extreme cardinality-skew cases.
+  counts each key once per map task, so hot keys cost the shuffle one row
+  per (task, key).
 - ``referential_integrity`` broadcasts the reference side when told it is
   small (dimension tables) — no shuffle of the fact table.
 - ``drift_metrics`` reduces each side to an ``nbins``-row histogram before
@@ -96,24 +96,14 @@ def column_quantiles(
     return wide.select(F.explode(entries).alias("s")).select("s.*")
 
 
-def uniqueness(
-    df: DataFrame, key: str, two_phase: bool = False
-) -> DataFrame:
+def uniqueness(df: DataFrame, key: str) -> DataFrame:
     """Keys appearing more than once: (key value, n_dups).
 
-    Partial aggregation (map-side combine) already bounds the per-reducer
-    work for hot keys; ``two_phase`` makes the pre-aggregation explicit
-    (partition-local count → global sum), which also caps shuffle volume at
-    one row per (partition, distinct key) for extreme skew.
+    Partial aggregation (map-side combine) counts each key within a map
+    task before the shuffle, so the reducers see one row per (task, key)
+    however hot the key.
     """
-    kc = F.col(key)
-    if two_phase:
-        partial = df.groupBy(kc.alias(key), F.spark_partition_id().alias("_p")).agg(
-            F.count(F.lit(1)).alias("_n")
-        )
-        counts = partial.groupBy(key).agg(F.sum("_n").alias("n_dups"))
-    else:
-        counts = df.groupBy(key).agg(F.count(F.lit(1)).alias("n_dups"))
+    counts = df.groupBy(key).agg(F.count(F.lit(1)).alias("n_dups"))
     return counts.filter(F.col("n_dups") > 1)
 
 

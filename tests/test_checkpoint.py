@@ -164,3 +164,24 @@ def test_two_jobs_per_bucket(spark, images_df, tmp_path):
     # stage-jobs. The old three-action loop (write + verdicts collect +
     # column_stats collect) showed >= 5 here.
     assert len(ids) <= 3, f"expected write + one aggregate, saw jobs {ids}"
+
+
+def test_run_leaves_the_session_overwrite_mode_alone(spark, images_df, tmp_path):
+    """The per-bucket dynamic overwrite is an option of the write: the
+    session's own partitionOverwriteMode is unchanged after a run, and a
+    later bucket's write still keeps the earlier bucket's output."""
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "STATIC")
+    try:
+        ck = CheckpointManager(str(tmp_path / "run"))
+        for _ in range(2):
+            run_resumable(
+                images_df, ck, _validate, "synth300", "rules-v1",
+                n_buckets=2, max_buckets_per_call=1,
+            )
+        assert spark.conf.get(conf) == "STATIC"
+        buckets = spark.read.parquet(ck.violations_dir).select("bucket")
+        assert {r.bucket for r in buckets.distinct().collect()} == {0, 1}
+    finally:
+        spark.conf.set(conf, before)

@@ -7,6 +7,7 @@ no clean row may produce one.
 
 from __future__ import annotations
 
+import re
 import struct
 import zlib
 from collections import Counter
@@ -345,8 +346,10 @@ def test_metadata_consistency_verdicts_per_seeded_class(spark):
 def test_validate_images_is_one_annotated_scan(spark, tmp_path):
     """The verdicts plan reads the table twice: the annotated scan (the
     only one that reads bytes, with the one Arrow UDF) and the uniqueness
-    count; no join. Each verdict agrees with the violations and the input
-    partitions it reports on."""
+    count; no join, and two exchanges — the uniqueness count's and the
+    one groupBy(partition_id) over the per-row counts and the table-level
+    rows. Each verdict agrees with the violations and the input partitions
+    it reports on."""
     from pyspark.sql import functions as F
 
     from ndto_spark.images import validate_images
@@ -362,6 +365,7 @@ def test_validate_images_is_one_annotated_scan(spark, tmp_path):
     assert len(scans) == 2
     assert sum("bytes" in line.split("ReadSchema:")[1] for line in scans) == 1
     assert "SortMergeJoin" not in plan
+    assert len(re.findall(r"\bExchange\b", plan)) == 2
 
     verdicts = {v.partition_id: v for v in res.verdicts.collect()}
     per_part = Counter(v.partition_id for v in res.violations.collect())

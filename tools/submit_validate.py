@@ -79,7 +79,7 @@ def main() -> None:
         from pyspark.sql import functions as F
 
         dups = table_rules.uniqueness(
-            df.filter(F.col("image_id").isNotNull()), "image_id", two_phase=True
+            df.filter(F.col("image_id").isNotNull()), "image_id"
         ).count()
         summary["duplicate_keys"] = dups
     print(json.dumps(summary))
