@@ -41,6 +41,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .compiler import bind
 from .dedup import _spread
 
 # largest driver-side block a pair scorer embeds in one scan; a bigger
@@ -759,11 +760,9 @@ def quantize_embeddings(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     codegen'd projections, max is order-independent so no fold-order
     pinning needed), zero shuffle, zero Python.
     """
-    from .dedup import bind
-
     vc = F.col(vec_col).cast("array<double>")
 
-    # nested let-bindings (dedup.bind): HOF lambda bodies re-evaluate their
+    # nested let-bindings (compiler.bind): HOF lambda bodies re-evaluate their
     # subtrees PER ELEMENT, so both the vector and its absmax must be bound
     # once per row or the per-element code/err lambdas go O(dim^2)
     def _over_vec(v: Column) -> Column:
@@ -876,8 +875,6 @@ def unit_norm_embeddings(
     HOF lambda bodies re-evaluate subtrees per element), zero shuffle,
     zero Python.
     """
-    from .dedup import bind
-
     vc = F.col(vec_col).cast("array<double>")
 
     def _over_vec(v: Column) -> Column:
@@ -958,8 +955,6 @@ def centroid_outliers(
     if not centroids:
         raise ValueError("centroids must be non-empty")
     _check_codebook_size(len(centroids), max(len(c) for c in centroids))
-    from .dedup import bind
-
     cents = [[float(x) for x in c] for c in centroids]
     ss_c = [sum(x * x for x in c) for c in cents]
 

@@ -205,7 +205,8 @@ def sliding_chunks(
     filter. Zero shuffle: a pure per-row flatMap, so it scales with the
     scan at 100 TB.
     """
-    from ..dedup import bind, tokens
+    from ..compiler import bind
+    from ..dedup import tokens
 
     if stride <= 0 or stride > size:
         raise ValueError(

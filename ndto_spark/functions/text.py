@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import spill
+from ..compiler import bind
 from ..dedup import _spread, md5_low32, tokens, word_shingles
 
 # tiny per-language stopword marker sets for the n-gram/stopword heuristic
@@ -24,6 +25,26 @@ LANG_MARKERS: dict[str, list[str]] = {
     "de": ["der", "die", "das", "und", "ist"],
     "fr": ["le", "la", "les", "et", "est"],
 }
+
+
+def _adjacent_pairs(text: Column) -> Column:
+    """array<struct<left, right>> of the adjacent token pairs of ``text``
+    (position order, repeats kept); NULL for docs with fewer than two
+    tokens. The token array is let-bound, so the per-position lambda reads
+    it by value instead of re-tokenizing."""
+
+    def _pairs(toks: Column) -> Column:
+        n = F.size(toks)
+        arr = F.transform(
+            F.sequence(F.lit(1), n - F.lit(1)),
+            lambda i: F.struct(
+                F.get(toks, i - F.lit(1)).alias("left"),
+                F.get(toks, i).alias("right"),
+            ),
+        )
+        return F.when(n >= 2, arr)
+
+    return bind(tokens(text), _pairs)
 
 
 def token_count(col: Column) -> Column:
@@ -137,7 +158,6 @@ def ngrams(col: Column, n: int) -> Column:
     unlike word_shingles, repeats are kept: repetition metrics need the
     multiset. Docs with fewer than n tokens yield an empty array (same
     short-doc ANSI slice guard, same let-``bind`` as word_shingles)."""
-    from ..dedup import bind
 
     def _grams(toks: Column) -> Column:
         m = F.size(toks)
@@ -554,10 +574,9 @@ def remove_common_lines(
     the bounded common set returns to every executor as ONE broadcast
     array, and cleaning is a per-row expression (filter + array_join)
     over the re-split text — no explode/regroup round trip of the corpus.
-    The md5 let-binds via dedup.bind so the split runs once per row, not
+    The md5 let-binds via compiler.bind so the split runs once per row, not
     once per line (HOFs re-evaluate lambda-body subtrees per element).
     """
-    from ..dedup import bind
 
     lines_col = F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")
     pairs = (
@@ -689,10 +708,9 @@ def c4_filter(
     Output ``(id, n_tokens, keep, fail_reason)``; fail_reason NULL on keep.
 
     Scale: one projection of codegen expressions — no shuffle, no Python;
-    the token array let-binds via dedup.bind so it is computed once per
+    the token array let-binds via compiler.bind so it is computed once per
     row (HOFs re-evaluate lambda-body subtrees per element).
     """
-    from ..dedup import bind, tokens
 
     t = F.col(text_col)
 
@@ -815,22 +833,10 @@ def pair_stats(
     """
     from pyspark.sql import Window
 
-    from ..dedup import bind
-
-    def _pairs(toks: Column) -> Column:
-        n = F.size(toks)
-        arr = F.transform(
-            F.sequence(F.lit(1), n - F.lit(1)),
-            lambda i: F.struct(
-                F.get(toks, i - F.lit(1)).alias("left"),
-                F.get(toks, i).alias("right"),
-            ),
-        )
-        return F.when(n >= 2, arr)
 
     pairs = df.select(
         F.col(id_col).alias("doc"),
-        F.explode_outer(bind(tokens(F.col(text_col)), _pairs)).alias("p"),
+        F.explode_outer(_adjacent_pairs(F.col(text_col))).alias("p"),
     ).filter(F.col("p").isNotNull())
     agg = (
         pairs.groupBy("p.left", "p.right")
@@ -1015,7 +1021,6 @@ def collocations(
     pattern). The tf joins shuffle the PAIR VOCABULARY (min_pair_tf-pruned)
     against the unigram vocabulary — vocab-sized, never corpus-sized.
     """
-    from ..dedup import bind
 
     # _spread before both tokenize explodes (file-layout-bound scans); the
     # shared round-robin exchange is reused across the unigram and pair
@@ -1028,20 +1033,9 @@ def collocations(
         F.count(F.lit(1)).cast("bigint").alias("tf")
     )
 
-    def _pairs(t: Column) -> Column:
-        n = F.size(t)
-        arr = F.transform(
-            F.sequence(F.lit(1), n - F.lit(1)),
-            lambda i: F.struct(
-                F.get(t, i - F.lit(1)).alias("left"),
-                F.get(t, i).alias("right"),
-            ),
-        )
-        return F.when(n >= 2, arr)
-
     pairs = (
         rows.select(
-            F.explode_outer(bind(tokens(F.col("_t")), _pairs)).alias("p")
+            F.explode_outer(_adjacent_pairs(F.col("_t"))).alias("p")
         )
         .filter(F.col("p").isNotNull())
         .groupBy("p.left", "p.right")
@@ -1161,7 +1155,6 @@ def canonical_url(col: Column) -> Column:
         )
         return F.regexp_replace(F.concat(p, rest), r"/+$", "")
 
-    from ..dedup import bind
 
     return bind(u, _canon)
 
@@ -1200,7 +1193,6 @@ def linear_scores(
     fold — constant-factor, the quality_metrics convention; Catalyst's
     SimplifyExtractValueOps prunes the fold out of the n_tokens copy.
     """
-    from ..dedup import bind, md5_low32, tokens
 
     n_buckets = len(weights_e6)
     if not 2 <= n_buckets <= 4096:
@@ -1322,25 +1314,13 @@ def lm_score(
     corpus text never re-tokenizes and the scoring joins carry
     (doc, left, right, k) rows only.
     """
-    from ..dedup import bind
-
-    def _pairs(toks: Column) -> Column:
-        n = F.size(toks)
-        arr = F.transform(
-            F.sequence(F.lit(1), n - F.lit(1)),
-            lambda i: F.struct(
-                F.get(toks, i - F.lit(1)).alias("left"),
-                F.get(toks, i).alias("right"),
-            ),
-        )
-        return F.when(n >= 2, arr)
 
     # _spread before the tokenize+pair explode (file-layout-bound scans)
     pairs = _spread(
         df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("_t"))
     ).select(
         "doc",
-        F.explode_outer(bind(tokens(F.col("_t")), _pairs)).alias("p"),
+        F.explode_outer(_adjacent_pairs(F.col("_t"))).alias("p"),
     ).filter(F.col("p").isNotNull())
     doc_pairs = pairs.groupBy(
         "doc", "p.left", "p.right"

@@ -492,7 +492,8 @@ def caption_alignment(
     let-bound once.
     """
     from . import ann
-    from .dedup import bind, md5_low32, tokens
+    from .compiler import bind
+    from .dedup import md5_low32, tokens
 
     dim = grid * grid
     emb = embed_images(df, grid=grid, id_col=id_col)

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import ann, dedup, table_rules, temporal
+from .compiler import bind
 from . import fixtures as _FX
 from .functions import text as textfn
 
@@ -651,7 +652,7 @@ def _multiline_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.transform(F.sequence(F.lit(0), n_lines - 1), _line), "\n"
         )
 
-    body = dedup.bind(toks, _chunk)
+    body = bind(toks, _chunk)
     text2 = F.concat_ws(
         "\n",
         F.when(
@@ -2611,7 +2612,7 @@ def q_line_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
 
-    chunks = dedup.bind(F.split(F.col("text"), " "), _chunks)
+    chunks = bind(F.split(F.col("text"), " "), _chunks)
     ml = d.select("doc_id", F.array_join(chunks, "\n").alias("text"))
     out = dedup.line_dedup(ml, "doc_id", "text", sep="\n", min_df=2)
     return out.select(

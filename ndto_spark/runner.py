@@ -107,17 +107,11 @@ def _violation(
 
 
 def _entry(column: str, c: Compiled) -> Column:
-    """The violation of one failed rule, NULL when it passed."""
+    """The violation of one rule, NULL when it passed."""
+    v = c.viol
     return F.when(
-        ~c.pred,
-        # pred=False ⇒ viol non-null by construction; the coalesces are a
-        # safety net that keeps the row reportable regardless
-        _violation(
-            column,
-            F.coalesce(c.viol["schema_path"], F.lit("$")),
-            F.coalesce(c.viol["keyword"], F.lit("unknown")),
-            c.viol["description"],
-        ),
+        v.isNotNull(),
+        _violation(column, v["schema_path"], v["keyword"], v["description"]),
     )
 
 

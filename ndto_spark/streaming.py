@@ -121,6 +121,15 @@ def stateful_verdicts(
     )
 
 
+def _watermarked(stream_df: DataFrame, ts_col: str, watermark: str) -> DataFrame:
+    """``stream_df`` with an event-time watermark on ``ts_col``. Watermarks
+    require TIMESTAMP (with timezone) and parquet often yields NTZ, so an
+    NTZ column is cast first."""
+    if dict(stream_df.dtypes).get(ts_col) == "timestamp_ntz":
+        stream_df = stream_df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+    return stream_df.withWatermark(ts_col, watermark)
+
+
 def windowed_verdicts(
     stream_df: DataFrame,
     rules: dict[str, Schema] | RuleSet,
@@ -135,12 +144,8 @@ def windowed_verdicts(
     """
     ruleset = rules if isinstance(rules, RuleSet) else RuleSet(rules)
     arr = ruleset.violations_array(stream_df)
-    # watermarks require TIMESTAMP (with timezone); parquet often yields NTZ
-    if dict(stream_df.dtypes).get(ts_col) == "timestamp_ntz":
-        stream_df = stream_df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     return (
-        stream_df.withColumn("violations", arr)
-        .withWatermark(ts_col, watermark)
+        _watermarked(stream_df.withColumn("violations", arr), ts_col, watermark)
         .groupBy(F.window(F.col(ts_col), window_duration).alias("window"))
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -168,10 +173,7 @@ def dedup_stream(
     to cover the source's re-delivery horizon, and run the batch exact
     dedup downstream for the long tail.
     """
-    # watermarks require TIMESTAMP (with timezone); parquet often yields NTZ
-    if dict(stream_df.dtypes).get(ts_col) == "timestamp_ntz":
-        stream_df = stream_df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return stream_df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
+    return _watermarked(stream_df, ts_col, watermark).dropDuplicatesWithinWatermark(
         [id_col]
     )
 
@@ -200,14 +202,11 @@ def session_stream(
     plus one column per ``sum_cols`` entry (pass pre-quantized integer
     expressions — integer sums stay order-independent and engine-exact).
     """
-    # watermarks require TIMESTAMP (with timezone); parquet often yields NTZ
-    if dict(stream_df.dtypes).get(ts_col) == "timestamp_ntz":
-        stream_df = stream_df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     aggs = [F.count(F.lit(1)).alias("n_events")]
     for name, col in (sum_cols or {}).items():
         aggs.append(F.sum(col).alias(name))
     out = (
-        stream_df.withWatermark(ts_col, watermark)
+        _watermarked(stream_df, ts_col, watermark)
         .groupBy(F.col(key_col), F.session_window(F.col(ts_col), gap))
         .agg(*aggs)
     )
