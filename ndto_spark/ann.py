@@ -43,6 +43,7 @@ from pyspark.sql import types as T
 
 from .compiler import bind
 from .dedup import _spread
+from .pyworker import settle
 
 # largest driver-side block a pair scorer embeds in one scan; a bigger
 # query/eval side is scored in blocks of this many rows
@@ -143,7 +144,12 @@ def _scan(
     group of blocks, unioned. Each batch reaches ``body(pdf, parts)`` with
     one ``(block, ok, V·Wᵀ, row norms)`` part per block of its group;
     ``pdf`` holds ``cols`` plus ``_v`` (the vectors as array<double>) and
-    ``_nn`` (no NULL element)."""
+    ``_nn`` (no NULL element).
+
+    A pandas batch turns a long column that holds a NULL into float64,
+    which rounds ids above 2^53. So each nullable long column of ``cols``
+    ships as a NULL-free long plus its NULL mask, and a batch with a NULL
+    gets it back as exact Python ints (object dtype, None for NULL)."""
     groups = [g for g in groups if g]
     if not groups:
         return df.sparkSession.createDataFrame([], schema)
@@ -155,10 +161,30 @@ def _scan(
             F.forall(v, lambda x: x.isNotNull()), F.lit(False)
         ).alias("_nn"),
     )
+    longs = [
+        f.name
+        for f in src.schema.fields[: len(cols)]
+        if isinstance(f.dataType, T.LongType) and f.nullable
+    ]
+    if longs:
+        src = src.select(
+            *(
+                F.coalesce(F.col(c), F.lit(0)).alias(c) if c in longs else c
+                for c in src.columns
+            ),
+            *(F.col(c).isNull().alias(f"_null{c}") for c in longs),
+        )
 
     def kernel(blocks):
         def run(batches):
+            settle()
             for pdf in batches:
+                for c in longs:
+                    null = pdf.pop(f"_null{c}").to_numpy(dtype=bool)
+                    if null.any():
+                        ids = pdf[c].to_numpy(dtype=object)
+                        ids[null] = None
+                        pdf[c] = ids
                 vs, nn = pdf["_v"], pdf["_nn"].to_numpy(dtype=bool)
                 parts = []
                 for b in blocks:
@@ -282,7 +308,7 @@ def two_phase_topk(scored: DataFrame, k: int) -> DataFrame:
     PLAN NOTE: two-phase top-k. A single groupBy(query).collect_list (or a
     global Window over all candidates) holds the ENTIRE candidate set per
     query in one reducer (partial aggregation merges but never truncates
-    collect_list) — O(|candidates|) state per key, OOM at scale. Phase 1
+    collect_list) — O(|candidates|) state per key. Phase 1
     takes top-k per (query, input partition): each group lives in exactly
     one map task, so its list is bounded by partition size and is sliced to
     k BEFORE the shuffle. Phase 2 merges the ≤k-item per-partition
@@ -660,7 +686,7 @@ def ivf_topk(
 
     Every vector is assigned to its nearest centroid (one 'list'); a query
     scans only its ``n_probe`` nearest lists. The candidate scan becomes an
-    equi-join on list id — the 100 TB replacement for the cross join.
+    equi-join on list id instead of a cross join.
 
     ``centroids`` takes a trained codebook (see kmeans_centroids; list ids
     are the codebook indices). Default: a deterministic md5-ordered sample
@@ -756,7 +782,7 @@ def quantize_embeddings(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     vectors emit dim with NULL absmax/codes (nothing to scale — feed them
     to validate_embeddings, which flags them upstream).
 
-    100 TB shape: pure per-row expression work (transform/aggregate inside
+    Plan shape: pure per-row expression work (transform/aggregate inside
     codegen'd projections, max is order-independent so no fold-order
     pinning needed), zero shuffle, zero Python.
     """
@@ -821,7 +847,7 @@ def quantized_topk(
     stored scales, in a FIXED multiply order so both engines produce
     bit-identical doubles. Ties break by neighbor id.
 
-    100 TB shape: queries broadcast (query sets are small); the corpus
+    Plan shape: queries broadcast (query sets are small); the corpus
     scan reads codes + one bigint instead of float vectors — a 4-8x
     narrower scan, which is the point of a quantized index; then the same
     bounded two-phase top-k as brute_force_topk (state O(k·partitions)
@@ -870,7 +896,7 @@ def unit_norm_embeddings(
 
     Output: (id, dim, norm_e9, unit) with norm_e9 = floor(norm·1e9).
 
-    100 TB shape: pure per-row expression work inside codegen'd
+    Plan shape: pure per-row expression work inside codegen'd
     projections (the vector and its norm are let-bound once per row —
     HOF lambda bodies re-evaluate subtrees per element), zero shuffle,
     zero Python.
@@ -913,14 +939,14 @@ def hard_negatives(
     query (anchor), the k most-similar corpus vectors whose ``group_col``
     DIFFERS from the anchor's — the near-miss negatives that teach a
     metric model its decision boundary (in-batch random negatives are
-    trivially far at scale; hard ones carry the gradient signal).
+    trivially far; hard ones carry the gradient signal).
 
     Same-group candidates (potential positives) and self-matches are
     excluded with a null-safe compare, so NULL-labeled rows are mutual
     negatives of everything, including each other. Ties break by
     neighbor id. Returns (query_id, neighbor_id, cosine_sim).
 
-    100 TB shape: identical to ``brute_force_topk`` — anchors collected
+    Plan shape: identical to ``brute_force_topk`` — anchors collected
     into the vector kernel, ONE corpus scan, and the group mask prunes
     pairs BEFORE the bounded two-phase top-k (O(k·partitions) state per
     anchor, never the candidate set).
@@ -947,7 +973,7 @@ def centroid_outliers(
     the lower centroid index (lexicographic struct min). Output:
     (id, cid, dist2_e6, outlier).
 
-    100 TB shape: pure expression-side projection — the codebook rides as
+    Plan shape: pure expression-side projection — the codebook rides as
     plan literals (``_check_codebook_size`` guard), one corpus scan, zero
     joins/shuffles/Python; cost O(k·dim) per row, the IVF-assignment
     shape.
@@ -1012,7 +1038,7 @@ def dimension_profile(
     dead = min_q == max_q). Means/variances divide out downstream at
     whatever precision the consumer wants.
 
-    100 TB shape: posexplode_outer (rule-safe generator) → ONE
+    Plan shape: posexplode_outer (rule-safe generator) → ONE
     partial-aggregated groupBy(dim) — state is |dims| rows per task, the
     shuffle carries |dims| partials per partition; no windows, no joins.
     """
@@ -1065,7 +1091,7 @@ def class_prototypes(
     ``//`` FLOORS, so the oracle reconstructs truncation as
     ``(sum_q - sum_q % n) // n``).
 
-    100 TB shape: posexplode_outer (rule-safe) → ONE partial-aggregated
+    Plan shape: posexplode_outer (rule-safe) → ONE partial-aggregated
     groupBy(label, dim); state per task ≤ |classes|·|dims| longs.
     """
     g = (
@@ -1111,9 +1137,9 @@ def knn_graph(
     same ascending-index order, multiplication commutes), so the
     direction merge is an exact groupBy, not a float dedup.
 
-    100 TB shape: this entry point scores with brute_force_topk (the
+    Plan shape: this entry point scores with brute_force_topk (the
     exact O(n²) oracle twin — labeled small-scale like the other exact
-    paths); at scale generate the directed top-k with lsh_topk / ivf_topk
+    paths); for large inputs generate the directed top-k with lsh_topk / ivf_topk
     (same (query_id, neighbor_id, cosine_sim) contract) and reuse
     knn_edges_from_topk below — the canonicalize + direction-count
     groupBy is |directed edges| = n·k rows, map-side combinable.
@@ -1162,7 +1188,7 @@ def kcenter_coreset(
     max(struct(min_dist, −id)) aggregate — full-precision total order
     with smallest-id ties, reproducible at any parallelism.
 
-    100 TB shape: the (id, vec, norm) base is persisted once; each round
+    Plan shape: the (id, vec, norm) base is persisted once; each round
     is one codegen projection (least of the running min-dist and the
     distance to the newest center — k×dim literals ride the plan, the
     kmeans codebook convention) + one 1-row argmax aggregate. The

@@ -28,6 +28,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from . import codecs, fixtures
+from .pyworker import settle
 from .runner import _violation
 
 IMAGE_CHECK_TYPE = T.StructType(
@@ -56,6 +57,7 @@ def image_check_udf(seed: int):
 
     @pandas_udf(IMAGE_CHECK_TYPE)
     def check(image_id: pd.Series, data: pd.Series, caption: pd.Series) -> pd.DataFrame:
+        settle()
         # Per-row Python is kept to the three genuinely per-row steps:
         # payload decode, reference-pixel regen + PSNR, reference-caption
         # regen (each keyed by a per-row Philox stream). Everything else —

@@ -58,6 +58,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import messages as M
+from .pyworker import settle
 from .spec import KEYWORDS, Schema, SpecError, normalize
 
 VIOLATION_FIELDS = ("schema_path", "keyword", "description")
@@ -1044,6 +1045,7 @@ def _grapheme_len_udf() -> Callable[[Column], Column]:
 
         @pandas_udf(T.IntegerType())
         def grapheme_len(col: pd.Series) -> pd.Series:
+            settle()
             return col.map(lambda s: _count(s) if s is not None else None)
 
         _UDF_CACHE[key] = grapheme_len
@@ -1060,6 +1062,7 @@ def _py_regex_udf(pattern: str) -> Callable[[Column], Column]:
 
         @pandas_udf(T.BooleanType())
         def py_regex(col: pd.Series) -> pd.Series:
+            settle()
             # Series.str.contains == re.search semantics (unanchored partial
             # match); vectorized in pandas, nulls propagate as pd.NA
             return col.str.contains(rx).astype("boolean")

@@ -1,7 +1,7 @@
 """Deduplication operators over document tables.
 
 Exact (hash-groupBy), n-gram Jaccard similarity join, MinHash+LSH, SimHash,
-and embedding-cosine near-dup. Designed for 100 TB scale:
+and embedding-cosine near-dup. Plan shapes:
 
 - exact dedup groups on a 128-bit content hash (md5) — partial aggregation
   makes the shuffle carry one row per distinct hash per map task.
@@ -12,8 +12,8 @@ and embedding-cosine near-dup. Designed for 100 TB scale:
   candidate verification.
 - the naive all-pairs Jaccard join is implemented as an inverted-index join
   on shingles (pair generation bounded by shingle document-frequency), which
-  is the correctness oracle for LSH at small scale; at 100 TB you run the
-  MinHash path and verify only candidates.
+  is the correctness oracle for LSH; on large inputs run the MinHash path
+  and verify only candidates.
 """
 
 from __future__ import annotations
@@ -100,9 +100,7 @@ def _spread(df: DataFrame) -> DataFrame:
     sf0.1 minhash signature computation on 1 of 16 cores — the dominant
     cost of three gate queries). Spreading the raw rows first pins the
     expression work to the post-exchange stage, which always has
-    shuffle.partitions tasks. The extra shuffle moves raw rows only; on
-    well-split 100 TB inputs it is noise next to the expression work it
-    parallelizes.
+    shuffle.partitions tasks. The extra shuffle moves raw rows only.
 
     A frame whose analyzed plan already is that round-robin
     (``Repartition(n, shuffle=true)`` under only Project/Filter nodes) is
@@ -222,28 +220,6 @@ def _hash_params(num_hashes: int, seed: int) -> list[tuple[int, int]]:
         (rng.randrange(1, 1 << 30), rng.randrange(0, HASH_PRIME))
         for _ in range(num_hashes)
     ]
-
-
-def minhash_signature(
-    text_col: Column, k: int = 5, num_hashes: int = 32, seed: int = 42
-) -> Column:
-    """array<bigint> MinHash signature, computed fully expression-side.
-
-    Base hash = md5_low32(shingle) (portable, see md5_low32); permutations
-    via (a*x + b) mod HASH_PRIME. array_min per hash function — zero
-    shuffle, zero Python.
-    """
-    sh = word_shingles(text_col, k)
-    base = F.transform(sh, md5_low32)
-
-    def perm(a: int, b: int):
-        return lambda x: (x * F.lit(a) + F.lit(b)) % F.lit(HASH_PRIME)
-
-    sig = [
-        F.array_min(F.transform(base, perm(a, b)))
-        for a, b in _hash_params(num_hashes, seed)
-    ]
-    return F.array(*sig)
 
 
 def _minhash_base_sigs(
@@ -450,7 +426,7 @@ def minhash_estimate_pairs(
     verify-free scale path: after the signature stage the corpus TEXT is
     never touched again, so the verification cost is |candidates| ×
     num_hashes longs rather than a second pass over the shingle inverted
-    index — the right trade at 100 TB when an estimator tolerance is
+    index — the right trade when an estimator tolerance is
     acceptable (e.g. dedup at J ≥ 0.8 with h = 128: σ ≈ 0.035).
 
     Output: (id_a, id_b, n_agree, est_e6) for pairs with
@@ -463,7 +439,7 @@ def minhash_estimate_pairs(
     exact-verify path instead drops them (0/0 Jaccard). Documented
     estimator-vs-verify divergence, same as real MinHash deployments.
 
-    100 TB shape: the same single signature Exchange as minhash_lsh_pairs
+    Plan shape: the same single signature Exchange as minhash_lsh_pairs
     (partial-agg min() signatures, band-bucket equi-join); scoring joins
     ship (id, num_hashes longs) only; the component agreement is one
     zip_with/filter pass over two bounded arrays per CANDIDATE pair.
@@ -510,7 +486,7 @@ def apply_dedup(
     ``groups`` is any frame carrying a ``keeper_col`` — the output of
     exact_dedup_groups (one row per content hash) or near_dup_groups (one
     row per doc). Left-semi join on the keeper ids, so the kept table keeps
-    its full schema and the join never widens rows; at scale the keeper set
+    its full schema and the join never widens rows; the keeper set
     shuffles once (or broadcasts when the dedup rate is high enough that
     the keeper list is small — AQE decides).
     """
@@ -546,8 +522,8 @@ def near_dup_groups(
     persist()ed and superseded rounds unpersist()ed, exactly the round-2
     shape. The shortcut rounds are the long-chain insurance: chain depth
     halves per round, so convergence is O(log diameter) overall (measured:
-    a 10,000-node path converges in 16 hybrid rounds vs 9,999 plain) — at
-    100 TB one pathological component cannot stall the job, and the extra
+    a 10,000-node path converges in 16 hybrid rounds vs 9,999 plain), so
+    one pathological component cannot stall the job, and the extra
     shuffle join + spill is only paid when plain propagation was too slow.
     The driver sees a 1-row convergence probe per round.
 
@@ -592,7 +568,7 @@ def near_dup_groups(
     n_pairs = base.count()
     if n_pairs <= max_driver_pairs:
         # SMALL-GRAPH FAST PATH: near-dup pair graphs are usually a tiny
-        # fraction of the corpus even at 100 TB (they are the verified
+        # fraction of the corpus (they are the verified
         # near-dup edges, not the corpus), and the iterative path pays
         # 1-2 driver barriers PER ROUND for O(log diameter) rounds —
         # measured ~0.5 s/round of fixed scheduling cost, 10+ s for a
@@ -659,7 +635,7 @@ def near_dup_groups(
         base.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).persist()
     # iterate ONLY over vertices that appear in some pair: near-dup graphs
-    # touch a tiny fraction of a 100 TB corpus, and the previous shape
+    # touch a tiny fraction of a corpus, and the previous shape
     # shuffled EVERY corpus row through every propagation round. Rows
     # outside the graph are singletons by definition — they rejoin once at
     # the end (left join + coalesce to self). edges is symmetric, so
@@ -832,7 +808,7 @@ def simhash_dup_candidates(
     ``n_docs`` is the exact group size; ``example_ids`` is a BOUNDED
     sample — the ``max_examples`` smallest ids (deterministic across
     runs/engines). An unbounded collect_list would concentrate a
-    mega-cluster of identical docs (the 100 TB skew case) in one
+    mega-cluster of identical docs (the skew case) in one
     aggregation buffer, so the collection is two-phase like
     runner.violation_summary: phase 1 takes the k smallest ids per
     (simhash, input partition) — each list bounded by partition size and
@@ -978,7 +954,7 @@ def decontaminate(
     """Benchmark decontamination: flag corpus docs sharing any k-token
     shingle with an evaluation set — (id, n_hits) for contaminated docs.
 
-    The 100 TB shape: eval sets are SMALL (thousands of documents), so
+    Plan shape: eval sets are SMALL (thousands of documents), so
     their distinct shingle set broadcasts; the corpus side is an
     explode + broadcast hash join + per-doc partial-aggregated count —
     the big side never shuffles its text, only (id, matched-shingle)
@@ -1038,7 +1014,7 @@ def phash_near_dups(
     ``max_band_df`` caps band-bucket frequency, the same guard
     ngram_jaccard_pairs puts on shingle DF: a (band, key) bucket shared by
     d images yields d² join rows, so ONE degenerate constant-phash
-    population (solid-color thumbnails at 100 TB) makes its bucket
+    population (solid-color thumbnails) makes its bucket
     quadratic. Buckets with DF > cap are removed before the self-join via
     a broadcast anti-join (the hot set is tiny by construction).
     CORRECTNESS CAVEAT: pairs whose ONLY agreeing bands are capped are
@@ -1148,7 +1124,7 @@ def phash_band_stats(
     df 4-7 → 4, …): ``n_buckets`` buckets in that occupancy class holding
     ``n_rows`` rows, and ``n_cand_pairs`` = Σ df·(df−1)/2 — the EXACT
     candidate-pair volume the phash_near_dups self-join would emit from
-    those buckets. This is the operator you run BEFORE a 100 TB phash
+    those buckets. This is the operator you run BEFORE a large phash
     dedup: candidate volume grows quadratically with bucket occupancy, so
     the histogram both picks ``max_band_df`` (cap where n_cand_pairs
     explodes) and exposes constant-phash degeneracy (a huge df_bucket
@@ -1223,7 +1199,7 @@ def line_dedup(
     ``(id, n_lines, n_dup_lines, clean_text)`` — clean_text is the
     surviving lines re-joined with ``sep``.
 
-    100 TB shape: lines are keyed by a 128-bit md5, and ONE
+    Plan shape: lines are keyed by a 128-bit md5, and ONE
     ``repartition(line_hash)`` Exchange feeds both the document-frequency
     aggregation and the anti-join back onto the lines (ReuseExchange) —
     the document text itself is shuffled once as (doc, pos, line) rows,
@@ -1303,7 +1279,7 @@ def bloom_build(
 ) -> DataFrame:
     """Build a Bloom filter over a corpus's content hashes as a DataFrame
     of DISTINCT set bit positions — ``(bit)``, at most ``m_bits`` rows
-    regardless of corpus size (the 100 TB property: the filter's size is
+    regardless of corpus size (the filter's size is
     fixed by m, the build is a partially-aggregated distinct, and the
     result broadcasts — m=2^17 is at most 1 MB of longs).
     """
@@ -1333,7 +1309,7 @@ def bloom_dedup_flags(
     bloom_hit iff ALL k bit positions are set in prev's filter; exact_dup
     iff the md5 itself occurs in prev. Bloom filters have NO false
     negatives, so exact_dup => bloom_hit and the exact verification runs
-    ONLY on bloom-hit survivors — at 100 TB the broadcast filter prunes
+    ONLY on bloom-hit survivors — the broadcast filter prunes
     the new crawl down to the (tiny) probable-duplicate set before any
     shuffle join touches prev's full hash set. bloom_hit AND NOT exact_dup
     rows are the filter's false positives (rate ~ (1 - e^(-kn/m))^k).
@@ -1395,7 +1371,7 @@ def semantic_dedup(
 
     Returns ``(id, cid, n_dups, removed)`` for every valid input vector.
 
-    100 TB shape: training + assignment reuse ann.kmeans_centroids'
+    Plan shape: training + assignment reuse ann.kmeans_centroids'
     vector-kernel argmin (no shuffle; the codebook-size bound caps k*dim);
     the pairwise step is confined WITHIN clusters — one repartition(cid)
     Exchange feeds both sides of the self-join (ReuseExchange), so cost
@@ -1543,7 +1519,7 @@ def best_per_group(
     token counts, a model score). Scores cast to bigint for engine-exact
     comparison. Output: (group_col, best_id, best_score, n_members).
 
-    100 TB shape: one inner join on id between two id-keyed frames far
+    Plan shape: one inner join on id between two id-keyed frames far
     narrower than the corpus, then ONE ``repartition(group)`` Exchange
     that ReuseExchange shares across all three consumers — the per-group
     max/count aggregate and both sides of the argmax join-back are
@@ -1604,7 +1580,7 @@ def prefix_filter_jaccard_pairs(
     given (use shingles when the corpus vocabulary is small — raw token
     sets of unrelated documents converge once every word has been seen).
 
-    100 TB shape: explode → two partial-agg groupBys (df table, per-doc
+    Plan shape: explode → two partial-agg groupBys (df table, per-doc
     sorted arrays) → prefix explode (a t-fraction of each doc) → equi-join
     on prefix token → distinct pairs → two array joins + an
     expression-side array_intersect verify. The base (doc, tokens) frame
@@ -1741,7 +1717,7 @@ def phash_near_dups_against(
     the cost scales with |batch| · (index bucket occupancy), never with
     |index|². Output: (batch_id, index_id, hamming ≤ max_hamming).
 
-    100 TB shape: the index side's banded form is exactly what a real
+    Plan shape: the index side's banded form is exactly what a real
     deployment persists between runs (bucketed by (band, key)); the daily
     batch streams through it as a plain equi-join.
     """
@@ -1821,7 +1797,7 @@ def semantic_decontaminate(
     max() over per-pair doubles is order-independent, so the result is
     as engine-exact as the pairwise cosine itself.
 
-    100 TB shape: eval sets are SMALL, so the eval side collects ONCE into
+    Plan shape: eval sets are SMALL, so the eval side collects ONCE into
     the vector kernel (``ann`` module docstring) and the corpus streams
     through one Arrow scan per eval block, bit-identical to the
     ``ann.dot``/``ann.norm`` fold; duplicate and NULL corpus ids merge per
@@ -1894,7 +1870,7 @@ def dup_spans(
     (docs shorter than k characters have none and are omitted);
     dup_frac_e6 is an exact integer ``(n_dup·1e6) div n_pos``.
 
-    100 TB shape: the gram-hash ARRAY is built in one let-bound
+    Plan shape: the gram-hash ARRAY is built in one let-bound
     projection (explode_outer + IS-NOT-NULL, the rule-safe explode), so
     only (doc, hash) longs ever shuffle — never text. One
     ``repartition(hash)`` Exchange is shared (ReuseExchange) by the
@@ -1970,7 +1946,7 @@ def cross_group_dup_matrix(
     group pair. Output (group_a, group_b, n_pairs) with group_a <=
     group_b lexicographically; the diagonal counts within-group dups.
 
-    100 TB shape: rides minhash_lsh_pairs unchanged (its plan notes
+    Plan shape: rides minhash_lsh_pairs unchanged (its plan notes
     apply); pairs carry bare ids, the group lookup joins a 2-column
     (id, group) projection twice, and the matrix is a |groups|²-bounded
     partial-agg groupBy — text never enters any of it.

@@ -34,6 +34,7 @@ from typing import Iterator, Optional
 import numpy as np
 
 from . import codecs
+from .pyworker import settle
 
 CAPTION_VOCAB = (
     "the a red green blue small large cat dog tree house sky boat river "
@@ -177,6 +178,7 @@ def synth_images(spark, n_rows: int, n_partitions: int = 8, seed: int = 42):
     base = spark.range(0, n_rows, 1, n_partitions)
 
     def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        settle()
         for pdf in batches:
             rows = [make_row(seed, int(i)) for i in pdf["id"]]
             yield pd.DataFrame(rows)
@@ -386,6 +388,7 @@ def _synth(
     import pandas as pd
 
     def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        settle()
         for pdf in batches:
             ids = [int(i) for i in pdf["id"]]
             yield pd.DataFrame(

@@ -2,8 +2,7 @@
 token counting, document fingerprinting.
 
 All expression-side (built-in pyspark.sql.functions) — these run inside
-whole-stage codegen with zero Python in the hot path, so they scan at
-parquet-read speed at 100 TB.
+whole-stage codegen with zero Python in the hot path.
 """
 
 from __future__ import annotations
@@ -17,6 +16,7 @@ from pyspark.sql import functions as F
 from .. import spill
 from ..compiler import bind
 from ..dedup import _spread, md5_low32, tokens, word_shingles
+from ..pyworker import settle
 
 # tiny per-language stopword marker sets for the n-gram/stopword heuristic
 LANG_MARKERS: dict[str, list[str]] = {
@@ -238,7 +238,7 @@ def token_stats(
     tf = total occurrences, doc_freq = documents containing the token,
     vocab_rank = position by (tf DESC, token ASC) — fully deterministic.
 
-    100 TB shape: explode → partially-aggregated groupBy(token) carrying
+    Plan shape: explode → partially-aggregated groupBy(token) carrying
     count + count(DISTINCT doc) (the distinct shuffles (token, doc) pairs,
     bounded by corpus token volume). The ranking window is GLOBAL (one
     partition) but runs over the VOCABULARY, not the corpus — filter with
@@ -290,7 +290,7 @@ def bm25_scores(
     is deterministic and engine-portable (absent terms add literal 0.0 —
     IEEE-exact no-op); quantize downstream when comparing across engines.
 
-    100 TB shape — one tokenization per job, zero joins:
+    Plan shape — one tokenization per job, zero joins:
 
     - ONE wide groupBy(id) computes the document length AND every per-term
       tf as conditional-count columns in the same pass; partial
@@ -409,7 +409,7 @@ def dsir_weights(
     expression, so the double result is deterministic and engine-portable
     (the gate oracle replays it with DuckDB's ``list(... ORDER BY b)``).
 
-    100 TB shape — two jobs (model, then score — the bm25-stats /
+    Plan shape — two jobs (model, then score — the bm25-stats /
     IVF-codebook discipline), each tokenizing once; nothing wide ever
     shuffles:
 
@@ -531,7 +531,7 @@ def pii_scrub(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     earlier class is invisible to later ones — the standard scrub
     semantics; the patterns are disjoint on well-formed text).
 
-    100 TB shape: one projection of JVM ``regexp_count`` /
+    Plan shape: one projection of JVM ``regexp_count`` /
     ``regexp_replace`` expressions — whole-stage codegen, zero Python,
     zero shuffle; scans at parquet-read speed and pushes column pruning
     down to (id, text).
@@ -569,7 +569,7 @@ def remove_common_lines(
 
     Output ``(id, clean_text, n_lines, n_removed)``.
 
-    100 TB shape: document text never shuffles. The counting pass ships
+    Plan shape: document text never shuffles. The counting pass ships
     only DISTINCT (doc, md5(line)) pairs (partial-aggregated groupBy);
     the bounded common set returns to every executor as ONE broadcast
     array, and cleaning is a per-row expression (filter + array_join)
@@ -628,7 +628,7 @@ def vocab_oov(
     Output ``(id, n_tokens, n_oov, oov_rate_e6)`` — rate floor-quantized
     to 1e-6 (NULL for token-less docs); empty tokens are ignored.
 
-    100 TB shape: the exploded token stream is repartitioned ONCE on the
+    Plan shape: the exploded token stream is repartitioned ONCE on the
     token so ReuseExchange shares a single scan+explode between the
     vocab-count branch and the scoring branch (both consume it: the
     groupBy pre-partitions, the probe reads the same exchange). The vocab
@@ -770,6 +770,7 @@ def _unicode_normalize_udf(form: str):
 
         @pandas_udf("string")
         def _norm(col: pd.Series) -> pd.Series:
+            settle()
             return col.str.normalize(form)
 
         _NORM_UDF_CACHE[form] = _norm
@@ -795,7 +796,7 @@ def normalize_text(
     utf8proc `nfc_normalize` — a genuinely independent second
     implementation, not a replay of ours.
 
-    100 TB shape: one narrow (id, text) projection through a single Arrow
+    Plan shape: one narrow (id, text) projection through a single Arrow
     exchange, zero shuffle; downstream dedup hashes norm_text instead of
     text with no other change.
     """
@@ -825,7 +826,7 @@ def pair_stats(
     deterministic, so the greedy merge choice is reproducible across
     engines and cluster sizes.
 
-    100 TB shape: same as token_stats — the pair array builds inside the
+    Plan shape: same as token_stats — the pair array builds inside the
     generator from ONE let-bound tokenization (HOF bodies re-evaluate per
     element otherwise), explode → partial-agg groupBy(pair). The ranking
     window is global but runs over the PAIR VOCABULARY after the
@@ -886,7 +887,7 @@ def domain_filter(
     each document's registered domain and mark it blocked when the domain
     appears in ``blocklist`` (a 1-column DataFrame of domains).
 
-    Output (id, host, domain, blocked). 100 TB shape: domain extraction is
+    Output (id, host, domain, blocked). Plan shape: domain extraction is
     a pure codegen projection; the membership test is a BROADCAST left
     join on the extracted domain (blocklists are thousands-to-millions of
     rows — driver-size, never a shuffle of the corpus). The corpus text/
@@ -935,7 +936,7 @@ def strip_html(col: Column) -> Column:
 
     Regex-only (RE2/Java-portable — no backtracking constructs), so it
     runs as a chain of codegen regexp_replace ops: zero Python, zero
-    shuffle, scan-speed at 100 TB. A parser it is not (malformed nesting
+    shuffle. A parser it is not (malformed nesting
     degrades gracefully to over-stripping); for DOM-accurate extraction
     plug a real parser into the mapInPandas escape hatch instead.
     """
@@ -961,10 +962,10 @@ def corpus_report(
     ratios quantized e6; means are floor(1e4 · tokens/docs) — single IEEE
     divides, engine-portable.
 
-    100 TB shape: ONE corpus scan into a partially-aggregated groupBy on
+    Plan shape: ONE corpus scan into a partially-aggregated groupBy on
     the group key; the share windows run over the GROUP table (sources ×
     languages — dozens of rows), never the corpus, so the unpartitioned
-    window is a no-op at scale.
+    window is cheap.
     """
     from pyspark.sql import Window
 
@@ -1014,7 +1015,7 @@ def collocations(
                      · tot_toks / tf_r)
     — the exact op order both engines replay.
 
-    100 TB shape: ONE tokenization feeding both the unigram and the pair
+    Plan shape: ONE tokenization feeding both the unigram and the pair
     aggregates would need a cached intermediate; instead each aggregate
     tokenizes its own scan (two scans, zero caching risk) and the two
     corpus totals collect as a 1-row broadcast (the repo's codebook
@@ -1085,7 +1086,7 @@ def token_entropy(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     (id, n_tokens, n_types, entropy_e4, ttr_e6) — ttr in exact bigint
     floor division.
 
-    100 TB shape: explode → partial-agg groupBy((doc, token)) → per-doc
+    Plan shape: explode → partial-agg groupBy((doc, token)) → per-doc
     sort_array + fold (vocab-per-doc sized lists, bounded by doc length);
     two exchanges, both partial-aggregated, no window, no Python.
     """
@@ -1184,7 +1185,7 @@ def linear_scores(
     thresholding the probability, without dragging libm ``exp`` into a
     cross-engine compare. Zero-token docs keep iff bias_e6 > 0.
 
-    100 TB shape: ONE projection — the weight vector rides as a plan
+    Plan shape: ONE projection — the weight vector rides as a plan
     literal (the DSIR/IVF-codebook discipline, same ≤ 4096 guard) and the
     per-token fold is an integer ``aggregate`` over a let-``bind``-once
     tokenization; zero joins, zero shuffles, zero Python. The fold tree
@@ -1241,7 +1242,7 @@ def tfidf_top_terms(
     Output: (id, term, tf, df, score_e6, rank), rank 1..k per doc, ties
     broken by (score desc, term asc).
 
-    100 TB shape: tokenize once into a partial-aggregated (doc, term) tf
+    Plan shape: tokenize once into a partial-aggregated (doc, term) tf
     groupBy (only compact pairs shuffle); doc frequency is a second
     partial aggregate OVER the tf frame; N collects once as a 1-row
     broadcast; the per-doc top-k is a window whose rank ≤ k filter
@@ -1308,7 +1309,7 @@ def lm_score(
     on data, cf. collocations/tfidf). Docs with fewer than two tokens emit
     nothing.
 
-    100 TB shape: ONE let-bound tokenization + explode; a partial-agg
+    Plan shape: ONE let-bound tokenization + explode; a partial-agg
     groupBy(doc, left, right) collapses positions; the bigram table
     (vocab²-bounded) and its prefix re-aggregate derive from THAT frame —
     corpus text never re-tokenizes and the scoring joins carry
@@ -1380,7 +1381,7 @@ def zipf_fit(
     −1_000_000 for Zipfian text, NULL when the pruned vocabulary is
     degenerate (all terms in one rank octave ⇒ var = 0).
 
-    100 TB shape: explode → ONE partial-agg groupBy((group, token)) —
+    Plan shape: explode → ONE partial-agg groupBy((group, token)) —
     map-side combine crushes the shuffle to vocabulary size; the min_tf
     prune (default 2) drops the hapax mass; the rank window and the OLS
     aggregate run over the pruned VOCABULARY frame only — the corpus never

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import codecs
+from .pyworker import settle
 
 
 def _map_payloads(
@@ -71,6 +72,7 @@ def _map_payloads(
     types = [to_arrow_type(f.dataType) for f in schema.fields[1:]]
 
     def run(batches):
+        settle()
         for batch in batches:
             payloads, *extras = (c.to_pylist() for c in batch.columns[1:])
             take, out = [], []
@@ -251,7 +253,7 @@ def scene_cuts(
     Output: (clip, frame_idx, mean_i, delta, is_cut) with mean/delta as
     exact bigints when the upstream means are integral.
 
-    100 TB shape: one window partitioned BY CLIP (state bounded by frames
+    Plan shape: one window partitioned BY CLIP (state bounded by frames
     per clip, thousands at most — no global sort, no skew beyond the
     longest clip), on top of the decode stage's single Arrow exchange.
     """
@@ -285,7 +287,7 @@ def audio_quality_verdicts(
     Output: (clip_id, dur_e6, rms_e6, peak_e6, verdict) — features
     quantized e6; undecodable rows carry NULLs.
 
-    100 TB shape: pure projection over the decode stage's single Arrow
+    Plan shape: pure projection over the decode stage's single Arrow
     exchange — zero shuffle, whole-stage codegen.
     """
     dur = F.col("duration_sec")
@@ -486,7 +488,7 @@ def caption_alignment(
 
     Output: (id, n_tokens, align_e4) — align_e4 NULL when the caption is
     NULL/empty (zero caption vector has no direction); undecodable images
-    emit nothing. 100 TB shape: decode exchange + one equi-join on id
+    emit nothing. Plan shape: decode exchange + one equi-join on id
     whose both sides are (id, dim·8B) narrow; the hashed caption embed is
     O(dim · n_tokens) expression work per row with the token-hash array
     let-bound once.
@@ -542,7 +544,7 @@ def image_dhash(
 
     The bit assembly is a pure codegen projection over embed_images'
     pooled-cell array, and the hash feeds phash_near_dups(bits=grid·
-    (grid−1)) unchanged for banded hamming near-dup at scale.
+    (grid−1)) unchanged for banded hamming near-dup.
     """
     if grid < 2:
         raise ValueError(f"grid must be >= 2 for horizontal gradients, got {grid}")

@@ -140,9 +140,5 @@ def _normalize_value(key: str, val: Any) -> Any:
     return val
 
 
-def is_empty(schema: Schema) -> bool:
-    return schema is False
-
-
 def is_universal(schema: Schema) -> bool:
     return schema is True or (isinstance(schema, dict) and not (set(schema) & KEYWORDS - {"nullable", "optional"}))

@@ -24,6 +24,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .pyworker import settle
 from .runner import PARTITION_COL, RuleSet, _annotate, _result_from_annotated
 from .spec import Schema
 
@@ -78,6 +79,7 @@ def stateful_verdicts(
 
     def update(key, pdf_iter, state: GroupState):
         # (the trailing yield makes this a generator on every path)
+        settle()
         if state.hasTimedOut:
             state.remove()
             return
@@ -254,7 +256,7 @@ def stream_interval_join(
     caller projects; key/ts columns keep their names, so rename upstream
     on collision).
 
-    100 TB shape: the join keys on (key, time-bucket) internally —
+    Plan shape: the join keys on (key, time-bucket) internally —
     ordinary shuffle partitioning by key, per-key state in the state
     store; no broadcast, no cross product. The ``within`` horizon is the
     state-size knob — attribution windows of minutes-to-hours keep state

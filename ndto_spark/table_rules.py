@@ -6,7 +6,7 @@ approx-distinct with treewise merge, key-uniqueness, referential-integrity
 anti-joins, and distribution-drift (KS + PSI) checks. All built from Spark
 built-ins — no Python in the hot path.
 
-Scale notes (100 TB design point):
+Plan shapes:
 - ``column_stats`` is ONE full scan with partial (map-side) aggregation; the
   reduced state is a single row per column. No shuffle of row data.
 - ``uniqueness`` relies on hash-aggregate partial combine, which already
@@ -66,7 +66,7 @@ def column_quantiles(
     """Per-column quantiles: (column_name, q, value).
 
     Default is ``approx_percentile`` (t-digest-style sketch, one scan,
-    constant state per column — the 10^12-row path). ``exact=True`` uses
+    constant state per column). ``exact=True`` uses
     ``percentile`` (linear interpolation over a full sort — the small-scale
     correctness oracle; DuckDB's quantile_cont matches it exactly).
     """
@@ -163,7 +163,7 @@ def drift_metrics(
     """KS statistic + PSI between two distributions of ``col``.
 
     Both are computed from binned histograms (documented approximation for
-    KS — exact KS needs a global sort, untenable at 10^12 rows; binned ECDF
+    KS — exact KS needs a global sort; binned ECDF
     gives KS up to one bin width). Each input reduces to ``nbins`` rows
     before the cross-side math, so the comparison cost is independent of
     table size. Returns (metric string, value double) with metrics
@@ -662,7 +662,7 @@ def mad_outliers(
     MAD (median absolute deviation) is the robust scale estimate; 1.4826
     makes it consistent with σ under normality. ``exact=True`` uses
     ``percentile`` (matches DuckDB quantile_cont bit-for-bit — the oracle
-    twin); the 10^12-row path uses ``approx_percentile`` sketches.
+    twin); the default uses ``approx_percentile`` sketches.
 
     Plan shape: median and MAD are 1-row aggregates broadcast-cross-joined
     back (no driver collect); inherently two dependent scans (MAD needs the
@@ -718,7 +718,7 @@ def group_quantiles(
 
     Scale: ONE partial-aggregated groupBy — the only shuffle; hot groups
     cost sort-of-group-size on one reducer in exact mode (another reason
-    the sketch is the 100 TB default).
+    the sketch is the default).
     """
     arr = F.array(*[F.lit(float(q)) for q in qs])
     c = F.col(col).cast("double")
@@ -813,7 +813,7 @@ def profile_table(
     row data. ``exact_distinct=True`` (the oracle twin) compiles to
     Spark's multi-distinct Expand, which replicates the scan output
     once per profiled column — fine for profiling runs; set
-    ``exact_distinct=False`` for the 100 TB path (HLL sketch per column,
+    ``exact_distinct=False`` for large inputs (HLL sketch per column,
     no Expand, constant state; estimates are not oracle-replayable).
     """
     fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
@@ -909,8 +909,8 @@ def snapshot_diff(
 ) -> DataFrame:
     """Snapshot reconciliation — the CDC / ingest-regression diff between
     two versions of a table: one row per key that was ``added``,
-    ``removed``, or ``changed`` (unchanged keys emit NOTHING — at 100 TB
-    the delta is the output, never the corpus).
+    ``removed``, or ``changed`` (unchanged keys emit NOTHING — the delta
+    is the output, never the corpus).
 
     Change detection compares an md5 row fingerprint over ``compare_cols``
     (NULL-safe: values are \\x01-joined with a \\x00 sentinel for NULL, so
@@ -954,7 +954,7 @@ def k_anonymity(df: DataFrame, quasi_cols: list, k: int) -> DataFrame:
     are re-identifiable; k=1 groups are unique individuals). Returns the
     at-risk combos with their group sizes: (*quasi_cols, n_rows).
 
-    100 TB shape: one partially-aggregated groupBy on the quasi columns —
+    Plan shape: one partially-aggregated groupBy on the quasi columns —
     map-side combine shrinks the shuffle to one row per combo per task;
     the < k filter prunes the (usually dominant) anonymous mass before
     anything is collected. Output is the risk surface, not the corpus.
@@ -979,7 +979,7 @@ def fd_violations(df: DataFrame, lhs_cols: list, rhs_col: str) -> DataFrame:
     sentinel-free count: countDistinct ignores NULLs, so a NULL-vs-value
     split is surfaced by n_nulls.
 
-    100 TB shape: one groupBy with partial aggregation; the > 1 filter
+    Plan shape: one groupBy with partial aggregation; the > 1 filter
     emits only the violating keys.
     """
     if not lhs_cols:
@@ -1013,7 +1013,7 @@ def monotonicity_violations(
     whose ``value_col`` falls below its predecessor (``strict=True`` also
     flags equality). Output (key, value, prev_value).
 
-    100 TB shape: one hash Exchange on the key + per-key sort window (the
+    Plan shape: one hash Exchange on the key + per-key sort window (the
     standard sessionize plan); violations only — the monotone mass emits
     nothing.
     """
@@ -1047,7 +1047,7 @@ def join_skew_report(
     count 0 (full outer over the two count tables — anti-joined keys show
     up with fanout 0 only if min_fanout <= 0, by default they drop).
 
-    100 TB shape: two partially-aggregated groupBys (one per side — the
+    Plan shape: two partially-aggregated groupBys (one per side — the
     shuffle carries one row per key per task), a full outer join of the
     COUNT tables (|distinct keys|, not |rows|), and a threshold filter —
     no global sort, no top-k state. The report is the skew tail, never
@@ -1085,7 +1085,7 @@ def completeness_report(
     with fill_e6 = floor(n_nonnull * 1e6 / n_rows) in exact BIGINT
     arithmetic (engine-portable: no float division).
 
-    100 TB shape: ONE partial-aggregated pass over the table however many
+    Plan shape: ONE partial-aggregated pass over the table however many
     columns (a single wide agg), then a width-|cols| explode of a 1-row
     frame — no shuffle beyond the scalar aggregate.
     """
@@ -1133,7 +1133,7 @@ def freshness_report(
     lag_seconds = epoch(global max) - epoch(group max) in exact integer
     seconds.
 
-    100 TB shape: one partial-aggregated groupBy (|groups| rows) plus a
+    Plan shape: one partial-aggregated groupBy (|groups| rows) plus a
     broadcast of the 1-row global max — the repo's existing 1-row
     crossJoin pattern; nothing else shuffles.
     """
@@ -1176,11 +1176,11 @@ def robust_outlier_report(
     0.5-quantile interpolation agrees bit-exactly on them, so the report
     carries median/MAD DOUBLED as exact bigints (median_x2, mad_x2).
 
-    100 TB shape: exact medians are inherently rank queries — this is
+    Plan shape: exact medians are inherently rank queries — this is
     three column-pruned passes (group median → deviation median → outlier
     count), each a partial-aggregated groupBy plus a broadcast join of the
     |groups|-row stats back onto the scan. For one-pass approximate
-    monitoring at scale, feed column_quantiles' sketch path instead; this
+    monitoring, feed column_quantiles' sketch path instead; this
     operator is the exact gate the sketch is judged against.
     """
     gc = list(group_cols)
@@ -1232,7 +1232,7 @@ def l_diversity(
     shares one sensitive value. Emits groups whose DISTINCT sensitive
     count is below ``l``: (quasi..., n_rows, n_sensitive).
 
-    100 TB shape: one partial-aggregated groupBy carrying count +
+    Plan shape: one partial-aggregated groupBy carrying count +
     count(DISTINCT sensitive) (the distinct shuffles (quasi, sensitive)
     pairs, bounded by the distinct-pair volume); the < l filter prunes the
     diverse mass so only the risk surface survives.
@@ -1265,7 +1265,7 @@ def benford_report(
 
     Output: (digit, n_rows, share_e6, expected_e6, deviates).
 
-    100 TB shape: one partial-agg groupBy over NINE groups + a broadcast
+    Plan shape: one partial-agg groupBy over NINE groups + a broadcast
     1-row total — nothing else moves.
     """
     d = F.substring(
@@ -1319,7 +1319,7 @@ def rollup_stats(
     away) so consumers — and the gate's hash compare — can tell a rolled-
     up NULL from a genuine NULL dim value.
 
-    100 TB shape: Spark expands rollup into a single Expand + one
+    Plan shape: Spark expands rollup into a single Expand + one
     partially-aggregated hash aggregate — one corpus scan, map-side
     combine at every level; output is |level-combo| rows, data-size
     independent. Pass pre-quantized integer expressions in ``sum_cols``
@@ -1335,6 +1335,20 @@ def rollup_stats(
         F.grouping(d).cast("bigint").alias(f"{d}_agg") for d in dims
     )
     return df.rollup(*dims).agg(*aggs)
+
+
+def _bucket_counts(
+    df: DataFrame, ts_col: str, gc: "list[str]", granularity_seconds: int
+) -> DataFrame:
+    """(group…, bucket, n_rows): the row count per group and time bucket,
+    ``bucket = floor(unix_timestamp(ts_col) / granularity_seconds)``, in
+    one partially aggregated groupBy."""
+    bucket = F.floor(
+        F.unix_timestamp(F.col(ts_col)) / F.lit(granularity_seconds)
+    ).cast("bigint")
+    return df.groupBy(*gc, bucket.alias("bucket")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_rows")
+    )
 
 
 def rolling_count_spikes(
@@ -1361,18 +1375,13 @@ def rolling_count_spikes(
 
     Output: (group…, bucket, n_rows, base_n, base_sum, spike).
 
-    100 TB shape: one partial-agg groupBy collapses the corpus to
+    Plan shape: one partial-agg groupBy collapses the corpus to
     (group, bucket) counts — |groups|·|buckets| rows, time-bounded — and
     the rolling window runs per group over THAT tiny frame; the corpus
     itself never sorts.
     """
     gc = [group_cols] if isinstance(group_cols, str) else list(group_cols)
-    bucket = F.floor(
-        F.unix_timestamp(F.col(ts_col)) / F.lit(granularity_seconds)
-    ).cast("bigint")
-    counts = df.groupBy(*gc, bucket.alias("bucket")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_rows")
-    )
+    counts = _bucket_counts(df, ts_col, gc, granularity_seconds)
     from pyspark.sql import Window
 
     w = (
@@ -1417,7 +1426,7 @@ def winsorize(
     that DuckDB's quantile_cont reproduces). Output: keys…, v, clamped
     (double — percentile thresholds interpolate), clipped_lo, clipped_hi.
 
-    100 TB shape: one partial-aggregated percentile pass reduced to a
+    Plan shape: one partial-aggregated percentile pass reduced to a
     1-row broadcast, then a pure clamp projection — two scans, no
     shuffle of row data, no window.
     """
@@ -1462,7 +1471,7 @@ def ewma_monitor(
     it with a recursive CTE. ewma ships e6-floor-quantized; the spike
     compare is on exact integers.
 
-    100 TB shape: the corpus collapses to (group, bucket) counts in one
+    Plan shape: the corpus collapses to (group, bucket) counts in one
     partial-agg groupBy; the sequential fold runs per group over that
     TINY time-bounded frame inside one expression (collect_list +
     aggregate — O(buckets²) array building per group, buckets being
@@ -1474,12 +1483,7 @@ def ewma_monitor(
             f"alpha must be dyadic in (0,1): got {alpha_num}/{alpha_den}"
         )
     alpha = float(alpha_num) / float(alpha_den)
-    bucket = F.floor(
-        F.unix_timestamp(F.col(ts_col)) / F.lit(granularity_seconds)
-    ).cast("bigint")
-    counts = df.groupBy(*gc, bucket.alias("bucket")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_rows")
-    )
+    counts = _bucket_counts(df, ts_col, gc, granularity_seconds)
     per_group = counts.groupBy(*gc).agg(
         F.array_sort(
             F.collect_list(F.struct("bucket", "n_rows"))
@@ -1559,23 +1563,18 @@ def group_trend(
     group has a single bucket (den = 0). Output: group…, n_buckets,
     total_rows, num, den, slope_e6.
 
-    100 TB shape: one partial-agg groupBy collapses the corpus to
+    Plan shape: one partial-agg groupBy collapses the corpus to
     (group, bucket) counts; the re-base min and the five sums are a
     second partial-agg pass over that TINY frame. The corpus never
     sorts, nothing windows over row data.
     """
     gc = [group_cols] if isinstance(group_cols, str) else list(group_cols)
-    bucket = F.floor(
-        F.unix_timestamp(F.col(ts_col)) / F.lit(granularity_seconds)
-    ).cast("bigint")
-    counts = df.groupBy(*gc, bucket.alias("bucket")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("y")
-    )
+    counts = _bucket_counts(df, ts_col, gc, granularity_seconds)
     from pyspark.sql.window import Window
 
     minb = F.min("bucket").over(Window.partitionBy(*gc))
     xy = counts.select(
-        *gc, (F.col("bucket") - minb).alias("x"), "y"
+        *gc, (F.col("bucket") - minb).alias("x"), F.col("n_rows").alias("y")
     )
     a = xy.groupBy(*gc).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_buckets"),
@@ -1614,7 +1613,7 @@ def distinctness_profile(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     operands are counts). Output: (column, n_nonnull, n_distinct,
     n_unique, distinctness_e6, unique_ratio_e6, uniqueness_e6).
 
-    100 TB shape: one partial-agg value-count groupBy per column (the
+    Plan shape: one partial-agg value-count groupBy per column (the
     same shape as ``uniqueness`` above — hash partial combine
     neutralizes hot values), each reduced to one row before the union.
     """
@@ -1674,7 +1673,7 @@ def gini_concentration(
     cannot matter. ``G = (2·Σ rank·x − (n+1)·Σx) / (n·Σx)``, e6-floored
     (numerator ≥ 0). Output one row: n_keys, total_rows, gini_e6.
 
-    100 TB shape: the corpus collapses to per-key counts in one
+    Plan shape: the corpus collapses to per-key counts in one
     partial-agg groupBy, then to the (v, f_v) frame — bounded by the
     number of DISTINCT COUNT VALUES, thousands at most — and only that
     tiny frame flows through the single-partition cumulative window.
